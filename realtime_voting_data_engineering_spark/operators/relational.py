@@ -411,7 +411,8 @@ def asof_self_join(
     # ``withColumn("__side", ...)``). ``attach`` aliases get the same
     # treatment: an alias equal to a reserved name duplicates the
     # struct field, and one equal to a source column duplicates an
-    # output name. Refuse all of it loudly at plan time.
+    # output name; two aliases equal up to case (``{'Id', 'id'}``)
+    # duplicate each other. Refuse all of it loudly at plan time.
     reserved = {"__side", "__rn", "__attach", "__asof_time"}
     lower_cols = {c.lower() for c in source.columns}
     clash = sorted(reserved & lower_cols)
@@ -420,14 +421,19 @@ def asof_self_join(
             "asof_self_join: source frame already contains reserved "
             f"column(s) {clash} — rename them before calling"
         )
+    lower_aliases = [a.lower() for a in attach]
     bad_aliases = sorted(
-        a for a in attach if a.lower() in reserved or a.lower() in lower_cols
+        a
+        for a in attach
+        if a.lower() in reserved
+        or a.lower() in lower_cols
+        or lower_aliases.count(a.lower()) > 1
     )
     if bad_aliases:
         raise ValueError(
             "asof_self_join: attach alias(es) "
-            f"{bad_aliases} collide with a reserved name or a source "
-            "column — pick different output names"
+            f"{bad_aliases} collide with a reserved name, a source "
+            "column or another alias — pick different output names"
         )
     side = F.when(right_pred, F.lit(0)).when(left_pred, F.lit(1))
     # Explicit disjunctive pre-filter: the when-chain's side column is

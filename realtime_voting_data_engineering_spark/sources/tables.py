@@ -1,20 +1,29 @@
-"""Batch table source: partitioned parquet, schema-on-read.
+"""Batch table source: partitioned parquet, schema from the footer.
 
 Replaces the reference's Postgres DDL + fetch-all scans
 (main.py:33-79, main.py:256-257, voting.py:41-45) with columnar parquet
 scans that Catalyst can push filters and projections into. At 100 TB the
 same call reads a partitioned/table-format dataset; nothing here collects
 to the driver.
+
+``load_table`` hands Spark the table's schema instead of letting
+``spark.read.parquet`` infer it: inference launches a one-task Spark job
+per load just to read one parquet footer, before the query is even
+built. Here the driver reads that same footer itself (a few ms) and
+converts it with Spark's own footer-to-schema function, so the types
+are exactly the inferred ones and a load starts no Spark job.
 """
 
 from __future__ import annotations
 
+import json
 import os
 import sys
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 #: Driver-generated corpus tables (TESTDATA.md).
 TABLE_NAMES = (
@@ -68,11 +77,58 @@ def ensure_session_confs(spark: SparkSession) -> None:
     spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
 
 
+def footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema ``spark.read.parquet(path)`` would infer, read on the
+    driver without a Spark job. Mirrors Spark's default (non-merging)
+    inference: a file is its own footer; a directory contributes its
+    first data part in sorted name order, skipping hidden ``_``/``.``
+    entries (``_SUCCESS``, ``.crc`` checksums) and descending into
+    partition directories (``lang=en/``). Like inference it assumes
+    every part shares that schema. The footer goes through Spark's
+    ``ParquetFileFormat.readSchemaFromFooter`` with a converter built
+    on the session's SQL conf, so types match inference exactly (a
+    Spark-written schema in the footer's metadata wins; TIMESTAMP(NANOS)
+    follows ``nanosAsLong``). A missing path, an empty directory or an
+    unreadable footer raises here."""
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    conf = state.newHadoopConf()
+    Path = jvm.org.apache.hadoop.fs.Path
+    jpath = Path(path)
+    fs = jpath.getFileSystem(conf)
+    status = fs.getFileStatus(jpath)
+    while status.isDirectory():
+        # globStatus returns its matches sorted by path.
+        parts = fs.globStatus(Path(status.getPath(), "[^_.]*"))
+        if not parts:
+            raise FileNotFoundError(f"no parquet data file under {path}")
+        status = parts[0]
+    footer = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+        conf,
+        status,
+        jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+    )
+    pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+    schema = pq.ParquetFileFormat.readSchemaFromFooter(
+        jvm.org.apache.parquet.hadoop.Footer(status.getPath(), footer),
+        pq.ParquetToSparkSchemaConverter(state.conf()),
+    )
+    return StructType.fromJson(json.loads(schema.json()))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one corpus table. Plain parquet scan — predicate pushdown and
-    column pruning happen automatically when callers filter/select."""
+    column pruning happen automatically when callers filter/select.
+
+    The schema comes from the table's parquet footer (``footer_schema``),
+    so building the DataFrame starts no Spark job — ``spark.read.parquet``
+    alone would run a schema-inference job on every call. The footer is
+    read again on every load rather than cached: the audit tools rewrite
+    corpora in place, a cached schema would go stale with them, and one
+    footer read costs a few ms on the driver."""
     ensure_session_confs(spark)
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(footer_schema(spark, path)).parquet(path)
     for col in NANO_TS_COLUMNS.get(name, ()):
         dtype = dict(df.dtypes).get(col)
         if dtype == "bigint":

@@ -218,7 +218,7 @@ def start_update_aggregate(
 ) -> StreamingQuery:
     """W2/W3 (spark_stream.py:67-84): start an update-mode aggregate into
     a named in-memory sink with checkpointing. The Kafka twin is
-    ``sinks.kafka_sink`` — same upstream plan, different adapter (W4:
+    ``sources.kafka.write_stream`` — same upstream plan, different adapter (W4:
     multiple ``start()`` handles fan out one source).
 
     ``processing_time`` (e.g. ``'1 second'``) selects a periodic-refresh

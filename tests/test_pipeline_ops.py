@@ -793,7 +793,8 @@ def test_asof_self_join_guards_and_overlap_semantics(spark):
     # (1) reserved-name collision: loud plan-time refusal — including a
     # case-variant source column (Spark resolves case-insensitively by
     # default, so '__SIDE' would be silently replaced) and an attach
-    # alias that duplicates a reserved name or a source column.
+    # alias that duplicates a reserved name, a source column or another
+    # alias.
     with pytest.raises(ValueError, match="__asof_time"):
         R.asof_self_join(
             src.withColumn("__asof_time", F.lit(1)),
@@ -822,6 +823,16 @@ def test_asof_self_join_guards_and_overlap_semantics(spark):
                 right_pred=F.col("event_type") == "click",
                 attach={bad: F.col("event_id")},
             )
+    # Two aliases equal up to case duplicate each other's output name.
+    with pytest.raises(ValueError, match="attach alias"):
+        R.asof_self_join(
+            src,
+            on="user_id",
+            time_col="ts",
+            left_pred=F.col("event_type") == "purchase",
+            right_pred=F.col("event_type") == "click",
+            attach={"Id": F.col("event_id"), "id": F.col("ts")},
+        )
 
     # (2) overlap: event 2 satisfies both predicates -> treated as a
     # RIGHT row only. It must not appear as a left output row, and the

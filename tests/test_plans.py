@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import os
 
 from pyspark.sql import DataFrame
 
@@ -303,6 +304,54 @@ def test_q18_single_lineitem_scan(spark, sf_dir):
     final = plan.split("== Initial Plan ==")[0]
     assert final.count("lineitem.parquet") == 1, plan
     assert "TakeOrderedAndProject" in final
+
+
+def _single_exchange_violations(plan: str, forbid=()) -> list[str]:
+    """Shape check for the r16 keyed single-exchange rewrites, over a
+    formatted pre-execution plan: exactly one ``REPARTITION_BY_COL``
+    data exchange (the explicit key repartition every later operator
+    reuses) and none of the ``forbid`` operators. Returns the
+    violations, so the same check can be shown to reject the recorded
+    pre-rewrite plan."""
+    bad = []
+    n = plan.count("REPARTITION_BY_COL")
+    if n != 1:
+        bad.append(f"{n} REPARTITION_BY_COL exchanges")
+    bad += [f"{op} present" for op in forbid if op in plan]
+    return bad
+
+
+_Q21_FORBID = ("Expand", "SortMergeJoin")
+
+
+def test_q21_q2_single_exchange_shape(spark, sf_dir):
+    """The r16 rewrites hold their shape: q21's per-order supplier
+    counts ride ONE keyed exchange (no Expand from a multi-distinct
+    aggregate, no SortMergeJoin between two lineitem branches), and
+    q2's per-part minimum rides one keyed exchange too."""
+    for name, forbid in (
+        ("q21_sole_late_supplier", _Q21_FORBID),
+        ("q2_min_cost_supplier", ()),
+    ):
+        plan = _q(spark, sf_dir, name)
+        assert not _single_exchange_violations(plan, forbid), (name, plan)
+
+
+def test_q21_shape_check_rejects_pre_rewrite_plan():
+    """Detection power: the recorded pre-rewrite q21 plan (two lineitem
+    branches joined by SortMergeJoin over an Expand) fails every arm of
+    the q21 check."""
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "plans", "r16", "q21_sole_late_supplier_before.txt",
+    )
+    with open(path) as f:
+        before = f.read()
+    assert _single_exchange_violations(before, _Q21_FORBID) == [
+        "0 REPARTITION_BY_COL exchanges",
+        "Expand present",
+        "SortMergeJoin present",
+    ]
 
 
 def test_q17_q11_single_lineitem_scan(spark, sf_dir):

@@ -1,8 +1,11 @@
 """Source-layer behavior: catalog DDL + seed-once guard, JDBC gating,
-rate-source vote stream."""
+rate-source vote stream, footer-derived table schemas."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 import time
 import uuid
 
@@ -13,6 +16,7 @@ from pyspark.sql import types as T
 from realtime_voting_data_engineering_spark.sources import catalog as C
 from realtime_voting_data_engineering_spark.sources import jdbc as J
 from realtime_voting_data_engineering_spark.sources import rate as RT
+from realtime_voting_data_engineering_spark.sources import tables as TB
 
 
 @pytest.fixture()
@@ -117,3 +121,158 @@ def test_safe_arrow_conversion_is_pinned_and_loud(spark):
         assert [r.x for r in wrapped] == [7], "wrap class gone — update pin"
     finally:
         spark.conf.set(conf, "true")
+
+
+# --- load_table: footer-derived schema ---------------------------------------
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _in_group(spark, group: str, fn) -> None:
+    """Run ``fn`` with its Spark jobs tagged with job group ``group``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+
+
+def _parity(spark, path: str) -> None:
+    """The frame built from the footer schema has the inferred schema."""
+    built = spark.read.schema(TB.footer_schema(spark, path)).parquet(path)
+    assert built.schema == spark.read.parquet(path).schema, path
+
+
+def test_load_table_starts_no_spark_job(spark, sf_dir):
+    """Building a table's DataFrame — schema access included — runs no
+    Spark job (``spark.read.parquet`` alone runs a schema-inference job
+    per call). Anti-vacuity: a control inference in a LATER group must
+    show up first; the listener bus delivers events in order, so by then
+    any job the loads started is visible too."""
+    tag = uuid.uuid4().hex[:8]
+
+    def load_all():
+        for name in TB.TABLE_NAMES:
+            TB.load_table(spark, sf_dir, name).schema
+
+    loads, control = f"loads-{tag}", f"control-{tag}"
+    _in_group(spark, loads, load_all)
+    path = os.path.join(sf_dir, "region.parquet")
+    _in_group(spark, control, lambda: spark.read.parquet(path).schema)
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.time() + 30
+    while not tracker.getJobIdsForGroup(control) and time.time() < deadline:
+        time.sleep(0.1)
+    assert tracker.getJobIdsForGroup(control), "control inference job unseen"
+    assert list(tracker.getJobIdsForGroup(loads)) == []
+
+
+def test_footer_schema_matches_inference_for_corpus_tables(spark, sf_dir):
+    for name in TB.TABLE_NAMES:
+        _parity(spark, os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def test_footer_schema_matches_inference_for_part_directories(
+    spark, sf_smoke, tmp_path
+):
+    """The split-audit layout — a multi-part directory whose first part
+    is schema-only — with the hidden entries Spark's writers leave
+    (``_SUCCESS``, ``.crc``) and a partition-directory layout: the
+    schema and the rows match a plain inferred read."""
+    import pyarrow.parquet as pq
+
+    for name in ("events", "documents", "embeddings"):
+        tbl = pq.read_table(os.path.join(sf_smoke, f"{name}.parquet"))
+        d = tmp_path / "split" / f"{name}.parquet"
+        d.mkdir(parents=True)
+        (d / "_SUCCESS").write_bytes(b"")
+        (d / ".part-000.parquet.crc").write_bytes(b"not parquet")
+        pq.write_table(tbl.slice(0, 0), d / "part-000.parquet")
+        pq.write_table(tbl.slice(0, 1), d / "part-001.parquet")
+        pq.write_table(tbl.slice(1), d / "part-002.parquet", row_group_size=2)
+        _parity(spark, str(d))
+        loaded = TB.load_table(spark, str(tmp_path / "split"), name)
+        assert loaded.count() == len(tbl), name
+
+    docs = pq.read_table(os.path.join(sf_smoke, "documents.parquet"))
+    d = tmp_path / "partitioned" / "documents.parquet"
+    pq.write_to_dataset(docs, str(d), partition_cols=["lang"])
+    _parity(spark, str(d))
+    loaded = TB.load_table(spark, str(tmp_path / "partitioned"), "documents")
+    assert "lang" in loaded.columns and loaded.count() == len(docs)
+
+    empty = tmp_path / "empty" / "events.parquet"
+    empty.mkdir(parents=True)
+    (empty / "_SUCCESS").write_bytes(b"")
+    with pytest.raises(FileNotFoundError):
+        TB.load_table(spark, str(tmp_path / "empty"), "events")
+
+
+def _nanos_check(spark, sf: str) -> list:
+    """Footer/inference parity on the nanos file under ``spark``'s
+    session confs, then the loaded ``ts`` as UTC micros."""
+    TB.ensure_session_confs(spark)
+    _parity(spark, os.path.join(sf, "events.parquet"))
+    df = TB.load_table(spark, sf, "events")
+    assert dict(df.dtypes)["ts"] == "timestamp"
+    return [
+        r.us
+        for r in df.orderBy("event_id").select(F.unix_micros("ts").alias("us")).collect()
+    ]
+
+
+_VANILLA_NANOS = r"""
+import sys
+sys.path.insert(0, sys.argv[1])
+from pyspark.sql import SparkSession
+from realtime_voting_data_engineering_spark.sources import tables as TB
+from tests.test_sources import _nanos_check
+
+spark = SparkSession.builder.master("local[1]").getOrCreate()  # vanilla
+spark.sparkContext.setLogLevel("ERROR")
+path = sys.argv[2] + "/events.parquet"
+for read in (lambda: TB.footer_schema(spark, path),
+             lambda: spark.read.parquet(path).schema):
+    try:
+        read()
+        print("NANOS_ACCEPTED_UNPINNED")
+    except Exception as e:
+        print("NANOS_REJECTED_UNPINNED", "PARQUET_TYPE_ILLEGAL" in str(e))
+print("NANOS_MICROS", _nanos_check(spark, sys.argv[2]))
+"""
+
+
+def test_footer_schema_matches_inference_for_nanos_timestamps(spark, tmp_path):
+    """The footer schema follows the session conf exactly as inference
+    does on a TIMESTAMP(NANOS) column: a vanilla session rejects it
+    until ``ensure_session_confs`` pins ``nanosAsLong`` (both reads fail
+    with the same error), then both read it alike; the builder session
+    and the vanilla one load the same micros."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    nanos = [1_700_000_000_123_456_789, 1_700_000_100_000_000_999, None]
+    sf = tmp_path / "nanos"
+    sf.mkdir()
+    ts = pa.array(nanos, pa.timestamp("ns"))
+    pq.write_table(
+        pa.table({"event_id": pa.array([1, 2, 3], pa.int64()), "ts": ts}),
+        sf / "events.parquet",
+    )
+    sf = str(sf)
+    want = [n // 1000 if n is not None else None for n in nanos]
+    assert _nanos_check(spark, sf) == want
+    proc = subprocess.run(
+        [sys.executable, "-c", _VANILLA_NANOS, REPO, sf],
+        capture_output=True,
+        text=True,
+        cwd=str(tmp_path),
+        timeout=600,
+    )
+    assert proc.stdout.count("NANOS_REJECTED_UNPINNED True") == 2 and (
+        f"NANOS_MICROS {want}" in proc.stdout
+    ), (
+        proc.stdout[-2000:],
+        proc.stderr[-3000:],
+    )
