@@ -24,6 +24,7 @@ import pandas as pd
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, StructField, StructType
 
 from realtime_voting_data_engineering_spark.operators.relational import top_k_per_group
 
@@ -174,6 +175,20 @@ def collect_query_matrix(queries: DataFrame, id_col: str, vec_col: str):
     q_ids = np.array([r[0] for r in kept])
     q_mat = np.array([r[1] for r in kept], dtype=np.float64)
     return q_ids, q_mat, dims
+
+
+def _id_typed_schema(
+    df: DataFrame, id_col: str, id_names: list[str], rest: str
+) -> StructType:
+    """Output schema of an Arrow kernel or a probe frame built from
+    collected rows: the columns in ``id_names`` take the type of
+    ``df[id_col]``, followed by the non-id columns in DDL ``rest``. Ids come out as the type they
+    went in, as in ``knn_brute_force`` (aliases) and ``pq_encode``."""
+    id_type = df.schema[id_col].dataType
+    return StructType(
+        [StructField(n, id_type) for n in id_names]
+        + DataType.fromDDL(rest).fields
+    )
 
 
 def knn_brute_force(
@@ -591,7 +606,6 @@ def ivf_assign(
         ensure_workers_can_import,
     )
 
-    _require_integral_id(corpus, id_col, "corpus")
     ensure_workers_can_import(corpus.sparkSession)
     cent = np.asarray(centroids, dtype=np.float64)
     corpus = valid_vectors(corpus, vec_col, int(cent.shape[1]))
@@ -611,7 +625,10 @@ def ivf_assign(
             yield out
 
     return corpus.select(id_col, vec_col).mapInPandas(
-        assign, schema=f"{id_col} long, {vec_col} array<float>, cluster int"
+        assign,
+        schema=_id_typed_schema(
+            corpus, id_col, [id_col], f"{vec_col} array<float>, cluster int"
+        ),
     )
 
 
@@ -632,11 +649,8 @@ def knn_ivf(
     Recall < 1 by construction; tests measure it against brute force."""
     import numpy as np
 
-    # Both sides feed hard-coded-long id schemas (the probe frame's
-    # query_id and the assign kernel's {id_col}); refuse non-integral
-    # ids BEFORE the training collect runs any job.
-    _require_integral_id(queries, id_col, "queries")
-    _require_integral_id(corpus, id_col, "corpus")
+    # Refuse mixed id types before the training collect runs a job.
+    _require_same_id_type(queries, corpus, id_col, "corpus")
     cent = ivf_train_centroids(
         corpus, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
     )
@@ -661,9 +675,12 @@ def knn_ivf(
         qv = np.asarray(r[1], dtype=np.float64)
         d2 = ((cent - qv) ** 2).sum(axis=1)
         for c in np.argsort(d2, kind="stable")[:nprobe]:
-            probe_rows.append((int(r[0]), [float(v) for v in r[1]], int(c)))
+            probe_rows.append((r[0], [float(v) for v in r[1]], int(c)))
     probes = queries.sparkSession.createDataFrame(
-        probe_rows, schema="query_id long, q_vec array<float>, cluster int"
+        probe_rows,
+        schema=_id_typed_schema(
+            corpus, id_col, ["query_id"], "q_vec array<float>, cluster int"
+        ),
     )
 
     cands = assigned.join(F.broadcast(probes), "cluster").filter(
@@ -707,7 +724,6 @@ def ivf_fixed_assign(
         ensure_workers_can_import,
     )
 
-    _require_integral_id(corpus, id_col, "corpus")
     ensure_workers_can_import(corpus.sparkSession)
     cent = ivf_fixed_centroids(dims, n_centroids)  # (n_centroids, dims)
     corpus = valid_vectors(corpus, vec_col, dims)
@@ -726,7 +742,10 @@ def ivf_fixed_assign(
             yield out
 
     return corpus.select(id_col, vec_col).mapInPandas(
-        assign, schema=f"{id_col} long, {vec_col} array<float>, cluster int"
+        assign,
+        schema=_id_typed_schema(
+            corpus, id_col, [id_col], f"{vec_col} array<float>, cluster int"
+        ),
     )
 
 
@@ -756,10 +775,7 @@ def knn_ivf_fixed(
     contract as ``knn_brute_force_pandas``. Recall/latency trade-off vs
     the k-means quantizer is pytest-measured; production keeps
     ``knn_ivf``, grading evidence comes from this twin."""
-    # Both sides feed hard-coded-long id schemas (probe frame + assign
-    # kernel) — refuse non-integral ids before any job runs.
-    _require_integral_id(queries, id_col, "queries")
-    _require_integral_id(corpus, id_col, "corpus")
+    _require_same_id_type(queries, corpus, id_col, "corpus")
     queries = valid_vectors(queries, vec_col, dims)
     cent = ivf_fixed_centroids(dims, n_centroids)
     assigned = ivf_fixed_assign(
@@ -784,9 +800,12 @@ def knn_ivf_fixed(
                 acc = acc + diff * diff
             d2.append(acc)
         for c in sorted(range(n_centroids), key=lambda i: (d2[i], i))[:nprobe]:
-            probe_rows.append((int(r[0]), qv, int(c)))
+            probe_rows.append((r[0], qv, int(c)))
     probes = queries.sparkSession.createDataFrame(
-        probe_rows, schema="query_id long, q_vec array<float>, cluster int"
+        probe_rows,
+        schema=_id_typed_schema(
+            corpus, id_col, ["query_id"], "q_vec array<float>, cluster int"
+        ),
     )
 
     # Each corpus vector lives in exactly ONE inverted list, so the
@@ -842,69 +861,6 @@ def _resolve_query_chunk(override: "int | None", default: int) -> int:
     if chunk < 1:
         raise ValueError(f"query chunk must be an int >= 1, got {chunk!r}")
     return chunk
-
-# The dense scorers' refusal may recommend their expression twins (which
-# genuinely accept any id type); the IVF paths must NOT pass this — see
-# _require_integral_id's docstring.
-_EXPRESSION_TWIN_HINT = (
-    " (or use the expression-based knn_brute_force/knn_ann, whose "
-    "output id types follow the input)"
-)
-
-
-def _require_integral_id(
-    df: DataFrame, id_col: str, what: str, alternative: str = ""
-) -> None:
-    """Refuse a non-integral id column on the kernels whose OUTPUT id
-    columns are hard-coded LONG, loudly and at PLAN time (VERDICT r11
-    "What's wrong" #2, extended by the r12 review which found the same
-    class in the IVF paths). Guarded surfaces — every ``id_col``-generic
-    entry point with a hard-coded long id output:
-
-    - dense scorers ``knn_quantized`` / ``knn_brute_force_pandas``
-      (``query_id long, neighbor_id long`` mapInPandas schemas);
-    - ``ivf_assign`` / ``ivf_fixed_assign`` (``{id_col} long`` assign
-      schemas);
-    - ``knn_ivf`` / ``knn_ivf_fixed`` (``query_id long`` probe frames,
-      whose driver-side ``int(r[0])`` would otherwise silently COERCE
-      a numeric-string query id to long — no error at all, worse than
-      the mid-job crash).
-
-    Without the guard, a string/decimal/double id passes plan analysis
-    but dies mid-job in the executor's pandas→Arrow cast — loud-but-late
-    under the session-wide ``convertToArrowArraySafely=true`` pin. A
-    scheduler-visible TypeError at the call site beats a mid-job task
-    failure (the same loud-at-plan-time principle as
-    ``_require_same_id_type`` and ``_resolve_query_chunk``). Any
-    integral width is accepted — a narrower id widens to long exactly.
-
-    Deliberately NOT guarded: ``knn_brute_force``/``knn_ann`` (output
-    ids alias the inputs — types propagate end-to-end, so a string-id
-    caller gets a correct string-typed result), ``with_srp_signature``
-    and ``pq_encode`` (output schema is built from the input field),
-    the ADC searchers (output typed from the corpus side), and the
-    winnow kernel (casts back to the input id type) — all handle
-    non-long ids gracefully, so a refusal would break working callers
-    to guard nothing. The multimodal kernels hard-code ``media_id
-    long`` but take no ``id_col``: their whole input schema is the
-    documented media contract, not a generic-id surface. Full triage:
-    SCALE.md "Round-12 — dense-kernel id guard".
-
-    ``alternative`` customizes the remediation hint per call site: the
-    dense scorers point at their expression twins (which genuinely
-    accept any id type), while the IVF paths must NOT — recommending
-    brute force there would silently swap an index path for the
-    |Q|·|C| cross product (r12 third review pass)."""
-    from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
-
-    t = df.schema[id_col].dataType
-    if type(t) not in (ByteType, ShortType, IntegerType, LongType):
-        raise TypeError(
-            f"id column {id_col!r} on the {what} side is {t}, but this "
-            "kernel's output schema hard-codes its id columns as LONG — "
-            "the pandas→Arrow cast would fail mid-job; cast the id to "
-            f"an integral type{alternative} before calling"
-        )
 
 
 def _cosine_score_frames(
@@ -992,22 +948,18 @@ def knn_quantized(
         ensure_workers_can_import,
     )
 
-    _require_integral_id(
-        queries, id_col, "queries", alternative=_EXPRESSION_TWIN_HINT
-    )
-    _require_integral_id(
-        corpus, id_col, "corpus", alternative=_EXPRESSION_TWIN_HINT
-    )
+    _require_same_id_type(queries, corpus, id_col, "corpus")
     ensure_workers_can_import(corpus.sparkSession)
     q_chunk = _resolve_query_chunk(query_chunk, _SIMS_QUERY_CHUNK)
+    out_schema = _id_typed_schema(
+        corpus, id_col, ["query_id", "neighbor_id"], "cos double"
+    )
     # Full contract (NULL + ragged) on both sides: dims comes from the
     # collected query matrix and gates the corpus scan (r6 ADVICE #1).
     q_ids, q_mat, dims = collect_query_matrix(queries, id_col, vec_col)
     if q_ids is None:  # empty query set: nothing to score (and the 1-D
         # np.array([]) would break every axis=1 op / matmul downstream)
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos double"
-        )
+        return queries.sparkSession.createDataFrame([], out_schema)
     q_norm = np.linalg.norm(q_mat, axis=1)
     q_valid = q_norm > 0  # zero queries match nothing (0/0 NaN sorts first)
     q_norm[~q_valid] = np.inf
@@ -1031,9 +983,7 @@ def knn_quantized(
                 codes_f, c_norm, c_valid, q_chunk, scales=scales,
             )
 
-    scored = quant.mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos double"
-    )
+    scored = quant.mapInPandas(score, schema=out_schema)
     return top_k_per_group(
         scored.filter(F.col("query_id") != F.col("neighbor_id")),
         ["query_id"],
@@ -1065,22 +1015,18 @@ def knn_brute_force_pandas(
         ensure_workers_can_import,
     )
 
-    _require_integral_id(
-        queries, id_col, "queries", alternative=_EXPRESSION_TWIN_HINT
-    )
-    _require_integral_id(
-        corpus, id_col, "corpus", alternative=_EXPRESSION_TWIN_HINT
-    )
+    _require_same_id_type(queries, corpus, id_col, "corpus")
     ensure_workers_can_import(corpus.sparkSession)
     q_chunk = _resolve_query_chunk(query_chunk, _SIMS_QUERY_CHUNK)
+    out_schema = _id_typed_schema(
+        corpus, id_col, ["query_id", "neighbor_id"], "cos double"
+    )
     # Full contract (NULL + ragged) on both sides: dims comes from the
     # collected query matrix and gates the corpus scan (r6 ADVICE #1).
     q_ids, q_mat, dims = collect_query_matrix(queries, id_col, vec_col)
     if q_ids is None:  # empty query set: nothing to score (and the 1-D
         # np.array([]) would break every axis=1 op / matmul downstream)
-        return queries.sparkSession.createDataFrame(
-            [], "query_id long, neighbor_id long, cos double"
-        )
+        return queries.sparkSession.createDataFrame([], out_schema)
     corpus = valid_vectors(corpus, vec_col, dims)
     q_norm = np.linalg.norm(q_mat, axis=1)
     q_valid = q_norm > 0  # zero queries match nothing (0/0 NaN sorts first)
@@ -1099,9 +1045,7 @@ def knn_brute_force_pandas(
                 c_mat, c_norm, c_valid, q_chunk,
             )
 
-    scored = corpus.select(id_col, vec_col).mapInPandas(
-        score, schema="query_id long, neighbor_id long, cos double"
-    )
+    scored = corpus.select(id_col, vec_col).mapInPandas(score, schema=out_schema)
     return top_k_per_group(
         scored.filter(F.col("query_id") != F.col("neighbor_id")),
         ["query_id"],
@@ -1241,33 +1185,24 @@ def pq_reconstruct(codes_csv: list[int], cb) -> "np.ndarray":  # noqa: F821
 def _require_same_id_type(queries: DataFrame, other: DataFrame, id_col: str,
                           other_what: str) -> None:
     """Refuse mismatched id types between the query frame and the
-    corpus/codes frame, loudly and at PLAN time. The ADC kernels drop
-    self-matches via a numpy elementwise ``qids != ids`` compare; with
-    mixed dtypes (string query ids vs int64 corpus ids) numpy calls
-    everything unequal, so a vector would silently score against ITSELF
-    and win its own top-k — a plausible wrong answer, not a crash
-    (ADVICE r9 #3). Same Spark type ⇒ same Arrow/numpy kind in the
-    kernel, so the driver-side schema check closes the whole class.
+    corpus/codes frame, loudly and at PLAN time, before any job runs.
+    Callers — every kernel that emits a query-side id next to a
+    corpus-side id, both typed from the corpus side by
+    ``_id_typed_schema`` or the ADC out-schemas:
+    ``knn_brute_force_pandas``, ``knn_quantized``, ``knn_ivf``,
+    ``knn_ivf_fixed``, ``knn_pq_adc`` and ``knn_pq_adc_from_codes``.
 
-    Mixed INTEGRAL widths stay allowed only when the QUERY id type is
-    no wider than the corpus/codes id type: numpy compares int32
-    against int64 exactly, so the self-match exclusion is correct for
-    any width mix, but the OUTPUT ``query_id`` column takes the OTHER
-    side's type, and under Spark's DEFAULT
-    ``spark.sql.execution.pandas.convertToArrowArraySafely=false``
-    pyarrow casts with ``safe=False`` — a too-wide query id silently
-    WRAPS (verified: int64 2^33+7 → int32 7), emitting a corrupted
-    query_id that can collide with a real id (ADVICE r10 #1). The
-    engine now pins that conf true (session.get_spark +
-    ensure_session_confs), turning the wrap into a loud task failure —
-    but this plan-time refusal stays: a scheduler-visible TypeError
-    beats a mid-job executor error, and direct operator callers may
-    hold a session that never passed through load_table.
-    Narrower-query mixes upcast exactly and remain
-    allowed. The cross-family classes are always refused (string vs
-    numeric is the vacuous compare; int vs double is subtler — an id
-    beyond 2^53 would round on the float side and could FALSELY equal
-    a neighbor, silently dropping a legitimate top-k row)."""
+    Cross-family mixes are always refused: string vs numeric makes the
+    self-match exclusion vacuous (everything compares unequal, so a
+    vector wins its own top-k — ADVICE r9 #3), and int vs double rounds
+    ids beyond 2^53 so a neighbor can FALSELY equal its query. Mixed
+    integral widths are allowed only when the query id is no wider than
+    the corpus id: the output ``query_id`` takes the corpus type, and
+    under Spark's default unsafe Arrow cast a too-wide query id would
+    silently WRAP (ADVICE r10 #1). The engine pins
+    ``convertToArrowArraySafely`` true as the runtime backstop, but
+    direct callers may hold a session that never passed through
+    ``load_table``."""
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
     width = {ByteType: 1, ShortType: 2, IntegerType: 4, LongType: 8}

@@ -13,6 +13,7 @@ throttling, watermark lag, and state growth at a glance.
 
 from __future__ import annotations
 
+import math
 from collections import deque
 from dataclasses import dataclass
 
@@ -22,12 +23,24 @@ from pyspark.sql.streaming import StreamingQueryListener
 
 @dataclass
 class BatchMetric:
+    """One micro-batch's progress. A value Spark did not measure (absent,
+    or non-finite — the input rate of a batch with no elapsed trigger
+    interval is NaN) is ``None``, never a sentinel such as 0; Spark's
+    own progress JSON drops those values the same way."""
+
     query_name: str | None
     batch_id: int
     num_input_rows: int
-    input_rows_per_second: float
-    batch_duration_ms: int
+    input_rows_per_second: float | None
+    batch_duration_ms: int | None
     state_rows: int
+
+
+def _measured(value):
+    """``value``, or None when Spark reported it missing or non-finite."""
+    if value is None or (isinstance(value, float) and not math.isfinite(value)):
+        return None
+    return value
 
 
 class ProgressLog(StreamingQueryListener):
@@ -53,8 +66,8 @@ class ProgressLog(StreamingQueryListener):
                 query_name=p.name,
                 batch_id=p.batchId,
                 num_input_rows=p.numInputRows or 0,
-                input_rows_per_second=p.inputRowsPerSecond or 0.0,
-                batch_duration_ms=(p.batchDuration or 0),
+                input_rows_per_second=_measured(p.inputRowsPerSecond),
+                batch_duration_ms=_measured(p.batchDuration),
                 state_rows=state_rows,
             )
         )

@@ -24,6 +24,19 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming import StatefulProcessor, StatefulProcessorHandle
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.types import DoubleType, LongType, StructField, StructType
+
+
+def _totals_schema(events: DataFrame, key_col: str) -> StructType:
+    """Output schema of the running-totals operators: the group key as
+    typed in ``events``, then the per-key count and sum."""
+    return StructType(
+        [
+            StructField(key_col, events.schema[key_col].dataType),
+            StructField("n_events", LongType()),
+            StructField("total", DoubleType()),
+        ]
+    )
 
 
 def running_totals_stateful(
@@ -34,9 +47,10 @@ def running_totals_stateful(
     """A1 as a *custom* stateful aggregate: per-key running (count, sum)
     kept in explicit GroupState, emitted once per key per micro-batch —
     the hand-rolled twin of ``votes_per_candidate_stream`` for kernels
-    Spark's aggregates can't express."""
+    Spark's aggregates can't express. The key column keeps its input
+    type."""
 
-    out_schema = f"{key_col} string, n_events bigint, total double"
+    out_schema = _totals_schema(events, key_col)
     state_schema = "n bigint, s double"
 
     def update(
@@ -178,7 +192,7 @@ def running_totals_tws(
     public-API usage and runs wherever protobuf is installed. Requires
     the RocksDB state store provider
     (``spark.sql.streaming.stateStore.providerClass``)."""
-    out_schema = f"{key_col} string, n_events bigint, total double"
+    out_schema = _totals_schema(events, key_col)
 
     return (
         events.select(key_col, value_col)

@@ -1,88 +1,124 @@
-"""Pins for tools/id_schema_lint.py — the registry-wide hard-coded-id-
-schema lint (VERDICT r12 "What's wrong" #2).
+"""The id-schema gate: no kernel schema gives an id column a literal type.
 
-The r12 review proved the class SPREADS: the dense-scorer guard was
-incomplete the day it was written because the IVF paths carried the
-same hard-coded-long pattern. These tests (a) hold the current tree
-clean against the documented allowlist, (b) pin the guarded inventory
-so a guard can't silently disappear, and (c) prove detection power
-with red fixtures — an unguarded kernel in each schema FORM the lint
-distinguishes (literal DDL, f-string DDL, driver-built probe frame,
-hard-coded StructField) must flag, and each graceful form (propagated
-StructField type, non-id columns, guarded twin) must not.
+Kernels type their id columns from the input (``similarity._id_typed_schema``,
+``stateful._totals_schema``), so a string, int or long id comes back out as
+itself. This gate keeps it that way. It scans every string and f-string in the
+package (placeholders read as ``{name}``, docstrings skipped) and every
+``StructField`` call. A literal type given to an ``id_col``/``key_col`` column,
+or to ``query_id``/``neighbor_id``, is a finding. It scans literals, not
+bindings, so it finds a typed id wherever the schema is built and however it is
+passed along (alias, module constant, ``+=``, walrus, ``global``, nested
+scope). The red fixtures below show that for each form; the green ones show
+what must not flag.
 """
 
 from __future__ import annotations
 
+import ast
+import pathlib
+import re
 import textwrap
 
-from tools.id_schema_lint import (
-    ALLOWLIST,
-    audit_package,
-    audit_source,
-    violations,
+PKG = pathlib.Path(__file__).resolve().parent.parent / "realtime_voting_data_engineering_spark"
+ID_NAMES, ID_PARAMS = {"query_id", "neighbor_id"}, {"id_col", "key_col"}
+LITERAL_ID_TYPE = re.compile(
+    r"(?:\{(?:id_col|key_col)\}|\b(?:query_id|neighbor_id))\s+(?:long|bigint|int|integer"
+    r"|short|smallint|tinyint|byte|string|double|float|decimal|binary|boolean)\b"
 )
+# The winnow kernel hashes ids as strings (a lossless round-trip for any id
+# type) and casts them back to the input type right after the kernel.
+ALLOWED = {("operators/text.py", "{id_col} string"): "winnow string round-trip"}
 
 
-def _audit(snippet: str, module: str = "operators/fixture.py"):
-    return audit_source(textwrap.dedent(snippet), module)
+def _callee(func: ast.expr) -> str:
+    return func.attr if isinstance(func, ast.Attribute) else getattr(func, "id", "")
+
+
+def literal_id_types(source: str) -> list[tuple[int, str]]:
+    """``(line, "column type")`` for each id column typed literally in ``source``."""
+    tree = ast.parse(source)
+    skip = {id(n.value) for n in ast.walk(tree) if isinstance(n, ast.Expr)}
+    skip |= {id(v) for n in ast.walk(tree) if isinstance(n, ast.JoinedStr) for v in n.values}
+    found = []
+    for node in ast.walk(tree):
+        if id(node) in skip:
+            continue
+        if isinstance(node, ast.JoinedStr):
+            text = "".join(v.value if isinstance(v, ast.Constant)
+                           else "{%s}" % ast.unparse(v.value) for v in node.values)
+            found += [(node.lineno, m.group()) for m in LITERAL_ID_TYPE.finditer(text)]
+        elif isinstance(node, ast.Constant) and isinstance(node.value, str):
+            found += [(node.lineno, m.group()) for m in LITERAL_ID_TYPE.finditer(node.value)]
+        elif isinstance(node, ast.Call) and _callee(node.func) == "StructField":
+            args = dict(zip(("name", "dataType"), node.args))
+            args |= {k.arg: k.value for k in node.keywords}
+            name, dtype = args.get("name"), args.get("dataType")
+            literal_name = isinstance(name, ast.Constant) and name.value in ID_NAMES
+            param_name = isinstance(name, ast.Name) and name.id in ID_PARAMS
+            if (literal_name or param_name) and isinstance(dtype, ast.Call) \
+                    and _callee(dtype.func).endswith("Type"):
+                label = name.value if literal_name else "{%s}" % name.id
+                found.append((node.lineno, f"{label} {ast.unparse(dtype)}"))
+    return sorted(found)
+
+
+def package_findings() -> list[tuple[str, int, str]]:
+    return [(path.relative_to(PKG).as_posix(), line, text)
+            for path in sorted(PKG.rglob("*.py"))
+            for line, text in literal_id_types(path.read_text())]
+
+
+def violations(found, allowed=ALLOWED):
+    """``(unlisted findings, allowlist entries no finding matches)``."""
+    live = {(rel, text) for rel, _, text in found}
+    return ([f for f in found if (f[0], f[2]) not in allowed],
+            sorted(set(allowed) - live))
+
+
+def _scan(snippet: str) -> list[str]:
+    return [text for _, text in literal_id_types(textwrap.dedent(snippet))]
 
 
 # ---------------------------------------------------------------- current tree
 
 
 def test_current_tree_has_no_unguarded_or_stale_sites():
-    bad, stale = violations(audit_package())
-    assert not bad, f"unguarded id-typed schema sites: {bad}"
+    bad, stale = violations(package_findings())
+    assert not bad, "id columns typed literally:\n" + "\n".join(map(str, bad))
     assert not stale, f"stale allowlist entries: {stale}"
 
 
-def test_guarded_inventory_is_exactly_the_six_similarity_kernels():
-    """The guard must not silently disappear from any of the six entry
-    points the r12 triage guarded (SCALE.md 'dense-kernel id guard')."""
-    sites = audit_package()
-    guarded = {(s.module, s.function) for s in sites if s.guarded}
-    assert guarded == {
-        ("operators/similarity.py", "ivf_assign"),
-        ("operators/similarity.py", "ivf_fixed_assign"),
-        ("operators/similarity.py", "knn_ivf"),
-        ("operators/similarity.py", "knn_ivf_fixed"),
-        ("operators/similarity.py", "knn_quantized"),
-        ("operators/similarity.py", "knn_brute_force_pandas"),
-    }
-
-
 def test_allowlisted_inventory_matches_live_findings_exactly():
-    """Both directions: every unguarded finding is allowlisted AND every
-    allowlist entry is live — the list can't rot into a blanket waiver."""
-    sites = audit_package()
-    unguarded = {(s.module, s.function) for s in sites if not s.guarded}
-    assert unguarded == set(ALLOWLIST)
+    """The only literal id type in the package is the winnow round-trip, and
+    that kernel casts the id back to the input type right after it."""
+    assert {(rel, text) for rel, _, text in package_findings()} == set(ALLOWED)
+    text_py = (PKG / "operators" / "text.py").read_text()
+    assert "F.col(id_col).cast(id_type).alias(id_col)" in text_py
+
+
+def test_red_stale_allowlist_entry_fails():
+    found = [("operators/fixture.py", 3, t) for t in _scan('spark.range(1).select("x")')]
+    bad, stale = violations(found, {("operators/fixture.py", "query_id long"): "obsolete"})
+    assert bad == [] and stale == [("operators/fixture.py", "query_id long")]
 
 
 # ---------------------------------------------------------- red fixtures (MUST flag)
 
 
 def test_red_unguarded_literal_ddl_kernel_flags():
-    sites = _audit(
+    assert _scan(
         """
         def bad_kernel(df, id_col="doc_id"):
             def k(batches):
                 yield None
             return df.mapInPandas(k, schema="query_id long, score double")
         """
-    )
-    assert len(sites) == 1
-    s = sites[0]
-    assert not s.guarded
-    assert s.function == "bad_kernel"
-    assert s.columns == ("query_id long",)
-    bad, _ = violations(sites, allowlist={})
-    assert bad == sites
+    ) == ["query_id long"]
 
 
 def test_red_unguarded_fstring_ddl_kernel_flags():
-    sites = _audit(
+    # only the id placeholder offends; the vector column is generic data
+    assert _scan(
         """
         def bad_assign(df, id_col, vec_col):
             def k(batches):
@@ -91,14 +127,11 @@ def test_red_unguarded_fstring_ddl_kernel_flags():
                 k, schema=f"{id_col} long, {vec_col} array<float>, c int"
             )
         """
-    )
-    assert len(sites) == 1
-    # only the id placeholder offends — the vec column is generic data
-    assert sites[0].columns == ("{id_col} long",)
+    ) == ["{id_col} long"]
 
 
 def test_red_unguarded_probe_frame_flags():
-    sites = _audit(
+    assert _scan(
         """
         def bad_probe(queries, id_col):
             rows = [(int(r[0]), r[1]) for r in queries.collect()]
@@ -106,29 +139,24 @@ def test_red_unguarded_probe_frame_flags():
                 rows, schema="query_id long, q_vec array<float>"
             )
         """
-    )
-    assert len(sites) == 1 and sites[0].call == "createDataFrame"
+    ) == ["query_id long"]
 
 
 def test_red_hardcoded_structfield_flags():
-    sites = _audit(
+    assert _scan(
         """
         def bad_struct(df, id_col):
             out_schema = StructType(
                 [StructField("neighbor_id", LongType()),
                  StructField("score", DoubleType())]
             )
-            def k(batches):
-                yield None
             return df.mapInPandas(k, schema=out_schema)
         """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("neighbor_id LongType()",)
+    ) == ["neighbor_id LongType()"]
 
 
 def test_red_stateful_output_schema_flags():
-    sites = _audit(
+    assert _scan(
         """
         def bad_stateful(events, key_col="voter_id"):
             out_schema = f"{key_col} string, n bigint"
@@ -137,523 +165,132 @@ def test_red_stateful_output_schema_flags():
                 outputMode="update", timeoutConf=None,
             )
         """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("{key_col} string",)
+    ) == ["{key_col} string"]
 
 
 def test_red_annotated_assignment_schema_flags():
-    """r13 review finding #1: an annotated assignment binding the
-    schema variable must not be a silent bypass."""
-    sites = _audit(
+    assert _scan(
         """
         def bad_annotated(df, id_col):
             out_schema: str = "query_id long, score double"
-            def k(batches):
-                yield None
             return df.mapInPandas(k, schema=out_schema)
         """
-    )
-    assert len(sites) == 1 and sites[0].columns == ("query_id long",)
+    ) == ["query_id long"]
 
 
 def test_red_tuple_unpacking_schema_flags():
-    sites = _audit(
+    assert _scan(
         """
         def bad_tuple(df):
             sch, other = "neighbor_id long, s double", 1
-            def k(batches):
-                yield None
             return df.mapInPandas(k, schema=sch)
         """
-    )
-    assert len(sites) == 1 and sites[0].columns == ("neighbor_id long",)
+    ) == ["neighbor_id long"]
 
 
 def test_red_keyword_structfield_flags():
-    """r13 review finding #2: keyword-style StructField must not bypass
-    the positional-only extraction."""
-    sites = _audit(
+    assert _scan(
         """
-        def bad_kw_struct(df):
+        def bad_kw_struct(df, key_col):
             out_schema = StructType(
-                [StructField(name="query_id", dataType=LongType())]
+                [StructField(name="query_id", dataType=LongType()),
+                 StructField(dataType=T.StringType(), name=key_col)]
             )
-            def k(batches):
-                yield None
             return df.mapInPandas(k, schema=out_schema)
         """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("query_id LongType()",)
+    ) == ["query_id LongType()", "{key_col} T.StringType()"]
 
 
 def test_red_map_in_arrow_flags():
-    """r13 review finding #3: the Arrow-native sibling APIs carry the
-    same hard-coded-schema hazard."""
-    sites = _audit(
+    assert _scan(
         """
         def bad_arrow(df, id_col):
-            def k(batches):
-                yield None
             return df.mapInArrow(k, schema="query_id long, score double")
         """
-    )
-    assert len(sites) == 1 and sites[0].call == "mapInArrow"
-
-
-def test_red_guard_inside_nested_def_does_not_count():
-    """r13 review finding #4: a guard call inside a nested (possibly
-    never-invoked) def must not mark the outer function guarded."""
-    sites = _audit(
-        """
-        def bad_nested_guard(df, id_col):
-            def never_called():
-                _require_integral_id(df, id_col, "corpus")
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema="query_id long, s double")
-        """
-    )
-    assert len(sites) == 1 and not sites[0].guarded
+    ) == ["query_id long"]
 
 
 def test_red_aliased_schema_chain_flags():
-    """r13 ADVICE #1: a schema aliased through a second local name
-    (sch = "..."; schema = sch) resolved to an empty expression list
-    in the one-level version and the site silently passed."""
-    sites = _audit(
+    assert _scan(
         """
         def bad_alias(df):
             sch = "query_id long, score double"
             schema = sch
-            def k(batches):
-                yield None
             return df.mapInPandas(k, schema=schema)
         """
-    )
-    assert len(sites) == 1 and sites[0].columns == ("query_id long",)
-
-
-def test_red_unresolved_schema_name_flags_visibly():
-    """r13 ADVICE #1, second half: a Name with NO local assignment (a
-    parameter, global, or import) must flag as unresolved — reviewed
-    via guard or allowlist — instead of silently passing."""
-    sites = _audit(
-        """
-        def bad_param_schema(df, out_schema):
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema=out_schema)
-        """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("<unresolved schema: out_schema>",)
-    bad, _ = violations(sites, allowlist={})
-    assert bad == sites
-
-
-def test_red_assignment_cycle_terminates_as_unresolved():
-    sites = _audit(
-        """
-        def bad_cycle(df):
-            a = b
-            b = a
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema=a)
-        """
-    )
-    assert len(sites) == 1
-    assert all(c.startswith("<unresolved schema:") for c in sites[0].columns)
+    ) == ["query_id long"]
 
 
 def test_red_module_level_call_flags_under_module_scope():
-    """r13 ADVICE #2: a schema-taking call at module scope (outside any
-    def) was previously never audited."""
-    sites = _audit(
+    assert _scan(
         """
-        import pyspark
-
         PROBE = spark.createDataFrame([(1,)], schema="query_id long")
         """
-    )
-    assert len(sites) == 1
-    assert sites[0].function == "<module>"
-    assert sites[0].columns == ("query_id long",) and not sites[0].guarded
-
-
-def test_green_module_level_guard_counts_for_module_sites():
-    sites = _audit(
-        """
-        _require_integral_id(base, "query_id", "probe")
-        PROBE = spark.createDataFrame([(1,)], schema="query_id long")
-        """
-    )
-    assert len(sites) == 1 and sites[0].guarded
-
-
-def test_red_literal_key_named_column_flags():
-    """r13 ADVICE #3: the token rule applies to literal names too — a
-    hard-coded 'user_key string' is the same caller-id hazard as
-    '{key_col} string' and must not pass just for being literal."""
-    sites = _audit(
-        """
-        def bad_literal_key(df, key_col):
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema="user_key string, n bigint")
-        """
-    )
-    assert len(sites) == 1 and sites[0].columns == ("user_key string",)
-
-
-def test_green_diamond_alias_is_not_falsely_unresolved():
-    """r14 review finding #1: two branches assigning the same alias
-    (diamond) must re-resolve cleanly — the global-visited-set version
-    reported the second visit as '<unresolved>' and failed CI on a
-    fully-resolvable, id-free schema."""
-    sites = _audit(
-        """
-        def diamond(df, fast):
-            sch = "value double, n int"
-            if fast:
-                schema = sch
-            else:
-                schema = sch
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema=schema)
-        """
-    )
-    assert sites == []
-
-
-def test_red_ifexp_schema_branch_flags_and_dead_end_is_visible():
-    """r14 review finding #2: a Name nested in an IfExp branch must be
-    traced (sch resolves to the id DDL) and an untraceable branch must
-    flag visibly, not silently pass."""
-    sites = _audit(
-        """
-        def conditional(df, wide, other):
-            sch = "query_id long, score double"
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema=sch if wide else other)
-        """
-    )
-    assert len(sites) == 1
-    assert set(sites[0].columns) == {
-        "query_id long",
-        "<unresolved schema: other>",
-    }
+    ) == ["query_id long"]
 
 
 def test_red_concat_schema_operand_flags():
-    sites = _audit(
+    assert _scan(
         """
         def concatenated(df):
             sch = "query_id long"
-            def k(batches):
-                yield None
             return df.mapInPandas(k, schema=sch + ", extra int")
         """
-    )
-    assert len(sites) == 1 and sites[0].columns == ("query_id long",)
+    ) == ["query_id long"]
 
 
 def test_red_augmented_assignment_poisons_name_to_unresolved():
-    """r14 ADVICE #1: ``sch = "value double"; sch += ", query_id long"``
-    previously resolved sch to ONLY the plain assignment — the id
-    column appended via += passed silently, partial resolution reading
-    as complete. An augmented target must dead-end visibly."""
-    sites = _audit(
+    """An id column appended with ``+=`` flags at its own literal."""
+    assert _scan(
         """
         def bad_augmented(df, id_col):
             sch = "value double"
             sch += f", {id_col} long"
-            def k(batches):
-                yield None
             return df.mapInPandas(k, schema=sch)
         """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("<unresolved schema: sch>",)
-    bad, _ = violations(sites, allowlist={})
-    assert bad == sites
-
-
-def test_red_augmented_alias_target_also_poisons():
-    """The poison must survive the transitive chain: an alias of a
-    +=-built name is just as unresolvable as the name itself."""
-    sites = _audit(
-        """
-        def bad_aliased_augmented(df):
-            base = "value double"
-            base += ", query_id long"
-            schema = base
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema=schema)
-        """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("<unresolved schema: base>",)
-
-
-def test_red_format_composition_flags_visibly():
-    """r14 ADVICE #2: ``"{} long".format(id_col)`` carries no id-like
-    token in its literal fragments, so the DDL pass can't catch it —
-    the composition itself must flag as unresolved."""
-    sites = _audit(
-        """
-        def bad_format(df, id_col):
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema="{} long".format(id_col))
-        """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == (
-        "<unresolved schema: str.format/% composition>",
-    )
-    bad, _ = violations(sites, allowlist={})
-    assert bad == sites
-
-
-def test_red_percent_composition_flags_visibly():
-    sites = _audit(
-        """
-        def bad_percent(df, id_col):
-            sch = "%s long" % id_col
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema=sch)
-        """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == (
-        "<unresolved schema: str.format/% composition>",
-    )
-
-
-def test_green_module_constant_schema_resolves_without_finding():
-    """r14 ADVICE #3: a def passing an id-free module-level DDL
-    constant previously flagged <unresolved schema: OUT_SCHEMA> and
-    would have forced a bogus guard or allowlist entry. The fallback
-    must resolve it and pass."""
-    sites = _audit(
-        """
-        OUT_SCHEMA = "value double, weight float"
-
-        def fine_module_constant(df):
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema=OUT_SCHEMA)
-        """
-    )
-    assert sites == []
+    ) == ["{id_col} long"]
 
 
 def test_red_module_constant_with_id_column_flags_resolved_columns():
-    """Detection power of the fallback: a module constant that DOES
-    hard-code an id column must flag the actual column (resolved),
-    not an <unresolved> placeholder."""
-    sites = _audit(
+    assert _scan(
         """
         OUT_SCHEMA = "query_id long, value double"
 
         def bad_module_constant(df):
-            def k(batches):
-                yield None
             return df.mapInPandas(k, schema=OUT_SCHEMA)
         """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("query_id long",)
-
-
-def test_red_shadowed_module_constant_stays_unresolved():
-    """The fallback is blocked by ANY local binding of the name — a
-    parameter shadowing the module constant makes the site ambiguous,
-    and it must dead-end visibly rather than resolve to the wrong
-    (module) value."""
-    sites = _audit(
-        """
-        OUT_SCHEMA = "value double"
-
-        def shadowed(df, OUT_SCHEMA):
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema=OUT_SCHEMA)
-        """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("<unresolved schema: OUT_SCHEMA>",)
+    ) == ["query_id long"]
 
 
 def test_red_module_alias_chain_resolves_in_module_env():
-    """Module-scope resolution is lexical: a module constant aliasing
-    another module name resolves against module assignments (and the
-    id column it reaches must flag), never back into function locals."""
-    sites = _audit(
+    """A local of the same name does not hide the module constant's id."""
+    assert _scan(
         """
         BASE = "query_id long, value double"
         OUT_SCHEMA = BASE
 
         def bad_module_alias(df):
-            BASE = "value double"  # local, must NOT leak into the module chain
+            BASE = "value double"
             use(BASE)
-            def k(batches):
-                yield None
             return df.mapInPandas(k, schema=OUT_SCHEMA)
         """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("query_id long",)
-
-
-def test_red_augmented_module_constant_poisons_fallback():
-    """A module constant built up via += is unresolvable for every
-    scope that falls back to it."""
-    sites = _audit(
-        """
-        OUT_SCHEMA = "value double"
-        OUT_SCHEMA += ", query_id long"
-
-        def bad_augmented_module(df):
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema=OUT_SCHEMA)
-        """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("<unresolved schema: OUT_SCHEMA>",)
+    ) == ["query_id long"]
 
 
 def test_red_walrus_rebinding_poisons_alongside_plain_assignment():
-    """r15 review finding #1: the AugAssign-only poison left every
-    other unmodeled rebinding form reading partial resolution as
-    complete — a walrus rebind next to a plain assignment resolved the
-    name to only the plain value and passed silently."""
-    sites = _audit(
+    assert _scan(
         """
         def bad_walrus(df, id_col, wide):
             sch = "value double"
             if wide:
                 use(sch := f"{id_col} long, value double")
-            def k(batches):
-                yield None
             return df.mapInPandas(k, schema=sch)
         """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("<unresolved schema: sch>",)
-
-
-def test_red_loop_target_rebinding_poisons():
-    sites = _audit(
-        """
-        def bad_loop(df, schemas):
-            sch = "value double"
-            for sch in schemas:
-                use(sch)
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema=sch)
-        """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("<unresolved schema: sch>",)
-
-
-def test_red_match_capture_blocks_module_fallback():
-    """r15 review finding #2: a match-case capture pattern binds the
-    name to the runtime subject, but _bound_names missed MatchAs — the
-    name wrongly resolved to the id-free module constant and the site
-    silently passed."""
-    sites = _audit(
-        """
-        OUT_SCHEMA = "value double"
-
-        def bad_match(df, x):
-            match x:
-                case str() as OUT_SCHEMA:
-                    use(OUT_SCHEMA)
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema=OUT_SCHEMA)
-        """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("<unresolved schema: OUT_SCHEMA>",)
-
-
-def test_red_composition_behind_chained_call_flags():
-    """r15 review finding #3: the outermost-only composition check let
-    one chained method call hide the format — the expression returned
-    as resolved and its literal fragments carried no id-like token."""
-    sites = _audit(
-        """
-        def bad_chained(df, id_col):
-            def k(batches):
-                yield None
-            return df.mapInPandas(
-                k, schema="{} long, value double".format(id_col).strip()
-            )
-        """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == (
-        "<unresolved schema: str.format/% composition>",
-    )
-
-
-def test_green_module_chain_through_colliding_name_is_not_a_cycle():
-    """r15 review finding #4: the cycle stack keyed bare names, so a
-    module chain passing through a name equal to an already-traversed
-    local name falsely dead-ended — forcing a bogus guard on a clean
-    id-free site. Keyed on (env, name) it resolves cleanly."""
-    sites = _audit(
-        """
-        sch = "value double"
-        CONST = sch
-
-        def fine_colliding_names(df):
-            sch = CONST
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema=sch)
-        """
-    )
-    assert sites == []
-
-
-def test_green_subscript_key_read_does_not_block_module_fallback():
-    """r15 review finding #5: collecting every Name in an assignment
-    target subtree counted ``cache[OUT_SCHEMA] = 1`` — a READ of the
-    name as a subscript key — as a local binding, blocking the
-    fallback and flagging a clean id-free site."""
-    sites = _audit(
-        """
-        OUT_SCHEMA = "value double"
-
-        def fine_key_read(df, cache):
-            cache[OUT_SCHEMA] = 1
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema=OUT_SCHEMA)
-        """
-    )
-    assert sites == []
+    ) == ["{id_col} long"]
 
 
 def test_red_global_rebound_module_constant_is_poisoned():
-    """r15 review second pass, finding #1: a module constant rebound
-    via ``global`` in any function may carry a runtime value no static
-    literal reflects — the fallback previously resolved it to the
-    stale id-free literal and an id-typed site passed silently."""
-    sites = _audit(
+    assert _scan(
         """
         OUT_SCHEMA = "value double"
 
@@ -662,137 +299,37 @@ def test_red_global_rebound_module_constant_is_poisoned():
             OUT_SCHEMA = f"{id_col} long, value double"
 
         def bad_global_read(df):
-            def k(batches):
-                yield None
             return df.mapInPandas(k, schema=OUT_SCHEMA)
         """
-    )
-    flagged = {s.function: s.columns for s in sites}
-    assert flagged.get("bad_global_read") == (
-        "<unresolved schema: OUT_SCHEMA>",
-    )
-
-
-def test_red_nested_local_does_not_supply_value_to_outer_read():
-    """r15 review second pass, finding #2 (false-pass half): a nested
-    kernel's id-free local previously resolved an OUTER read of the
-    same name, although at runtime the outer read hits the id-typed
-    MODULE constant — the site passed silently. Under the lexical
-    chain (third pass) the outer read skips the nested binding
-    entirely and resolves the module constant, flagging the ACTUAL id
-    column."""
-    sites = _audit(
-        """
-        sch = "query_id long, value double"
-
-        def bad_outer_read(df):
-            def k(batches):
-                sch = "value double"
-                yield None
-            return df.mapInPandas(k, schema=sch)
-        """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("query_id long",)
+    ) == ["{id_col} long"]
 
 
 def test_red_module_constant_resolves_when_nothing_shadows():
-    """Control for the nested-poison rule: without the nested local,
-    the same outer read resolves through the fallback and flags the
-    ACTUAL id column."""
-    sites = _audit(
+    assert _scan(
         """
         sch = "query_id long, value double"
 
         def bad_outer_read(df):
-            def k(batches):
-                yield None
             return df.mapInPandas(k, schema=sch)
         """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("query_id long",)
-
-
-def test_green_nested_param_collision_resolves_lexically():
-    """r15 review second pass, finding #2 (false-flag half), resolved
-    outright by the third pass's lexical chains: a nested-def
-    parameter shadows only INSIDE the nested def, so the outer read
-    resolves the id-free module constant — Python's actual runtime
-    behavior — and the clean site passes with no bogus guard."""
-    sites = _audit(
-        """
-        OUT_SCHEMA = "value double"
-
-        def fine_lexical(df):
-            def k(batches, OUT_SCHEMA):
-                yield None
-            return df.mapInPandas(k, schema=OUT_SCHEMA)
-        """
-    )
-    assert sites == []
+    ) == ["query_id long"]
 
 
 def test_red_inner_site_resolves_nested_defs_own_locals():
-    """r15 review third pass, finding #3: under the own/nested poison
-    split, a site INSIDE a nested def could no longer resolve the
-    nested def's own locals — a clean id-free inner site flagged
-    <unresolved>, and an id-typed one lost column precision. The
-    lexical chain resolves the inner scope first: the id-free variant
-    passes, the id-typed variant flags the actual column."""
-    clean = _audit(
-        """
+    clean = """
         def outer(df, spark):
             def k(batches):
                 sch = "value double"
                 yield spark.createDataFrame([], schema=sch)
             return df.mapInPandas(k, schema="value double")
         """
-    )
-    assert clean == []
-    dirty = _audit(
-        """
-        def outer(df, spark):
-            def k(batches):
-                sch = "query_id long, value double"
-                yield spark.createDataFrame([], schema=sch)
-            return df.mapInPandas(k, schema="value double")
-        """
-    )
-    assert len(dirty) == 1
-    assert dirty[0].columns == ("query_id long",)
-    assert dirty[0].function == "outer"  # ownership stays outermost
-
-
-def test_red_class_body_nested_in_function_does_not_supply_value():
-    """r15 review third pass, finding #2: a ClassDef nested inside a
-    function still SUPPLIED its class-body bindings to the outer
-    scope — the identical silent-false-pass shape as the nested-def
-    case. At runtime the outer read skips the class scope and hits
-    the id-typed module constant, so the site must flag it."""
-    sites = _audit(
-        """
-        sch = "query_id long, value double"
-
-        def outer(df):
-            class Cfg:
-                sch = "value double"
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema=sch)
-        """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("query_id long",)
+    assert _scan(clean) == []
+    dirty = clean.replace('sch = "value double"', 'sch = "query_id long, value double"')
+    assert _scan(dirty) == ["query_id long"]
 
 
 def test_red_nonlocal_rebound_enclosing_local_is_poisoned():
-    """r15 review fourth pass, finding #1: ``nonlocal`` is ``global``'s
-    function-scope sibling — a nested def rebinding the enclosing
-    function's schema variable makes its runtime value order-dependent,
-    and the lexical chain previously resolved the stale id-free
-    literal, passing an id-typed site silently."""
-    sites = _audit(
+    assert _scan(
         """
         def outer(df):
             sch = "value double"
@@ -800,24 +337,13 @@ def test_red_nonlocal_rebound_enclosing_local_is_poisoned():
                 nonlocal sch
                 sch = f"{id_col} long, value double"
             setup("query_id")
-            def k(batches):
-                yield None
             return df.mapInPandas(k, schema=sch)
         """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("<unresolved schema: sch>",)
+    ) == ["{id_col} long"]
 
 
 def test_red_default_arg_site_resolves_in_enclosing_scope():
-    """r15 review fourth pass, finding #2 (false-pass half): a nested
-    def's header expressions — parameter defaults, decorators,
-    annotations — evaluate in the ENCLOSING scope at definition time,
-    but the owner walk previously attributed them to the def's own
-    scope, so a schema call in a default arg resolved the def's clean
-    local while the runtime default reads the enclosing id-typed
-    binding."""
-    sites = _audit(
+    assert _scan(
         """
         def outer(df, spark):
             sch = "query_id long, value double"
@@ -826,232 +352,87 @@ def test_red_default_arg_site_resolves_in_enclosing_scope():
                 yield None
             return df.mapInPandas(k, schema="value double")
         """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("query_id long",)
-    assert sites[0].call == "createDataFrame"
-
-
-def test_green_default_arg_site_ignores_nested_defs_own_local():
-    """Mirror of the above (false-flag half): enclosing binding clean,
-    nested def's OWN local id-typed — the default expr never reads the
-    nested local, so the site must not flag."""
-    sites = _audit(
-        """
-        def outer(df, spark):
-            sch = "value double"
-            def k(batches, probe=spark.createDataFrame([(1,)], schema=sch)):
-                sch = "query_id long, value double"
-                yield None
-            return df.mapInPandas(k, schema="value double")
-        """
-    )
-    assert sites == []
-
-
-def test_red_module_level_site_sees_global_rebind_poison():
-    """r15 review third pass, finding #1: the Global poison was only
-    applied to the fallback env, but a MODULE-LEVEL site resolves the
-    constant from the <module> pseudo-scope's own assigns, which held
-    the stale un-poisoned literal — the exact false pass the second
-    pass closed for function scopes, surviving at module level."""
-    sites = _audit(
-        """
-        OUT_SCHEMA = "value double"
-
-        def setup(id_col):
-            global OUT_SCHEMA
-            OUT_SCHEMA = f"{id_col} long, value double"
-
-        PROBE = spark.createDataFrame([(1.0,)], schema=OUT_SCHEMA)
-        """
-    )
-    flagged = {s.function: s.columns for s in sites}
-    assert flagged.get("<module>") == ("<unresolved schema: OUT_SCHEMA>",)
-
-
-def test_red_default_parameter_schema_is_poisoned_not_trusted():
-    """Consequence of the generalized poison rule, pinned on purpose:
-    the common ``schema=None`` parameter defaulted inside the body is
-    a caller-controlled surface — the parameter binding poisons the
-    name even though a plain assignment exists, and the site must be
-    reviewed (guarded/allowlisted), not trusted on the default."""
-    sites = _audit(
-        """
-        def bad_defaulted(df, schema=None):
-            if schema is None:
-                schema = "value double"
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema=schema)
-        """
-    )
-    assert len(sites) == 1
-    assert sites[0].columns == ("<unresolved schema: schema>",)
+    ) == ["query_id long"]
 
 
 def test_red_class_body_site_flags_under_body_scope():
-    """r14 review finding #4: a schema call in a class attribute
-    initializer was invisible to both the method pass and the module
-    pseudo-scope."""
-    sites = _audit(
+    assert _scan(
         """
         class Probes:
             FRAME = spark.createDataFrame([(1,)], schema="query_id long")
         """
-    )
-    assert len(sites) == 1
-    assert sites[0].function == "Probes.<body>" and not sites[0].guarded
-
-
-def test_green_guarded_def_under_module_level_if_is_own_scope():
-    """r14 review finding #5: a def nested under a module-level if is
-    its OWN scope — its in-function guard counts (the <module>
-    attribution discounted it and failed correctly-guarded code)."""
-    sites = _audit(
-        """
-        if pandas is not None:
-            def gated(df):
-                _require_integral_id(df, "query_id", "gated")
-                def k(batches):
-                    yield None
-                return df.mapInPandas(k, schema="query_id long")
-        """
-    )
-    assert len(sites) == 1
-    assert sites[0].function == "gated" and sites[0].guarded
-
-
-def test_red_module_guard_does_not_waive_conditionally_defined_site():
-    """Converse of the above: a stray module-level guard call must not
-    blanket-waive an unguarded def nested under a module-level if."""
-    sites = _audit(
-        """
-        _require_integral_id(base, "doc_id", "module probe")
-        if pandas is not None:
-            def gated(df):
-                def k(batches):
-                    yield None
-                return df.mapInPandas(k, schema="query_id long")
-        """
-    )
-    assert len(sites) == 1
-    assert sites[0].function == "gated" and not sites[0].guarded
-
-
-def test_red_stale_allowlist_entry_fails():
-    sites = _audit(
-        """
-        def clean(df):
-            return df.select("x")
-        """
-    )
-    _, stale = violations(
-        sites, allowlist={("operators/fixture.py", "gone"): "obsolete"}
-    )
-    assert stale == [("operators/fixture.py", "gone")]
+    ) == ["query_id long"]
 
 
 # -------------------------------------------------------- green fixtures (must NOT flag)
 
 
-def test_green_guarded_kernel_passes():
-    sites = _audit(
+def test_green_module_constant_schema_resolves_without_finding():
+    assert _scan(
         """
-        def good_kernel(df, id_col):
-            _require_integral_id(df, id_col, "corpus")
-            def k(batches):
-                yield None
-            return df.mapInPandas(k, schema="query_id long, cos double")
+        OUT_SCHEMA = "value double, weight float"
+
+        def fine_module_constant(df):
+            return df.mapInPandas(k, schema=OUT_SCHEMA)
         """
-    )
-    assert len(sites) == 1 and sites[0].guarded
-    bad, _ = violations(sites, allowlist={})
-    assert not bad
+    ) == []
 
 
 def test_green_propagated_structfield_type_does_not_flag():
-    """The ADC pattern: StructField('query_id', base.schema[id].dataType)
-    propagates the caller's id type — the documented-graceful form."""
-    sites = _audit(
+    """The kernel pattern: the id field's type is copied from the input."""
+    assert _scan(
         """
-        def adc_like(base, id_col):
+        def adc_like(base, id_col, key_col):
             out_schema = StructType(
                 [StructField("query_id", base.schema[id_col].dataType),
+                 StructField(key_col, base.schema[key_col].dataType),
                  StructField("adc_dot", DoubleType())]
             )
-            def k(batches):
-                yield None
             return base.mapInPandas(k, schema=out_schema)
         """
-    )
-    assert sites == []
+    ) == []
 
 
 def test_green_non_id_placeholders_do_not_flag():
-    """r13 review finding #5: placeholder id-likeness is a token match
-    — {grid_col}/{idx_col} must not read as id columns (substring 'id'
-    would force a meaningless guard or a bogus allowlist entry)."""
-    sites = _audit(
+    assert _scan(
         """
         def grid_kernel(df, grid_col, idx_col):
-            def k(batches):
-                yield None
             return df.mapInPandas(
                 k, schema=f"{grid_col} double, {idx_col} int, n int"
             )
         """
-    )
-    assert sites == []
+    ) == []
 
 
 def test_green_non_id_columns_do_not_flag():
-    sites = _audit(
+    assert _scan(
         """
         def profile(df):
-            def k(batches):
-                yield None
             return df.mapInPandas(k, schema="tokens int, lang string, grid double")
         """
-    )
-    assert sites == []
+    ) == []
 
 
 def test_green_literal_key_substring_does_not_flag():
-    """Token rule on literals (r13 ADVICE #3): 'key' must match as an
-    identifier token, not a substring — monkey/donkeys/keyed pass."""
-    sites = _audit(
+    """Id names match as whole identifiers, not as substrings."""
+    assert _scan(
         """
         def zoo(df):
-            def k(batches):
-                yield None
             return df.mapInPandas(
-                k, schema="monkey string, donkeys int, keyed boolean"
+                k, schema="subquery_id long, neighbor_ids int, query_idx string"
             )
         """
-    )
-    assert sites == []
+    ) == []
 
 
 def test_green_structtype_from_input_fields_does_not_flag():
     """The SRP pattern: schema = input fields + a non-id extra column."""
-    sites = _audit(
+    assert _scan(
         """
         def srp_like(df, out_col):
             out_schema = StructType(
                 list(df.schema.fields) + [StructField(out_col, LongType())]
             )
-            def k(batches):
-                yield None
             return df.mapInPandas(k, schema=out_schema)
         """
-    )
-    assert sites == []
-
-
-def test_cli_main_passes_on_current_tree(capsys):
-    from tools import id_schema_lint
-
-    assert id_schema_lint.main() == 0
-    out = capsys.readouterr().out
-    assert "PASS" in out and "UNGUARDED" not in out
+    ) == []

@@ -169,3 +169,24 @@ def test_progress_listener_captures_batch_metrics(spark, vote_events, tmp_path):
         assert log.started
     finally:
         O.detach(spark, log)
+
+
+def test_progress_listener_reports_unmeasured_values_as_none():
+    """A value Spark did not measure is recorded as None, never as a
+    sentinel: a NaN or infinite input rate and a missing batch duration
+    must not read as a measured zero. A measured 0 stays 0."""
+    from types import SimpleNamespace
+
+    from realtime_voting_data_engineering_spark.streaming import observability as O
+
+    def event(rate, duration):
+        return SimpleNamespace(progress=SimpleNamespace(
+            name="stub", batchId=0, numInputRows=0, inputRowsPerSecond=rate,
+            batchDuration=duration, stateOperators=[],
+        ))
+
+    log = O.ProgressLog()
+    for rate, duration in ((float("nan"), None), (float("inf"), 0), (12.5, 40)):
+        log.onQueryProgress(event(rate, duration))
+    got = [(m.input_rows_per_second, m.batch_duration_ms) for m in log.metrics]
+    assert got == [(None, None), (None, 0), (12.5, 40)]

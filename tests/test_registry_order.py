@@ -22,7 +22,7 @@ from realtime_voting_data_engineering_spark import queries as Q
 REPO = pathlib.Path(__file__).resolve().parent.parent
 # Bump to the newest snapshot each round: the rotation invariant checks
 # out-of-window queries against the LAST round's driver rows.
-PREV_CORRECTNESS = REPO / "CORRECTNESS_r15.json"
+PREV_CORRECTNESS = REPO / "CORRECTNESS_r16.json"
 WINDOW_SIZE = 50
 
 

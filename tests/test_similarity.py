@@ -421,89 +421,112 @@ def test_dense_query_chunk_default_reads_module_constant(spark, fn_name, monkeyp
     assert fn(queries, corpus, k=3, query_chunk=np.int64(3)).count() == 7 * 3
 
 
-@pytest.mark.parametrize("fn_name", ["knn_brute_force_pandas", "knn_quantized"])
-def test_dense_kernels_refuse_non_integral_ids_at_plan_time(spark, fn_name):
-    """The Arrow-batched dense scorers hard-code ``query_id long,
-    neighbor_id long`` output schemas while accepting any ``id_col``
-    type (VERDICT r11 "What's wrong" #2): a string-id caller passed
-    plan analysis but died mid-job in the executor's pandas→Arrow cast.
-    The plan-time guard must refuse EITHER side's non-integral id with
-    a TypeError raised at the CALL (no job ever starts — pytest.raises
-    wraps the plan call, not a collect) and keep integral width mixes
-    working (narrower ids widen to long exactly). The expression
-    variants must stay permissive — pinned separately by
-    test_expression_knn_variants_stay_permissive_on_string_ids."""
-    fn = getattr(S, fn_name)
-    corpus, queries = _dense_chunk_fixture(spark)
-    s_corpus = corpus.withColumn("vec_id", F.col("vec_id").cast("string"))
-    s_queries = queries.withColumn("vec_id", F.col("vec_id").cast("string"))
-    with pytest.raises(TypeError, match="queries side"):
-        fn(s_queries, s_corpus, k=3)
-    with pytest.raises(TypeError, match="queries side"):
-        fn(s_queries, corpus, k=3)
-    with pytest.raises(TypeError, match="corpus side"):
-        fn(queries, s_corpus, k=3)
-    with pytest.raises(TypeError, match="integral"):
-        fn(
-            queries.withColumn("vec_id", F.col("vec_id").cast("double")),
-            corpus,
-            k=3,
-        )
-    # Integral width mixes stay allowed: an int32 query id upcasts to
-    # the long output exactly (no wrap class — widening only).
-    i_queries = queries.withColumn("vec_id", F.col("vec_id").cast("int"))
-    assert fn(i_queries, corpus, k=3).count() == 7 * 3
+def _id_type_fixture(spark):
+    """Integer-valued vectors, every corpus row with max |x| = 127, so
+    int8 quantization is exact (scale 1.0) and every cosine is computed
+    bit-identically by the expression and numpy paths. Corpus rows 8, 9
+    and 10 are identical and query 100 copies them: its k=2 tie breaks
+    by ``neighbor_id`` and picks 8, 9 as longs but "10", "8" as strings.
+    Queries 1-3 are corpus rows, so self-match exclusion is exercised."""
+    import numpy as np
+
+    rng = np.random.default_rng(5)
+    vecs = rng.integers(-127, 128, size=(12, 8))
+    vecs[:, 0] = 127
+    vecs[9] = vecs[10] = vecs[8]
+    rows = [(i, [float(x) for x in v]) for i, v in enumerate(vecs)]
+    corpus = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    queries = spark.createDataFrame(
+        rows[1:4] + [(100, rows[8][1])], "vec_id bigint, embedding array<float>"
+    )
+    return corpus, queries
 
 
-def test_ivf_paths_refuse_non_integral_ids_at_plan_time(spark):
-    """The r12 review extended VERDICT r11 #2's class to the IVF paths:
-    ``ivf_assign``/``ivf_fixed_assign`` hard-code ``{id_col} long``
-    mapInPandas schemas, and ``knn_ivf``/``knn_ivf_fixed`` build
-    ``query_id long`` probe frames through a driver-side ``int(r[0])``
-    that would silently COERCE a numeric-string query id (no error at
-    all). All four must refuse non-integral ids at the CALL; integral
-    width mixes widen to long exactly and stay allowed."""
-    corpus, queries = _dense_chunk_fixture(spark)
-    s_corpus = corpus.withColumn("vec_id", F.col("vec_id").cast("string"))
-    s_queries = queries.withColumn("vec_id", F.col("vec_id").cast("string"))
-    with pytest.raises(TypeError, match="corpus side"):
-        S.ivf_assign(s_corpus, S.ivf_fixed_centroids(8, 4))
-    with pytest.raises(TypeError, match="corpus side"):
-        S.ivf_fixed_assign(s_corpus, dims=8, n_centroids=4)
-    with pytest.raises(TypeError, match="queries side"):
-        S.knn_ivf(s_queries, corpus, k=3, n_centroids=4)
-    with pytest.raises(TypeError, match="corpus side"):
-        S.knn_ivf(queries, s_corpus, k=3, n_centroids=4)
-    with pytest.raises(TypeError, match="queries side"):
-        S.knn_ivf_fixed(s_queries, corpus, dims=8, k=3, n_centroids=4)
-    with pytest.raises(TypeError, match="corpus side"):
-        S.knn_ivf_fixed(queries, s_corpus, dims=8, k=3, n_centroids=4)
-    # Width mix: int32 ids assign fine and widen to the long schema.
-    i_corpus = corpus.withColumn("vec_id", F.col("vec_id").cast("int"))
-    assert S.ivf_fixed_assign(i_corpus, dims=8, n_centroids=4).count() == 30
+def _as_ids(df, type_name):
+    return df.withColumn("vec_id", F.col("vec_id").cast(type_name))
+
+
+# name → (call(queries, corpus), output id columns, pairs query with corpus)
+_ID_KERNELS = {
+    "knn_brute_force_pandas": (
+        lambda q, c: S.knn_brute_force_pandas(q, c, k=2),
+        ("query_id", "neighbor_id"), True),
+    "knn_quantized": (
+        lambda q, c: S.knn_quantized(q, c, k=2),
+        ("query_id", "neighbor_id"), True),
+    # nprobe == n_centroids probes every list: exact top-k, like brute force
+    "knn_ivf": (
+        lambda q, c: S.knn_ivf(q, c, k=2, n_centroids=4, nprobe=4),
+        ("query_id", "neighbor_id"), True),
+    "knn_ivf_fixed": (
+        lambda q, c: S.knn_ivf_fixed(q, c, dims=8, k=2, n_centroids=4, nprobe=4),
+        ("query_id", "neighbor_id"), True),
+    "ivf_assign": (
+        lambda q, c: S.ivf_assign(c, S.ivf_fixed_centroids(8, 4)),
+        ("vec_id",), False),
+    "ivf_fixed_assign": (
+        lambda q, c: S.ivf_fixed_assign(c, dims=8, n_centroids=4),
+        ("vec_id",), False),
+}
+
+
+@pytest.mark.parametrize("fn_name", sorted(_ID_KERNELS))
+def test_kernel_id_columns_take_the_input_id_type(spark, fn_name):
+    """Every Arrow kernel types its output id columns from its input:
+    string and int ids run and come back as themselves. The top-k
+    kernels equal the expression twin ``knn_brute_force`` on the same
+    ids — not a cast of the long-id result, since string ids tie-break
+    lexicographically (query 100 below). The assign kernels give each
+    vector the same list whatever its id type. A query id narrower than
+    the corpus id widens to it; mixing id families, or a query id wider
+    than the corpus id, is refused with a TypeError at the call, before
+    any job runs."""
+    call, id_cols, paired = _ID_KERNELS[fn_name]
+    corpus, queries = _id_type_fixture(spark)
+    long_rows = sorted(map(tuple, call(queries, corpus).collect()))
+    got = {}
+    for type_name, py_type in (("string", str), ("int", int)):
+        q, c = _as_ids(queries, type_name), _as_ids(corpus, type_name)
+        out = call(q, c)
+        for col in id_cols:
+            assert out.schema[col].dataType == c.schema["vec_id"].dataType
+        rows = got[type_name] = sorted(map(tuple, out.collect()))
+        assert rows and all(isinstance(r[0], py_type) for r in rows)
+        if paired:
+            twin = S.knn_brute_force(q, c, k=2)
+            assert rows == sorted(map(tuple, twin.collect())), type_name
+        else:
+            assert rows == sorted((py_type(r[0]), *r[1:]) for r in long_rows)
+    if not paired:
+        return
+    assert long_rows == got["int"]
+    # A narrower query id widens exactly to the corpus id type.
+    assert sorted(map(tuple, call(_as_ids(queries, "int"), corpus).collect())) == long_rows
+    # The tie at query 100 resolves by id order, so string and long
+    # ids pick different neighbors for it.
+    assert {r[1] for r in long_rows if r[0] == 100} == {8, 9}
+    assert {r[1] for r in got["string"] if r[0] == "100"} == {"10", "8"}
+    for q_type, c_type in (("string", "bigint"), ("bigint", "string"),
+                           ("bigint", "int"), ("double", "bigint")):
+        with pytest.raises(TypeError, match="mismatch"):
+            call(_as_ids(queries, q_type), _as_ids(corpus, c_type))
 
 
 def test_expression_knn_variants_stay_permissive_on_string_ids(spark):
-    """The expression variants (``knn_brute_force``, ``knn_ann``) are
-    DELIBERATELY unguarded: their output columns alias the inputs, so
-    string ids yield a correct string-typed result (the graceful
-    handling the ADC paths get by typing output from the corpus side)
-    — the integral-id guard must not creep onto them. (Unparametrized
-    on purpose: this arm is independent of which pandas kernel the
-    guard test exercises — r12 review #3.) The fixture's zero vector
-    is dropped: this pin tests id-type propagation, and under ANSI the
-    expression path's 0/0 cosine is a loud divide-by-zero, not a
-    score."""
+    """The expression variants (``knn_brute_force``, ``knn_ann``) alias
+    their input id columns, so string ids yield a correct string-typed
+    result — the behaviour every Arrow kernel now shares
+    (test_kernel_id_columns_take_the_input_id_type). The fixture's zero
+    vector is dropped: this pin tests id-type propagation, and under
+    ANSI the expression path's 0/0 cosine is a loud divide-by-zero, not
+    a score."""
     corpus, queries = _dense_chunk_fixture(spark)
-    s_corpus = corpus.withColumn("vec_id", F.col("vec_id").cast("string"))
-    s_queries = queries.withColumn("vec_id", F.col("vec_id").cast("string"))
+    s_corpus, s_queries = _as_ids(corpus, "string"), _as_ids(queries, "string")
     rows = S.knn_brute_force(
         s_queries, s_corpus.filter(F.col("vec_id") != "30"), k=3
     ).collect()
     assert len(rows) == 7 * 3
     assert all(isinstance(r.query_id, str) for r in rows[:3])
-    # knn_ann too (review-of-review: the pin named both variants but
-    # exercised only one — creep onto knn_ann would have passed).
     # Candidate generation is banded so counts are recall-dependent,
     # not 7×3; the pin is that string ids run and propagate.
     ann_rows = S.knn_ann(
@@ -512,32 +535,3 @@ def test_expression_knn_variants_stay_permissive_on_string_ids(spark):
     ).collect()
     assert len(ann_rows) >= 1
     assert all(isinstance(r.query_id, str) for r in ann_rows)
-
-
-def test_id_guard_hint_direction_per_call_site(spark):
-    """The guard's remediation hint is per-call-site (r12 third review
-    pass): the dense scorers genuinely have expression twins
-    (knn_brute_force/knn_ann accept any id type), so their refusal may
-    recommend them — but an IVF refusal must NOT, because following
-    that advice there would silently swap an index path for the
-    |Q|·|C| cross product. Pin both directions so a future refactor
-    can't restore the shared (dangerous) hint."""
-    corpus, queries = _dense_chunk_fixture(spark)
-    s_queries = queries.withColumn("vec_id", F.col("vec_id").cast("string"))
-    with pytest.raises(TypeError, match="knn_brute_force"):
-        S.knn_brute_force_pandas(s_queries, corpus, k=3)
-    with pytest.raises(TypeError, match="knn_brute_force"):
-        S.knn_quantized(s_queries, corpus, k=3)
-    for call in (
-        lambda: S.knn_ivf(s_queries, corpus, k=3, n_centroids=4),
-        lambda: S.knn_ivf_fixed(
-            s_queries, corpus, dims=8, k=3, n_centroids=4
-        ),
-        lambda: S.ivf_fixed_assign(s_queries, dims=8, n_centroids=4),
-        lambda: S.ivf_assign(s_queries, S.ivf_fixed_centroids(8, 4)),
-    ):
-        with pytest.raises(TypeError) as exc_info:
-            call()
-        msg = str(exc_info.value)
-        assert "knn_brute_force" not in msg and "knn_ann" not in msg
-        assert "cast the id" in msg

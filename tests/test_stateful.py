@@ -57,6 +57,38 @@ def test_running_totals_stateful_matches_batch(spark, vote_events, json_stream_d
     assert got == expected
 
 
+def test_running_totals_keep_the_input_key_type(spark, vote_events, json_stream_dir, tmp_path):
+    """The output key column takes the input key's type: a bigint key
+    runs through the Arrow kernel and comes back as bigint, with the
+    same totals as the batch aggregate. Both operators' schemas are
+    checked; only the v1 operator runs (the v2 runtime needs protobuf)."""
+    from pyspark.sql import types as T
+
+    def keyed(df):
+        return df.withColumn("k", F.crc32("candidate_id"))
+
+    parsed = keyed(_parsed_stream(spark, json_stream_dir))
+    for op in (S.running_totals_stateful, S.running_totals_tws):
+        assert op(parsed, "k", "vote").schema["k"].dataType == T.LongType()
+    totals = S.running_totals_stateful(parsed, "k", "vote")
+    q = P.start_update_aggregate(totals, "stateful_long_key", str(tmp_path / "ckpt"))
+    q.awaitTermination(120)
+    got = {
+        r.k: (r.n_events, r.total)
+        for r in spark.sql(
+            "SELECT k, max(n_events) AS n_events, max(total) AS total "
+            "FROM stateful_long_key GROUP BY k"
+        ).collect()
+    }
+    expected = {
+        r.k: (r.n, float(r.s))
+        for r in keyed(vote_events).groupBy("k")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("vote").alias("s"))
+        .collect()
+    }
+    assert got == expected and all(isinstance(k, int) for k in got)
+
+
 def test_first_seen_dedup_stateful(spark, vote_events, tmp_path):
     """Doubled input (at-least-once delivery) → exactly one row per key."""
     dup_dir = tmp_path / "dup"
