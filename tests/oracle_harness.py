@@ -100,7 +100,7 @@ def _canon(v) -> str:
         # the value DuckDB's naive timestamps store. Stripping tzinfo
         # without converting would render the host-local wall time and
         # make the whole harness host-timezone-sensitive
-        # (tools/tz_audit.py is the regression gate).
+        # (``run_audits.py --classes tz`` is the regression gate).
         if v.tzinfo is not None:
             v = v.astimezone(dt.timezone.utc).replace(tzinfo=None)
         return v.isoformat(sep=" ", timespec="microseconds")
@@ -155,8 +155,8 @@ def collect_spark_rows(sdf):
     outside UTC. Arrow collection (``df.toArrow()``) instead carries the
     instant with an explicit session-timezone annotation
     (``timestamp[us, tz=UTC]``), which ``_canon`` folds to the UTC wall
-    time DuckDB's naive timestamps store. ``tools/tz_audit.py`` runs the
-    whole registry under adversarial host timezones to keep this honest.
+    time DuckDB's naive timestamps store. ``tools/run_audits.py --classes
+    tz`` runs the whole registry under adversarial host timezones to keep this honest.
 
     Returns ``(cols, rows, arrow_schema)`` — the schema feeds
     ``assert_types_compatible`` without a second ``toArrow`` round-trip.
@@ -195,7 +195,7 @@ def compare_query(
 ) -> None:
     """Spark (on ``sf_dir``) vs DuckDB oracle (on ``oracle_sf_dir``,
     default the same dir). Passing a DIFFERENT oracle dir turns the
-    compare into an invariance check — e.g. tools/order_audit.py runs
+    compare into an invariance check — e.g. the order audit class runs
     Spark on a row-permuted corpus against the oracle on the clean one,
     certifying no query's result depends on incidental row order."""
     sdf = fn(spark, sf_dir)

@@ -343,7 +343,8 @@ def test_canon_folds_aware_timestamps_to_utc():
     Arrow collection of TIMESTAMP yields) must canonicalize to the UTC
     instant's wall time regardless of which tz annotation it carries —
     stripping tzinfo without converting was the harness's pre-r8 bug
-    (tools/tz_audit.py audits the full registry for this end to end)."""
+    (``run_audits.py --classes tz`` audits the full registry for this
+    end to end)."""
     import datetime as dt
 
     from tests.oracle_harness import _canon
@@ -363,7 +364,7 @@ def test_collect_spark_rows_carries_the_instant_not_host_wall_time(spark):
     i.e. the Arrow path, not row-based collect()'s process-local
     fromtimestamp rendering. Under the UTC test host both paths agree;
     the tz annotation being PRESENT is what makes the non-UTC host case
-    (exercised by tools/tz_audit.py's subprocess legs) fold correctly."""
+    (exercised by the tz audit class's per-leg processes) fold correctly."""
     import pyarrow.types as pat
 
     from tests.oracle_harness import _canon, collect_spark_rows

@@ -4,12 +4,37 @@ repo's measured-scaling evidence (SCALE.md "Round-6 measured scaling")."""
 
 from __future__ import annotations
 
-import sys
+import json
 import pathlib
+import sys
 
 sys.path.insert(0, str(pathlib.Path(__file__).resolve().parent.parent))
 
-from tools import scale_probe
+from tools import audit_corpus, audit_env, scale_probe
+from tools import run_audits as RA
+
+SF_AUDIT = RA.SF_DIR
+
+
+def _corpus_audit(spark, audit, workdir, only):
+    """``audit``'s corpus sweep over ``only``; asserts every query ran and
+    matched."""
+    report = RA.Run(workdir=str(workdir), only=only).corpus_sweep(spark, audit)
+    assert set(report) == set(only)
+    bad = {n: r for n, r in report.items() if r["status"] != "match"}
+    assert not bad, f"{audit.name}-audit regressions: {bad}"
+
+
+def _run_audits(*argv, timeout):
+    """``tools/run_audits.py`` in a subprocess; returns its exit code, the
+    per-class JSON results it printed, and its stderr."""
+    import subprocess
+
+    r = subprocess.run(
+        [sys.executable, str(pathlib.Path(RA.__file__)), *argv],
+        capture_output=True, text=True, timeout=timeout,
+    )
+    return r.returncode, [json.loads(ln) for ln in r.stdout.splitlines()], r.stderr
 
 
 def test_probe_runs_and_reports_all_ops(spark, sf_smoke):
@@ -73,16 +98,14 @@ def test_emb_probe_runs_and_reports_all_ops(spark, sf_smoke):
     assert all(r["sec"] >= 0 for r in results)
 
 
-def test_null_audit_fixed_queries_stay_fixed(spark):
-    """The r6 NULL-injection audit (tools/null_audit.py) found seven
+def test_null_audit_fixed_queries_stay_fixed(spark, tmp_path):
+    """The r6 NULL-injection audit (run_audits.py --classes null) found seven
     operator/oracle divergences on NULL-poisoned data; all were fixed
     (as-of NULL key/time guards, explicit window NULL placement, json
     validity guard, funnel NULL-user filter, NULL-metadata frame plans,
     derived-vs-denormalized n_chars). Re-run exactly those seven on the
     poisoned corpus so the semantics can't regress silently — the clean
     corpus never exercises them."""
-    from tools import null_audit
-
     fixed = [
         "activation_funnel",
         "asof_last_click",
@@ -92,14 +115,11 @@ def test_null_audit_fixed_queries_stay_fixed(spark):
         "quality_score_buckets",
         "running_revenue_per_customer",
     ]
-    report = null_audit.audit("/root/testdata/sf0.001", only=fixed)
-    assert set(report) == set(fixed)
-    bad = {n: r for n, r in report.items() if r["status"] != "match"}
-    assert not bad, f"NULL-edge regressions: {bad}"
+    _corpus_audit(spark, audit_corpus.Null(), tmp_path, fixed)
 
 
-def test_float_audit_fixed_queries_stay_fixed(spark):
-    """The r7 non-finite-float audit (tools/float_audit.py) found ten
+def test_float_audit_fixed_queries_stay_fixed(spark, tmp_path):
+    """The r7 non-finite-float audit (run_audits.py --classes float) found ten
     divergences in four classes: DuckDB hard-errors casting NaN to
     DECIMAL (decimal-sum oracles over events.value), interpolated
     percentiles disagree over NaN/Inf-bearing runs, Spark's ANSI
@@ -109,8 +129,6 @@ def test_float_audit_fixed_queries_stay_fixed(spark):
     boundary). Re-run the affected families on the poisoned corpus so
     the float semantics can't silently regress — the clean corpus never
     exercises them."""
-    from tools import float_audit
-
     fixed = [
         "votes_per_candidate",
         "hourly_vote_counts",
@@ -125,15 +143,12 @@ def test_float_audit_fixed_queries_stay_fixed(spark):
         "embedding_near_dup_srp",
         "knn_cosine_topk",
     ]
-    report = float_audit.audit("/root/testdata/sf0.001", only=fixed)
-    assert set(report) == set(fixed)
-    bad = {n: r for n, r in report.items() if r["status"] != "match"}
-    assert not bad, f"non-finite-float regressions: {bad}"
+    _corpus_audit(spark, audit_corpus.Float(), tmp_path, fixed)
 
 
-def test_order_invariance_of_tie_sensitive_queries(spark):
-    """Row-order + scan-parallelism invariance (r7,
-    tools/order_audit.py): Spark on an md5-permuted corpus split into 4
+def test_order_invariance_of_tie_sensitive_queries(spark, tmp_path):
+    """Row-order + scan-parallelism invariance (r7, the order audit
+    class): Spark on an md5-permuted corpus split into 4
     part files per table (a genuinely parallel multi-file scan — the
     driver corpus is single-file, so every other green row came from a
     SERIAL scan) must hash-equal the DuckDB oracle on the CLEAN
@@ -142,8 +157,6 @@ def test_order_invariance_of_tie_sensitive_queries(spark):
     passed 98/98 at split=8; this pins the most tie-sensitive subset
     (window/top-k/argmax/pagination family) so a future non-total
     ordering can't slip back in."""
-    from tools import order_audit
-
     pinned = [
         "leading_candidate",
         "latest_vote_per_user",
@@ -157,10 +170,7 @@ def test_order_invariance_of_tie_sensitive_queries(spark):
         "knn_cosine_topk",
         "winnow_overlap_topk",
     ]
-    report = order_audit.audit("/root/testdata/sf0.001", only=pinned, split=4)
-    assert set(report) == set(pinned)
-    bad = {n: r for n, r in report.items() if r["status"] != "match"}
-    assert not bad, f"row-order-dependence regressions: {bad}"
+    _corpus_audit(spark, audit_corpus.Order(split=4), tmp_path, pinned)
 
 
 def test_every_query_survives_an_empty_corpus(spark, tmp_path_factory):
@@ -406,8 +416,8 @@ def test_similarity_family_survives_duplicate_embeddings(spark, tmp_path_factory
         compare_query(spark, name, spec.fn, spec.oracle, out)
 
 
-def test_extreme_audit_fixed_queries_stay_fixed(spark):
-    """The r7 extreme-value audit (tools/extreme_audit.py) found four
+def test_extreme_audit_fixed_queries_stay_fixed(spark, tmp_path):
+    """The r7 extreme-value audit (run_audits.py --classes extreme) found four
     divergence classes on in-range-but-extreme values: (1) mod-sign —
     Spark pmod is non-negative, SQL % keeps the dividend sign, so
     negative extreme ids minted divergent buckets (pivot/cube/
@@ -424,8 +434,6 @@ def test_extreme_audit_fixed_queries_stay_fixed(spark):
     CTEs) and the BETWEEN 0 AND 9 window close both. Re-run the worst
     representative of each class on the poisoned corpus so none can
     regress silently — the clean corpus never exercises them."""
-    from tools import extreme_audit
-
     fixed = [
         # mod-sign
         "assigned_candidate_counts",
@@ -447,10 +455,7 @@ def test_extreme_audit_fixed_queries_stay_fixed(spark):
         "knn_ann_srp",
         "knn_cosine_topk",
     ]
-    report = extreme_audit.audit("/root/testdata/sf0.001", only=fixed)
-    assert set(report) == set(fixed)
-    bad = {n: r for n, r in report.items() if r["status"] != "match"}
-    assert not bad, f"extreme-value regressions: {bad}"
+    _corpus_audit(spark, audit_corpus.Extreme(), tmp_path, fixed)
 
 
 def test_funnel_counts_users_whose_only_signups_are_garbage_time(
@@ -503,7 +508,7 @@ def test_funnel_counts_users_whose_only_signups_are_garbage_time(
     compare_query(spark, "activation_funnel", spec.fn, spec.oracle, out)
 
 
-def test_fuzz_audit_poison_is_a_row_set_preserving_pair():
+def test_fuzz_audit_poison_is_a_row_set_preserving_pair(tmp_path):
     """The fuzz audit's corpus pair must be a TRUE invariance fixture:
     the Spark side (permuted + split) and the oracle side (single file)
     must contain the SAME row multiset, and the seed must actually
@@ -515,9 +520,7 @@ def test_fuzz_audit_poison_is_a_row_set_preserving_pair():
 
     import pyarrow.parquet as pq
 
-    from tools import fuzz_audit
-
-    spark_dir, oracle_dir = fuzz_audit.poison("/root/testdata/sf0.001", seed=7)
+    spark_dir, oracle_dir = audit_corpus.Fuzz(7).prepare(SF_AUDIT, str(tmp_path))
     for fname in sorted(os.listdir(oracle_dir)):
         otbl = pq.read_table(os.path.join(oracle_dir, fname))
         spath = os.path.join(spark_dir, fname)
@@ -555,15 +558,13 @@ def test_fuzz_audit_poison_is_a_row_set_preserving_pair():
     assert counts.most_common(1)[0][1] >= 20, "hot-key skew missing"
 
 
-def test_fuzz_audit_representative_queries_match_on_seeded_corpus(spark):
+def test_fuzz_audit_representative_queries_match_on_seeded_corpus(spark, tmp_path):
     """One seed, one representative query per family the fuzz audit's
     new adversary classes (verbatim duplicate rows at registry scope,
     text-content mutation) stress hardest: exact-dedup totality,
     fingerprint set-semantics, pagination under duplicated identical
     rows, grouped aggregates under hot-key skew, and a vector family
     under duplicated + ragged embeddings."""
-    from tools import fuzz_audit
-
     names = [
         "dedup_votes_exact",
         "doc_fingerprint_clusters",
@@ -571,32 +572,26 @@ def test_fuzz_audit_representative_queries_match_on_seeded_corpus(spark):
         "votes_per_candidate",
         "knn_cosine_topk",
     ]
-    report = fuzz_audit.audit("/root/testdata/sf0.001", seed=11, only=names)
-    assert set(report) == set(names)
-    bad = {n: r for n, r in report.items() if r["status"] != "match"}
-    assert not bad, f"fuzz-audit regressions: {bad}"
+    _corpus_audit(spark, audit_corpus.Fuzz(11), tmp_path, names)
 
 
-def test_split_audit_layout_is_degenerate_and_lossless():
+def test_split_audit_layout_is_degenerate_and_lossless(tmp_path):
     """The split audit's poisoner must actually produce the degenerate
     layout it documents (empty parts, a 1-row part, micro row groups)
     while preserving the exact row set — a silently single-part or
-    row-dropping rewriter would reduce the audit to a plain re-run."""
-    from tools import split_audit
+    row-dropping rewriter would reduce the audit to a plain re-run.
+    ``prepare`` runs the class's sanity check on the layout it wrote."""
+    out, oracle = audit_corpus.Split().prepare(SF_AUDIT, str(tmp_path))
+    assert oracle == SF_AUDIT, "the oracle must read the original file"
 
-    out = split_audit.poison("/root/testdata/sf0.001")
-    split_audit._sanity_check_poison("/root/testdata/sf0.001", out)
 
-
-def test_split_audit_representative_queries_match_on_degenerate_layout(spark):
+def test_split_audit_representative_queries_match_on_degenerate_layout(spark, tmp_path):
     """One representative per execution shape the degenerate layout
     stresses hardest: a mapInPandas kernel path (knn_pq_adc), a
     stateful-iteration path (near_dup_clusters — now driver union-find
     over pairs from multi-part scans), a multi-join TPC-H query, a
     single-pass grouped aggregate, and the persisted-index search path
     whose memo keys on directory listings (bm25_search_topk)."""
-    from tools import split_audit
-
     names = [
         "knn_pq_adc",
         "near_dup_clusters",
@@ -604,23 +599,18 @@ def test_split_audit_representative_queries_match_on_degenerate_layout(spark):
         "votes_per_candidate",
         "bm25_search_topk",
     ]
-    report = split_audit.audit("/root/testdata/sf0.001", only=names)
-    assert set(report) == set(names)
-    bad = {n: r for n, r in report.items() if r["status"] != "match"}
-    assert not bad, f"split-audit regressions: {bad}"
+    _corpus_audit(spark, audit_corpus.Split(), tmp_path, names)
 
 
-def test_concurrency_memo_eviction_race_is_clean(spark):
-    """Mini leg B2 of tools/concurrency_audit.py: 8 threads hammer the
+def test_concurrency_memo_eviction_race_is_clean(spark, tmp_path):
+    """Mini leg B2 of the concurrency audit class: 8 threads hammer the
     BM25 memo while a mutator thread rewrites the corpus mtime, so
     token churn forces evict+rebuild storms mid-flight. The pre-r8
     UNLOCKED memo reproducibly KeyError'd here (two threads both
     list-then-pop the same stale key); with _BM25_LOCK the storm must
     stay exception-free and every result hash-identical."""
-    from tools import concurrency_audit as CA
-
     report: dict = {}
-    CA.leg_b2(spark, "/root/testdata/sf0.001", report)
+    audit_env.Concurrency.leg_b2(spark, SF_AUDIT, str(tmp_path), report)
     assert report["bm25_memo_eviction_race"]["status"] == "match", report
 
 
@@ -631,163 +621,188 @@ def test_concurrency_mixed_corpus_sql_views_no_cross_talk(spark):
     unlocked register_views→spark.sql window reproducibly served the
     OTHER corpus's tables (cross-talk through the session-global view
     names); sql_over_views' atomic register+analyze closes it."""
-    from tools import concurrency_audit as CA
-
     report: dict = {}
-    CA.leg_c(spark, "/root/testdata/sf0.001", "/root/testdata/sf0.01", report)
+    audit_env.Concurrency.leg_c(spark, SF_AUDIT, audit_env.Concurrency.sf_dir_b, report)
     assert report["sql_view_mixed_corpus"]["status"] == "match", report
 
 
 def test_retry_audit_representative_queries_survive_task_failures():
-    """Subset of tools/retry_audit.py (ninth adversary class): every
+    """Subset of the retry audit class (ninth adversary class): every
     scan task's FIRST attempt fails and is retried (local[8,4] +
     fail-once identity stage on load_table), and the oracle compares
-    must still hash clean — recomputation determinism. Subprocess
+    must still hash clean — recomputation determinism. Own process
     because the master string (task maxFailures) is launch-fixed; one
     representative per execution shape: TPC-H agg, as-of join,
     persisted-index BM25, mapInPandas PQ kernel, driver-union-find
     CC."""
-    import os
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(repo, "tools", "retry_audit.py"),
-            "--only",
-            "q1_pricing_summary,asof_last_click,bm25_search_topk,"
-            "knn_pq_adc,near_dup_clusters",
-            "--report",
-            "/tmp/rtv_retry_audit_pytest.json",
-        ],
-        capture_output=True,
-        text=True,
+    rc, results, err = _run_audits(
+        "--classes", "retry", "--only",
+        "q1_pricing_summary,asof_last_click,bm25_search_topk,"
+        "knn_pq_adc,near_dup_clusters",
         timeout=600,
     )
-    assert r.returncode == 0, (r.stdout[-1500:], r.stderr[-800:])
-    assert "0 flagged" in r.stdout, r.stdout[-1500:]
+    assert rc == 0, (results, err[-1500:])
+    (res,) = results
+    assert res["pass"] and res["audited"] == 5 and res["flagged"] == 0, res
+    assert res["details"]["injected_failures"] > 0, res
+
+
+def test_retry_audit_flags_a_query_that_bypasses_the_patched_load_table(
+    spark, sf_smoke
+):
+    """The retry class's per-query anti-vacuity: a query whose job group
+    shows no failed task attempt ran un-injected and must come out
+    ``uninjected``, never ``match``. The stub reads parquet directly,
+    bypassing the patched ``load_table``, so no task of it fails."""
+    import os
+
+    group = "audit:retry:stub"
+    spark.sparkContext.setJobGroup(group, group)
+    spark.read.parquet(os.path.join(sf_smoke, "region.parquet")).collect()
+    entry = {"status": "match"}
+    assert audit_env.retry_verdict(spark, group, entry) == 0
+    assert entry["status"] == "uninjected", entry
+
+    # Control: a stage that does fail its first attempt keeps the match.
+    spark.sparkContext.setJobGroup("audit:retry:control", "control")
+    try:
+        audit_env.with_fail_once(spark.range(4)).collect()
+    except Exception:  # noqa: BLE001 — local[N] has maxFailures=1: the job dies
+        pass
+    spark.sparkContext.setLocalProperty("spark.jobGroup.id", None)
+    entry = {"status": "match"}
+    assert audit_env.retry_verdict(spark, "audit:retry:control", entry) > 0
+    assert entry == {"status": "match"}
 
 
 def test_spill_audit_representative_queries_survive_memory_pressure():
-    """Subset of tools/spill_audit.py (tenth adversary class): heavy
+    """Subset of the spill audit class (tenth adversary class): heavy
     queries on a replicated corpus under a capped heap with the managed
     (spillable) pool squeezed must still match their oracles, and the
-    run must actually spill (the tool's anti-vacuity gate). Subprocess
-    because the JVM heap is launch-fixed. The CERTIFIED config (16x /
-    900m / fraction 0.15) on a 5-query subset for test speed — smaller
-    heaps sit too close to the unmanaged-allocation OOM edge the
-    16x/500m probe mapped (q18's AQE broadcast needs the headroom)."""
-    import os
-    import subprocess
-    import sys
-
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    r = subprocess.run(
-        [
-            sys.executable,
-            os.path.join(repo, "tools", "spill_audit.py"),
-            "--only",
-            "q1_pricing_summary,top_orders_per_priority,asof_last_click,"
-            "minhash_lsh_dedup,text_profile",
-            "--report", "/tmp/rtv_spill_audit_pytest.json",
-        ],
-        capture_output=True,
-        text=True,
+    run must actually spill (the class's anti-vacuity gate, read from
+    the status store). Own process because the JVM heap is launch-fixed.
+    The CERTIFIED config (16x / 900m / fraction 0.15) on a 5-query
+    subset for test speed — smaller heaps sit too close to the
+    unmanaged-allocation OOM edge the 16x/500m probe mapped (q18's AQE
+    broadcast needs the headroom)."""
+    rc, results, err = _run_audits(
+        "--classes", "spill", "--only",
+        "q1_pricing_summary,top_orders_per_priority,asof_last_click,"
+        "minhash_lsh_dedup,text_profile",
         timeout=900,
     )
-    assert r.returncode == 0, (r.stdout[-1500:], r.stderr[-800:])
-    assert "0 flagged" in r.stdout, r.stdout[-1500:]
+    assert rc == 0, (results, err[-1500:])
+    (res,) = results
+    assert res["pass"] and res["audited"] == 5 and res["flagged"] == 0, res
+    assert res["details"]["disk_bytes_spilled"] > 0, res
 
 
-def test_locale_audit_string_queries_match_under_turkish_jvm():
-    """Subset of tools/locale_audit.py (eleventh adversary class): the
+def test_locale_audit_string_queries_match_under_turkish_jvm(tmp_path):
+    """Subset of the locale audit class (eleventh adversary class): the
     string-processing queries must stay oracle-exact on a JVM whose
     default locale is tr_TR — the dotless-i locale that corrupts any
-    case fold or collation consulting the default locale. The worker's
-    own sanity gates run inside the subprocess: JVM locale really tr_TR,
+    case fold or collation consulting the default locale. The leg's own
+    sanity gates run inside its process: JVM locale really tr_TR,
     default-vs-ROOT collators really disagree (the adversary has
     teeth), Spark ORDER BY stays binary."""
-    from tools import locale_audit as LA
-
-    rep = LA._run_worker(
-        "tr",
-        "TR",
-        "/root/testdata/sf0.001",
-        [
-            "text_profile",
-            "doc_fingerprint_clusters",
-            "bm25_search_topk",
-            "top_words",
-            "vote_share",
-        ],
-        "/tmp/rtv_locale_audit_pytest.json",
-    )
-    assert rep["_env"]["jvm_locale"] == "tr_TR", rep["_env"]
-    bad = {
-        k: v
-        for k, v in rep.items()
-        if not k.startswith("_") and v["status"] != "match"
-    }
+    names = [
+        "text_profile",
+        "doc_fingerprint_clusters",
+        "bm25_search_topk",
+        "top_words",
+        "vote_share",
+    ]
+    rc, leg = RA.launch("locale", 0, RA.Run(workdir=str(tmp_path), only=names))
+    assert rc == 0
+    assert leg["env"]["jvm_locale"] == "tr_TR", leg["env"]
+    assert set(leg["queries"]) == set(names)
+    bad = {k: v for k, v in leg["queries"].items() if v["status"] != "match"}
     assert not bad, bad
 
 
-def test_run_audits_parses_pass_and_fail(tmp_path, monkeypatch):
-    """tools/run_audits.py (the r9 single entry point) must classify a
-    class PASS only when the subprocess exits 0 AND its own summary line
-    reports 0 flagged — the per-query audits historically exit 0 even
-    when flagging, so the summary line is the authoritative signal, and
-    a tool that crashes before printing any summary must read as FAIL,
-    never vacuously pass."""
-    import textwrap
+def test_run_audits_pass_rule_reads_result_fields():
+    """The runner classifies a class PASS only when its worker exited 0
+    AND its structured result reports 0 flagged with every reported
+    count non-zero. The inputs are the nine shapes the old stdout parser
+    was pinned on: a class that flags but exits 0, or crashes before any
+    result, must read as FAIL, never vacuously pass."""
 
-    from tools import run_audits as RA
+    def res(audited, flagged, cross_checked=None, **details):
+        return {"class": "x", "audited": audited, "cross_checked": cross_checked,
+                "matched": audited - flagged, "flagged": flagged,
+                "seconds": 1.0, "details": {"flags": {}, **details}}
 
     cases = {
-        # (stdout-producing script body, expected ok)
-        "green": ("print('# 6 audited, 6 match, 0 flagged')", True),
-        # flags but exits 0 — the null/float/order/extreme/split shape
-        "flagged_exit0": ("print('# 6 audited, 5 match, 1 flagged')", False),
-        # exits 1 despite a clean-looking line
-        "exit1": (
-            "import sys; print('# 1 audited, 1 match, 0 flagged'); sys.exit(1)",
-            False,
-        ),
-        # crashes before any summary — must not vacuously pass
-        "nosummary": ("print('hello'); raise SystemExit(0)", False),
-        # fuzz shape: per-seed lines plus an all-seeds total — the LAST
-        # 'flagged' count is authoritative
-        "fuzz_total_last": (
-            "print('# seed 1: 1 flagged')\n"
-            "print('## all seeds: 196 audited, 0 flagged')",
-            True,
-        ),
+        # (result, worker exit code, expected pass)
+        "green": (res(6, 0), 0, True),
+        # flags but exits 0 — the per-query classes' shape
+        "flagged_exit0": (res(6, 1), 0, False),
+        # exits 1 despite a clean-looking result
+        "exit1": (res(1, 0), 1, False),
+        # crashed before writing any result — must not vacuously pass
+        "no_result": (None, 0, False),
+        # fuzz shape: per-seed counts in details, the top-level total is
+        # what the rule reads
+        "fuzz_total": (res(196, 0, flagged_per_seed={1: 0, 2: 0}), 0, True),
+        "fuzz_one_seed_flagged": (res(196, 1, flagged_per_seed={1: 1, 2: 0}), 0, False),
         # zero audited — a renamed query or emptily-intersecting --only
         # must not certify green vacuously (r9 review finding)
-        "zero_audited": ("print('# 0 audited, 0 match, 0 flagged')", False),
-        # the concurrency summary says 'checks', not 'audited'
-        "checks_shape": ("print('# 4 checks, 4 match, 0 flagged')", True),
+        "zero_audited": (res(0, 0), 0, False),
+        # concurrency counts checks, not registry queries
+        "checks_shape": (res(4, 0), 0, True),
         # tz/locale shape: a SECOND count (the cross-check leg) that can
         # go vacuous on its own while the first stays non-zero — every
-        # count must be > 0 (r9 review finding #2)
-        "tz_shape": (
-            "print('# 98 audited under X, 16 cross-checked vs Y, 0 flagged')",
-            True,
-        ),
-        "tz_vacuous_crosscheck": (
-            "print('# 98 audited under X, 0 cross-checked vs Y, 0 flagged')",
-            False,
-        ),
+        # reported count must be > 0 (r9 review finding #2)
+        "tz_shape": (res(98, 0, cross_checked=16), 0, True),
+        "tz_vacuous_crosscheck": (res(98, 0, cross_checked=0), 0, False),
     }
-    monkeypatch.setattr(RA, "TOOLS_DIR", str(tmp_path))
-    for name, (body, expected) in cases.items():
-        (tmp_path / f"{name}_audit.py").write_text(textwrap.dedent(body))
-        ok, _elapsed, summary = RA.run_one(name, [])
-        assert ok is expected, (name, summary)
+    for name, (result, rc, expected) in cases.items():
+        assert RA.passed(result, rc) is expected, name
 
 
-def test_scan_audit_zero_scan_detection(spark, sf_smoke, tmp_path, monkeypatch):
+def test_cross_leg_invariance_flags_drift_and_missing_hashes():
+    """The tz/locale cross-leg check: equal hashes pass; drift, a hash
+    missing on either leg, an errored hash (even when both legs errored
+    alike) and a query missing from leg B all flag."""
+    run = RA.Run(workdir="/nonexistent", only=["q1_pricing_summary", "user_sessions",
+                                               "order_date_parts", "activation_funnel",
+                                               "asof_last_click"])
+    a = {
+        "q1_pricing_summary": {"status": "match", "spark_hash": "h1"},
+        "user_sessions": {"status": "match", "spark_hash": "h2"},
+        "order_date_parts": {"status": "match"},
+        "activation_funnel": {"status": "match", "spark_hash": "error:X"},
+        "asof_last_click": {"status": "match", "spark_hash": "h5"},
+    }
+    b = {
+        "q1_pricing_summary": {"status": "match", "spark_hash": "h1"},
+        "user_sessions": {"status": "match", "spark_hash": "DRIFT"},
+        "order_date_parts": {"status": "match", "spark_hash": "h3"},
+        "activation_funnel": {"status": "match", "spark_hash": "error:X"},
+    }
+    legs = [{"env": {}, "queries": a}, {"env": {}, "queries": b}]
+    result = RA.invariance(audit_env.Tz(), legs, run)
+    assert result["audited"] == 5 and result["cross_checked"] == 5
+    assert set(result["details"]["flags"]) == {
+        "user_sessions", "order_date_parts", "activation_funnel", "asof_last_click",
+    }, result
+    assert not RA.passed(result, 0)
+
+
+def test_corpus_prepare_gives_each_run_its_own_dir(tmp_path):
+    """Two preparations of one class in one process get distinct dirs,
+    and the first stays readable after the second — a pytest pin and a
+    manual sweep can no longer delete each other's live corpus."""
+    import pyarrow.parquet as pq
+
+    first, _ = audit_corpus.Null().prepare(SF_AUDIT, str(tmp_path))
+    second, _ = audit_corpus.Null().prepare(SF_AUDIT, str(tmp_path))
+    assert first != second
+    for d in (first, second):
+        assert pq.read_table(f"{d}/events.parquet").num_rows > 0
+
+
+def test_scan_audit_zero_scan_detection(spark, sf_smoke, tmp_path, monkeypatch, capsys):
     """Detection-power probe for the scan gate's downward-drift check
     (ADVICE r9 #4): EXPECTED allowances are upper bounds, so before the
     baseline a query that silently stopped scanning a table it is known
@@ -796,55 +811,57 @@ def test_scan_audit_zero_scan_detection(spark, sf_smoke, tmp_path, monkeypatch):
     table the query no longer scans flags; a MISSING baseline entry
     flags (forces regeneration on new registrations); a baseline from a
     different sf_dir skips the zero-check (AQE shapes compare
-    like-for-like only) instead of false-flagging."""
+    like-for-like only) instead of false-flagging. Then the regeneration
+    refusals, and the per-query JSON lines staying valid JSON when an
+    error message carries a double quote."""
     import json as _json
 
     from tools import scan_audit
 
     base = tmp_path / "scan_baseline.json"
     monkeypatch.setattr(scan_audit, "BASELINE_PATH", str(base))
-    argv = ["scan_audit.py", "--sf-dir", sf_smoke, "--only", "text_profile"]
-    monkeypatch.setattr(sys, "argv", argv)
+
+    def flagged() -> int:
+        return scan_audit.sweep(sf_smoke, ["text_profile"])["flagged"]
 
     base.write_text(_json.dumps(
         {"sf_dir": sf_smoke, "counts": {"text_profile": {"documents": 1}}}
     ))
-    assert scan_audit.main() == 0
+    assert flagged() == 0
 
     base.write_text(_json.dumps(
         {"sf_dir": sf_smoke,
          "counts": {"text_profile": {"documents": 1, "region": 1}}}
     ))
-    assert scan_audit.main() == 1, "lost region scan not flagged"
+    assert flagged() == 1, "lost region scan not flagged"
 
     base.write_text(_json.dumps({"sf_dir": sf_smoke, "counts": {}}))
-    assert scan_audit.main() == 1, "missing baseline entry not flagged"
+    assert flagged() == 1, "missing baseline entry not flagged"
 
     base.write_text(_json.dumps(
         {"sf_dir": "/nonexistent/elsewhere",
          "counts": {"text_profile": {"documents": 1, "region": 1}}}
     ))
-    assert scan_audit.main() == 0, "sf-mismatched baseline must skip, not flag"
+    assert flagged() == 0, "sf-mismatched baseline must skip, not flag"
 
     # Regeneration must not launder drift (r10 review finding): with a
-    # baseline claiming a scan the query has lost, --write-baseline has
-    # to refuse AND leave the old baseline untouched.
+    # baseline claiming a scan the query has lost, the write has to
+    # refuse AND leave the old baseline untouched.
     poisoned = _json.dumps(
         {"sf_dir": sf_smoke,
          "counts": {"text_profile": {"documents": 1, "region": 1}}}
     )
     base.write_text(poisoned)
-    monkeypatch.setattr(
-        sys, "argv", ["scan_audit.py", "--sf-dir", sf_smoke, "--write-baseline"]
-    )
     # Full-sweep regen would run all 98 queries; narrow the registry to
-    # the one query under test (regen requires no --only by design).
+    # the one query under test (regen requires a full sweep by design).
     from realtime_voting_data_engineering_spark import queries as Q
 
     monkeypatch.setattr(
         Q, "REGISTRY", {"text_profile": Q.REGISTRY["text_profile"]}
     )
-    assert scan_audit.main() == 1, "write-baseline did not refuse on drift"
+    assert scan_audit.write_baseline(sf_smoke) == 1, (
+        "write-baseline did not refuse on drift"
+    )
     assert base.read_text() == poisoned, "refused write still mutated baseline"
 
     # ...but ADVISORY flags must NOT block the write, or the documented
@@ -855,26 +872,41 @@ def test_scan_audit_zero_scan_detection(spark, sf_smoke, tmp_path, monkeypatch):
         {"sf_dir": sf_smoke,
          "counts": {"some_removed_query": {"documents": 1}}}
     ))
-    assert scan_audit.main() == 0, "advisory flags blocked regeneration"
+    assert scan_audit.write_baseline(sf_smoke) == 0, (
+        "advisory flags blocked regeneration"
+    )
     regen = _json.loads(base.read_text())
     assert set(regen["counts"]) == {"text_profile"}, regen
     assert regen["counts"]["text_profile"].get("documents") == 1
 
-    # Cross-sf regen must be refused without --force-sf-change: the sf
+    # Cross-sf regen must be refused without force_sf_change: the sf
     # mismatch disables every drift check, so the overwrite would
     # launder a lost scan through the side door (r10 review #2,
-    # finding 2). argparse errors exit with SystemExit(2).
+    # finding 2).
     import pytest as _pytest
 
-    monkeypatch.setattr(sys, "argv", [
-        "scan_audit.py", "--sf-dir", "/root/testdata/sf0.01",
-        "--write-baseline",
-    ])
     with _pytest.raises(SystemExit):
-        scan_audit.main()
+        scan_audit.write_baseline(scan_audit.SF_DIR)
     assert _json.loads(base.read_text())["sf_dir"] == sf_smoke, (
         "cross-sf refusal still mutated the baseline"
     )
+
+    # A query error whose message carries a double quote: the per-query
+    # line is still one valid JSON object and the result flags it.
+    def broken(spark_, sf_dir_):
+        raise ValueError('column "votes" is ambiguous')
+
+    import dataclasses
+
+    spec = dataclasses.replace(Q.REGISTRY["text_profile"], fn=broken)
+    monkeypatch.setattr(Q, "REGISTRY", {"broken": spec})
+    capsys.readouterr()
+    result = scan_audit.sweep(sf_smoke, ["broken"])
+    lines = [_json.loads(ln) for ln in capsys.readouterr().out.splitlines()
+             if ln.startswith("{")]
+    assert lines[-1]["query"] == "broken" and '"votes"' in lines[-1]["detail"]
+    assert result["flagged"] == 1 and '"votes"' in result["details"]["flags"]["broken"]
+    _json.loads(_json.dumps(result))
 
 
 def test_bench_assemble_output_failure_semantics(capsys):

@@ -60,8 +60,8 @@ contamination scan tokenizing documents 3×, and the gap fill
 aggregating events twice) fails loudly instead of compounding for
 four rounds before a verdict flags the drift.
 
-Run: ``python tools/scan_audit.py [--sf-dir ...] [--only a,b]
-[--write-baseline]``
+Run: ``python tools/run_audits.py --classes scan [--only a,b]``; regenerate
+the baseline with ``python tools/scan_audit.py --write-baseline``.
 """
 
 from __future__ import annotations
@@ -141,76 +141,70 @@ EXACT: dict[tuple[str, str], tuple[int, str]] = {
 BASELINE_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              "scan_baseline.json")
 
+#: The corpus the sweep and the committed baseline use.
+SF_DIR = "/root/testdata/sf0.01"
 
-def main() -> int:
-    ap = argparse.ArgumentParser()
-    ap.add_argument("--sf-dir", default="/root/testdata/sf0.01")
-    ap.add_argument("--only", default=None, help="comma-separated query names")
-    ap.add_argument(
-        "--write-baseline", action="store_true",
-        help="record this sweep's observed per-table scan counts as the "
-        "zero-check baseline (full sweep only; refused on over-scan, "
-        "lost-scan, or error flags — missing/stale baseline entries are "
-        "exactly what regeneration resolves and do not block it)",
+#: ``tools/run_audits.py`` table entry: one leg in a default JVM.
+legs = ({},)
+
+
+def run_leg(leg: int, run) -> dict:
+    return sweep(SF_DIR, run.only)
+
+
+def _load_baseline(sf_dir: str, write: bool, force_sf_change: bool) -> dict | None:
+    """The committed baseline, or None when there is none or it was
+    recorded at another sf_dir (AQE shapes compare like-for-like only).
+    The existing baseline is loaded EVEN for a regeneration: the regen
+    sweep must first pass the zero-checks against the old baseline, or
+    regenerating for an unrelated reason would silently bless a lost
+    scan as the new green reference (r10 review finding)."""
+    if not os.path.exists(BASELINE_PATH):
+        return None
+    with open(BASELINE_PATH) as fh:
+        baseline = json.load(fh)
+    if baseline.get("sf_dir") == sf_dir:
+        return baseline
+    if write and not force_sf_change:
+        # Cross-sf regen with no drift checks would launder a lost scan
+        # through the sf side door (r10 review #2).
+        raise SystemExit(
+            f"--write-baseline at {sf_dir} but the existing baseline was "
+            f"recorded at {baseline.get('sf_dir')}: every zero-check would "
+            "be skipped before the overwrite. Re-run at the baseline's "
+            "sf_dir first, or pass --force-sf-change to accept that"
+        )
+    print(
+        f"# NOTE: baseline was recorded at {baseline.get('sf_dir')}, "
+        f"this run is {sf_dir} — zero-scan checks SKIPPED "
+        "(AQE shapes compare like-for-like only)",
+        flush=True,
     )
-    ap.add_argument(
-        "--force-sf-change", action="store_true",
-        help="allow --write-baseline at a different sf_dir than the "
-        "existing baseline's. Without this, cross-sf regen is refused: "
-        "the sf mismatch disables every zero-check, so the write would "
-        "silently bless any drift the old baseline was guarding",
-    )
-    args = ap.parse_args()
-    only = set(args.only.split(",")) if args.only else None
-    if args.write_baseline and only is not None:
-        ap.error("--write-baseline requires a full sweep (no --only)")
+    return None
 
-    # The existing baseline is loaded EVEN under --write-baseline: the
-    # regen sweep must first pass the zero-checks against the old
-    # baseline, or regenerating for an unrelated reason would silently
-    # bless a lost scan as the new green reference (r10 review finding).
-    baseline: dict | None = None
-    if os.path.exists(BASELINE_PATH):
-        with open(BASELINE_PATH) as fh:
-            baseline = json.load(fh)
-        if baseline.get("sf_dir") != args.sf_dir:
-            if args.write_baseline and not args.force_sf_change:
-                # Cross-sf regen with no drift checks would launder a
-                # lost scan through the sf side door (r10 review #2).
-                ap.error(
-                    f"--write-baseline at {args.sf_dir} but the existing "
-                    f"baseline was recorded at {baseline.get('sf_dir')}: "
-                    "every zero-check would be skipped before the "
-                    "overwrite. Re-run at the baseline's sf_dir first, "
-                    "or pass --force-sf-change to accept that"
-                )
-            print(
-                f"# NOTE: baseline was recorded at {baseline.get('sf_dir')}, "
-                f"this run is {args.sf_dir} — zero-scan checks SKIPPED "
-                "(AQE shapes compare like-for-like only)",
-                flush=True,
-            )
-            baseline = None
 
+def _progress(name: str, flag: str) -> None:
+    print(json.dumps({"class": "scan", "query": name,
+                      "status": "scan-shape" if flag else "match",
+                      **({"detail": flag} if flag else {})}), flush=True)
+
+
+def _scan(sf_dir: str, only, baseline: dict | None):
+    """Run every registered query (narrowed to ``only``) and check its
+    executed plan. Returns (blocking, advisory, observed, audited).
+
+    Two flag severities (r10 review): BLOCKING (over-scan, lost scan,
+    query error — real shape problems) and ADVISORY (missing/stale
+    baseline entries — bookkeeping that regeneration itself resolves).
+    Both fail a sweep; only blocking flags refuse a regeneration,
+    otherwise the documented "regenerate after new registrations"
+    workflow would be circular: the new query's missing entry would
+    forbid the very write that creates it."""
     from realtime_voting_data_engineering_spark import queries as Q
     from realtime_voting_data_engineering_spark.session import get_spark
 
-    if only is not None:
-        # A stale/typo'd name must fail loudly, not silently narrow the
-        # sweep to a vacuous green (r9 review finding).
-        unknown = only - Q.REGISTRY.keys()
-        if unknown:
-            ap.error(f"unknown query names: {sorted(unknown)}")
-
     spark = get_spark(app_name="scan-sweep")
     spark.sparkContext.setLogLevel("ERROR")
-    # Two flag severities (r10 review): BLOCKING (over-scan, lost scan,
-    # query error — real shape problems) and ADVISORY (missing/stale
-    # baseline entries — bookkeeping that regeneration itself resolves).
-    # Both fail a normal run; only blocking flags refuse a
-    # --write-baseline run, otherwise the documented "regenerate after
-    # new registrations" workflow would be circular: the new query's
-    # missing entry would forbid the very write that creates it.
     blocking: dict[str, str] = {}
     advisory: dict[str, str] = {}
     observed: dict[str, dict[str, int]] = {}
@@ -220,13 +214,15 @@ def main() -> int:
         if only is not None and name not in only:
             continue
         audited += 1
+        spark.sparkContext.setJobGroup(f"audit:scan:{name}", name)
         try:
-            df = Q.REGISTRY[name].fn(spark, args.sf_dir)
+            df = Q.REGISTRY[name].fn(spark, sf_dir)
             df.collect()
             plan_txt = df._jdf.queryExecution().executedPlan().toString()
         except Exception as exc:  # noqa: BLE001 — sweep must survive any query
             blocking[name] = f"error: {type(exc).__name__}: {str(exc)[:200]}"
             errored.add(name)
+            _progress(name, blocking[name])
             continue
         # An executed AQE plan prints the FINAL plan, then the pre-AQE
         # "== Initial Plan ==". Upper bounds count the final section
@@ -251,6 +247,7 @@ def main() -> int:
                 "needs extending before this query's bounds are trusted"
             )
             errored.add(name)
+            _progress(name, blocking[name])
             continue
         final = sections[0]
         initial = sections[1] if len(sections) > 1 else sections[0]
@@ -293,62 +290,99 @@ def main() -> int:
                 "no baseline entry — regenerate tools/scan_baseline.json "
                 "with --write-baseline after triaging the query's shape"
             )
-        if name in blocking or name in advisory:
-            merged = "; ".join(
-                p for p in (blocking.get(name), advisory.get(name)) if p
-            )
-            print(f'{{"query": "{name}", "status": "scan-shape", '
-                  f'"detail": "{merged}"}}', flush=True)
+        _progress(name, "; ".join(
+            p for p in (blocking.get(name), advisory.get(name)) if p
+        ))
     if baseline is not None and only is None:
         # Errored queries ARE registered — they're reported above, not
         # here (misfiling them as stale names would direct the operator
         # to regenerate the baseline instead of fixing the query).
-        stale = sorted(
-            set(baseline.get("counts", {})) - set(observed) - errored
-        )
+        stale = sorted(set(baseline.get("counts", {})) - set(observed) - errored)
         if stale:
             advisory["<baseline>"] = (
                 f"baseline names not in registry: {stale} — regenerate"
             )
-    flagged = {
+    return blocking, advisory, observed, audited
+
+
+def sweep(sf_dir: str, only=None) -> dict:
+    """The scan gate as an audit-class result (see ``tools/run_audits.py``):
+    every blocking or advisory flag counts. The stale-baseline advisory
+    is keyed ``<baseline>`` — it is not an audited query, so it stays
+    out of the match arithmetic (ADVICE r10 #2) but still fails the
+    class: a baseline naming retired queries needs a regen."""
+    blocking, advisory, _observed, audited = _scan(
+        sf_dir, only, _load_baseline(sf_dir, write=False, force_sf_change=False)
+    )
+    flags = {
         n: "; ".join(p for p in (blocking.get(n), advisory.get(n)) if p)
-        for n in blocking.keys() | advisory.keys()
+        for n in sorted(blocking.keys() | advisory.keys())
     }
-    # The stale-baseline advisory is keyed "<baseline>" — it is not an
-    # audited query, so it must not enter the audited/match arithmetic
-    # (ADVICE r10 #2). It still counts toward the exit code below: a
-    # baseline naming retired queries needs a regen.
-    per_query = {n: d for n, d in flagged.items() if n != "<baseline>"}
-    print(f"\n# {audited} audited, {audited - len(per_query)} match, "
-          f"{len(per_query)} flagged")
-    for n, d in sorted(per_query.items()):
-        print(f"--- {n}: {d}")
-    if "<baseline>" in flagged:
-        print(f"--- advisory: {flagged['<baseline>']}")
-    if args.write_baseline:
-        if blocking:
-            print("# --write-baseline REFUSED: sweep has blocking flags "
-                  f"({sorted(blocking)})")
-            return 1
-        for n, d in sorted(advisory.items()):
-            print(f"# advisory (resolved by this write): {n}: {d}")
-        empty = sorted(n for n, c in observed.items() if not c)
-        if empty:
-            # Visibility, not a failure: with initial-plan counting the
-            # only legitimately empty entries are checkpoint-hidden
-            # shapes (the EXACT map must cover those). Anything else
-            # here means the zero-check will be vacuous for that query.
-            print(f"# NOTE: empty baseline counts (zero-check vacuous, "
-                  f"must be EXACT-covered): {empty}")
-        with open(BASELINE_PATH, "w") as fh:
-            json.dump(
-                {"sf_dir": args.sf_dir, "counts": observed}, fh,
-                indent=1, sort_keys=True,
-            )
-            fh.write("\n")
-        print(f"# baseline written: {BASELINE_PATH} ({len(observed)} queries)")
-        return 0  # advisories were bookkeeping this write just resolved
-    return 1 if flagged else 0
+    per_query = [n for n in flags if n != "<baseline>"]
+    return {
+        "class": "scan",
+        "audited": audited,
+        "cross_checked": None,
+        "matched": audited - len(per_query),
+        "flagged": len(flags),
+        "seconds": None,
+        "details": {"flags": flags},
+    }
+
+
+def write_baseline(sf_dir: str, force_sf_change: bool = False) -> int:
+    """Record a full sweep's per-table scan counts as the zero-check
+    baseline. Refused (exit 1, file untouched) on any BLOCKING flag;
+    ADVISORY flags are the bookkeeping this write resolves. A baseline
+    recorded at another sf_dir is only replaced with
+    ``force_sf_change``, since the mismatch disables every drift check
+    before the overwrite."""
+    baseline = _load_baseline(sf_dir, write=True, force_sf_change=force_sf_change)
+    blocking, advisory, observed, _audited = _scan(sf_dir, None, baseline)
+    if blocking:
+        print("# --write-baseline REFUSED: sweep has blocking flags "
+              f"({json.dumps(blocking)})")
+        return 1
+    for n, d in sorted(advisory.items()):
+        print(f"# advisory (resolved by this write): {n}: {d}")
+    empty = sorted(n for n, c in observed.items() if not c)
+    if empty:
+        # Visibility, not a failure: with initial-plan counting the
+        # only legitimately empty entries are checkpoint-hidden shapes
+        # (the EXACT map must cover those). Anything else here means the
+        # zero-check will be vacuous for that query.
+        print(f"# NOTE: empty baseline counts (zero-check vacuous, "
+              f"must be EXACT-covered): {empty}")
+    with open(BASELINE_PATH, "w") as fh:
+        json.dump({"sf_dir": sf_dir, "counts": observed}, fh, indent=1, sort_keys=True)
+        fh.write("\n")
+    print(f"# baseline written: {BASELINE_PATH} ({len(observed)} queries)")
+    return 0
+
+
+def main() -> int:
+    ap = argparse.ArgumentParser(
+        description="Regenerate the scan baseline; the gate itself runs as "
+        "`python tools/run_audits.py --classes scan`."
+    )
+    ap.add_argument(
+        "--write-baseline", action="store_true",
+        help="record a full sweep's observed per-table scan counts as the "
+        "zero-check baseline (refused on over-scan, lost-scan, or error "
+        "flags — missing/stale baseline entries are exactly what "
+        "regeneration resolves and do not block it)",
+    )
+    ap.add_argument(
+        "--force-sf-change", action="store_true",
+        help="allow --write-baseline when the existing baseline was "
+        "recorded at a different sf_dir",
+    )
+    args = ap.parse_args()
+    if not args.write_baseline:
+        result = sweep(SF_DIR)
+        print(json.dumps(result))
+        return 1 if result["flagged"] else 0
+    return write_baseline(SF_DIR, args.force_sf_change)
 
 
 if __name__ == "__main__":
