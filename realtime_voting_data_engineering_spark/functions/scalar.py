@@ -74,8 +74,8 @@ def finite_or_null(col: Column | str) -> Column:
 
 
 #: Event-time validity window (r7 extreme-value audit,
-#: ``tools/extreme_audit.py``). Event analytics REQUIRES a bounded time
-#: domain, exactly as watermarking does: the gap-fill grid and the
+#: ``tools/run_audits.py --classes extreme``). Event analytics REQUIRES a
+#: bounded time domain, exactly as watermarking does: the gap-fill grid and the
 #: rollup cascade are DERIVED from min/max(ts), so one corrupted
 #: year-38503 row asks ``sequence()`` for ~300M buckets and kills the
 #: whole job (measured: SparkContext shutdown at sf0.001); timestamps
@@ -121,9 +121,9 @@ ORACLE_DEC_VALUE = (
 )
 
 
-#: The REVERSE conversion mirror (found by tools/fuzz_audit.py seed 2/3
-#: on the rollup cascade): DuckDB's NATIVE DECIMAL→DOUBLE cast converts
-#: the scaled int128 to double and THEN divides by 10^scale — two
+#: The REVERSE conversion mirror (found by ``tools/run_audits.py --classes
+#: fuzz`` seed 2/3 on the rollup cascade): DuckDB's NATIVE DECIMAL→DOUBLE cast
+#: converts the scaled int128 to double and THEN divides by 10^scale — two
 #: roundings, off by one ulp from the correctly-rounded conversion on
 #: ~13% of random decimals whose scaled integer exceeds 2^53 (|v| >
 #: 9e9 at scale 6; measured 2691/20001). Spark's Decimal→double
@@ -177,8 +177,8 @@ def dec(col: Column | str, precision: int = 18, scale: int = 2) -> Column:
     cast (``finite_or_null``): under ANSI mode (Spark 4 default — the
     driver's vanilla session) ``CAST(NaN AS DECIMAL)`` throws, so one
     non-finite measure in 100 TB would kill the whole job (r7 float
-    audit, ``tools/float_audit.py``); DuckDB hard-errors on the same
-    cast even under TRY_CAST. Exclude-as-NULL is the one semantics both
+    audit, ``tools/run_audits.py --classes float``); DuckDB hard-errors on the
+    same cast even under TRY_CAST. Exclude-as-NULL is the one semantics both
     engines express deterministically, and oracles over poisonable
     float columns mirror it with ``CASE WHEN isfinite(x) THEN x END``.
 

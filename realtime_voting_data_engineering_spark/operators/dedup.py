@@ -431,22 +431,28 @@ def minhash_dedup_pairs(
     )
 
 
+#: The auto engine's size gate: pair sets of at most this many edges
+#: run the driver union-find, larger ones the distributed propagation.
+_CC_DRIVER_MAX_EDGES = 1_000_000
+
+#: Round cap for both distributed engines; not converging raises.
+_CC_MAX_ROUNDS = 20
+
+
 def connected_components(
     pairs: DataFrame,
     id_a: str = "id_a",
     id_b: str = "id_b",
-    max_iter: int = 20,
     method: str = "auto",
-    driver_max_edges: int = 1_000_000,
 ) -> DataFrame:
     """Connected components over the near-dup pair graph — the dedup
     endgame: transitive closure turns pairs into clusters so a pipeline
     can keep one canonical doc per cluster.
 
-    Three engines behind one signature (identical output):
+    Three engines, two methods (identical output):
 
     - ``method="auto"`` (default) — count the (just-checkpointed) pair
-      set and dispatch: ≤ ``driver_max_edges`` edges → driver
+      set and dispatch: ≤ ``_CC_DRIVER_MAX_EDGES`` edges → driver
       union-find; overflow → distributed propagation. The count is the
       materialization the first distributed round would have paid
       anyway. This is the same size-gated strategy Spark itself
@@ -463,18 +469,20 @@ def connected_components(
       union-find state, the broadcast size class). On a real cluster
       the distributed scheduling floor is higher still, making the
       gate conservative.
-    - ``method="driver"`` — single-pass union-find over the collected
+
+      The driver engine is a single-pass union-find over the collected
       pair set with min-id roots; exact, deterministic, and
       row-identical to the distributed engines (pytest-pinned on
-      planted and hypothesis-random graphs). Falls back to
-      ``propagate`` if a NULL id appears (production pair generators
-      cannot emit one — the ``id_a < id_b`` canonical filter drops
-      NULL comparisons — so this is a defensive guard, not a path).
-    - ``method="propagate"`` — iterative min-label propagation: every
-      node starts labeled with itself; each round every node takes the
-      min of its own and its neighbors' labels; fixpoint in O(component
-      diameter) rounds. Right distributed default for near-dup graphs,
-      whose clusters are shallow (diameter ~2-4).
+      planted and hypothesis-random graphs). It declines when a NULL id
+      appears (production pair generators cannot emit one — the
+      ``id_a < id_b`` canonical filter drops NULL comparisons — so this
+      is a defensive guard, not a path) and propagation answers.
+      Propagation is iterative min-label propagation: every node starts
+      labeled with itself; each round every node takes the min of its
+      own and its neighbors' labels; fixpoint in O(component diameter)
+      rounds. Right distributed default for near-dup graphs, whose
+      clusters are shallow (diameter ~2-4; measured 1.3-1.7× faster
+      than star there, SCALE.md).
     - ``method="star"`` — alternating large-star/small-star contraction
       (Kiveris et al., "Connected Components in MapReduce and Beyond"):
       each round rewires edges toward each neighborhood's minimum, so
@@ -482,10 +490,10 @@ def connected_components(
       components converge in O(log n) rounds where propagation needs
       O(n). Use for adversarial/unknown graph shapes.
 
-    Spark-native iteration discipline (both engines): each round
-    localCheckpoints the working frame (truncating lineage that would
-    otherwise grow per round) with one convergence action per round.
-    Raises if max_iter rounds don't converge.
+    Spark-native iteration discipline (both distributed engines): each
+    round localCheckpoints the working frame (truncating lineage that
+    would otherwise grow per round) with one convergence action per
+    round. Raises if ``_CC_MAX_ROUNDS`` rounds don't converge.
 
     Output: (id_a-named column, cluster_id) for every node appearing in
     a pair; cluster_id = min doc id of the component."""
@@ -516,23 +524,22 @@ def connected_components(
     # silently corrupt components. Callers handing in such a plan must
     # materialize it themselves (eager localCheckpoint / write+read)
     # before calling; this function assumes plan determinism.
-    pairs = pairs.localCheckpoint(eager=False)
-    if method in ("auto", "driver"):
-        # Size gate on the checkpointed pair set: the count job IS the
-        # materialization the first distributed round would have paid
-        # anyway, and the collect that follows reads the cache. (A
-        # fused limit(N+1).collect() probe was measured SLOWER here:
-        # CollectLimit's incremental partition scale-up re-runs the
-        # un-cached upstream plan once per retry round.)
-        if method == "driver" or pairs.count() <= driver_max_edges:
-            out = _connected_components_driver(pairs, id_a, id_b)
-            if out is not None:
-                return out
-        method = "propagate"  # overflow or NULL id — distributed fallback
-    if method == "star":
-        return _connected_components_star(pairs, id_a, id_b, max_iter)
-    if method != "propagate":
+    if method not in ("auto", "star"):
         raise ValueError(f"unknown method {method!r}")
+    pairs = pairs.localCheckpoint(eager=False)
+    if method == "star":
+        return _connected_components_star(pairs, id_a, id_b)
+    # Size gate on the checkpointed pair set: the count job IS the
+    # materialization the first distributed round would have paid
+    # anyway, and the collect that follows reads the cache. (A fused
+    # limit(N+1).collect() probe was measured SLOWER here: CollectLimit's
+    # incremental partition scale-up re-runs the un-cached upstream plan
+    # once per retry round.)
+    if pairs.count() <= _CC_DRIVER_MAX_EDGES:
+        out = _connected_components_driver(pairs, id_a, id_b)
+        if out is not None:
+            return out
+    # Overflow or NULL id: distributed min-label propagation.
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
@@ -545,7 +552,7 @@ def connected_components(
         .withColumn("label", F.col("id"))
         .localCheckpoint()
     )
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ROUNDS):
         # Each node's OLD label rides the union (non-null only on the
         # self row, exactly one per id), so convergence is read off the
         # aggregated frame itself — no per-round labels⨝new_labels join.
@@ -575,7 +582,7 @@ def connected_components(
                 F.col("id").alias(id_a), F.col("label").alias("cluster_id")
             )
     raise RuntimeError(
-        f"connected_components did not converge in {max_iter} rounds"
+        f"connected_components did not converge in {_CC_MAX_ROUNDS} rounds"
     )
 
 
@@ -687,7 +694,7 @@ def _cc_small_star(edges: DataFrame) -> DataFrame:
 
 
 def _connected_components_star(
-    pairs: DataFrame, id_a: str, id_b: str, max_iter: int
+    pairs: DataFrame, id_a: str, id_b: str
 ) -> DataFrame:
     """Alternating large-star/small-star edge contraction; converges when
     the edge set is a fixpoint, at which point every component is a star
@@ -715,7 +722,7 @@ def _connected_components_star(
         .distinct()
     )
     n_edges = edges.count()
-    for _ in range(max_iter):
+    for _ in range(_CC_MAX_ROUNDS):
         # Lazy checkpoint + carried count: the size count is the
         # materializing action, and last round's size is remembered
         # instead of re-counted — 2 jobs per round instead of 4.
@@ -737,7 +744,8 @@ def _connected_components_star(
             )
         edges, n_edges = new_edges, n_new
     raise RuntimeError(
-        f"connected_components(star) did not converge in {max_iter} rounds"
+        f"connected_components(star) did not converge in {_CC_MAX_ROUNDS} "
+        "rounds"
     )
 
 

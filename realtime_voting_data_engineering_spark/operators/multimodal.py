@@ -178,7 +178,7 @@ def sample_frames(
     # guard matters because Spark's greatest() IGNORES null operands, so
     # greatest(NULL - 1, 0) = 0 would silently emit frame 0 for media
     # whose metadata is missing (SQL range(0, NULL) correctly yields
-    # nothing — tools/null_audit.py finding).
+    # nothing — tools/run_audits.py --classes null finding).
     idxs = F.when(
         F.col("meta.n_frames").isNotNull(),
         F.sequence(

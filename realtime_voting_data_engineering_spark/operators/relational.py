@@ -306,8 +306,8 @@ def asof_join(
     # join semantics — Spark's ASC NULLS FIRST sort would attach a
     # NULL-time right row to the whole partition, and the NULL-key
     # partition would happily match "unknown" to "unknown" (DuckDB's
-    # native ASOF JOIN excludes both — tools/null_audit.py findings).
-    # Left rows keep the matching contract for free: NULL-time lefts
+    # native ASOF JOIN excludes both — ``tools/run_audits.py --classes null``
+    # findings). Left rows keep the matching contract for free: NULL-time lefts
     # sort before every surviving right row and NULL-key lefts share
     # their partition with no right rows, so both get NULL attach while
     # staying in the output (left-join semantics).

@@ -85,9 +85,9 @@ def valid_vectors(
     (``np.array(list(col))`` batches, codebook matmuls) would otherwise
     throw on the first NULL — one bad row killing a 1000-executor job.
     FINITENESS is part of the contract since the r7 float audit
-    (``tools/float_audit.py``): a NaN component makes every cosine NaN,
-    and NaN sorts ABOVE every real score in descending top-k in BOTH
-    engines — the poisoned row would win every ranking while
+    (``tools/run_audits.py --classes float``): a NaN component makes every
+    cosine NaN, and NaN sorts ABOVE every real score in descending top-k in
+    BOTH engines — the poisoned row would win every ranking while
     hash-matching the oracle, i.e. semantically-garbage agreement; and
     the int8 quantization cast of a NaN code throws under ANSI mode
     (the default in the driver's vanilla Spark 4 session). Exclusion
@@ -156,9 +156,9 @@ def collect_query_matrix(queries: DataFrame, id_col: str, vec_col: str):
     taking the first row's length would make the result depend on
     incidental row order — a leading ragged row would silently exclude
     every valid query AND the whole corpus (r7 review finding) — and
-    row-order dependence is exactly what tools/order_audit.py certifies
-    against. Returns ``(q_ids, q_mat, dims)``, or ``(None, None,
-    None)`` when no valid query rows remain; callers must pass ``dims``
+    row-order dependence is exactly what ``tools/run_audits.py --classes
+    order`` certifies against. Returns ``(q_ids, q_mat, dims)``, or ``(None,
+    None, None)`` when no valid query rows remain; callers must pass ``dims``
     on to the corpus-side ``valid_vectors`` so the corpus batches are
     rectangular too."""
     import numpy as np
@@ -833,36 +833,6 @@ def knn_ivf_fixed(
 _SIMS_QUERY_CHUNK = 256
 
 
-def _resolve_query_chunk(override: "int | None", default: int) -> int:
-    """Resolve a public chunk kwarg against its module default and
-    refuse a non-positive block size at PLAN time: a negative step
-    would make ``range()`` yield no blocks (silent empty top-k — a
-    wrong answer, not an error) and zero would raise ``ValueError``
-    inside the executor mid-job (r11 review finding; same
-    loud-at-plan-time principle as ``_require_same_id_type``).
-    Non-integral values (e.g. a float) are refused here too —
-    ``range()`` would reject them with a TypeError inside the executor
-    otherwise. Acceptance is ``numbers.Integral`` minus the bools
-    (numpy integer scalars register as Integral on this numpy-centric
-    surface; ``np.bool_`` does NOT, and builtin ``bool`` is excluded
-    explicitly as an always-a-bug sentinel — an ``operator.index``-only
-    check would silently admit ``np.True_`` as chunk=1, r11 review),
-    then normalized through ``operator.index`` so downstream slicing
-    sees a plain int."""
-    import numbers
-    import operator
-
-    chunk = default if override is None else override
-    if not isinstance(chunk, numbers.Integral) or isinstance(chunk, bool):
-        raise ValueError(
-            f"query chunk must be an int >= 1, got {chunk!r}"
-        )
-    chunk = operator.index(chunk)
-    if chunk < 1:
-        raise ValueError(f"query chunk must be an int >= 1, got {chunk!r}")
-    return chunk
-
-
 def _cosine_score_frames(
     q_ids, q_mat, q_norm, q_valid, ids, c_mat, c_norm, c_valid,
     chunk: int, scales=None,
@@ -929,7 +899,6 @@ def knn_quantized(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_chunk: "int | None" = None,
 ) -> DataFrame:
     """Top-k neighbors scored against the int8-QUANTIZED corpus — the
     serving shape quantization buys at scale: the scan reads 4× fewer
@@ -937,11 +906,8 @@ def knn_quantized(
     applying each row's dequantization scale to the accumulated dot
     product (exactly equal to dequantize-then-dot, but without ever
     materializing the float corpus). Approximate only by quantization
-    error; recall vs the float path is pytest-measured.
-
-    ``query_chunk`` overrides the query-axis block size
-    (``_SIMS_QUERY_CHUNK``); the default keeps per-batch kernel memory
-    O(chunk × batch) regardless of |Q|."""
+    error; recall vs the float path is pytest-measured. Per-batch kernel
+    memory is O(``_SIMS_QUERY_CHUNK`` × batch) regardless of |Q|."""
     import numpy as np
 
     from realtime_voting_data_engineering_spark.session import (
@@ -950,7 +916,7 @@ def knn_quantized(
 
     _require_same_id_type(queries, corpus, id_col, "corpus")
     ensure_workers_can_import(corpus.sparkSession)
-    q_chunk = _resolve_query_chunk(query_chunk, _SIMS_QUERY_CHUNK)
+    q_chunk = _SIMS_QUERY_CHUNK  # driver-side capture: ships in the closure
     out_schema = _id_typed_schema(
         corpus, id_col, ["query_id", "neighbor_id"], "cos double"
     )
@@ -998,17 +964,13 @@ def knn_brute_force_pandas(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    query_chunk: "int | None" = None,
 ) -> DataFrame:
     """Arrow-batched numpy variant of the brute-force scorer: queries are
     collected once into a (|Q|, d) matrix (small by contract) and matmul'd
     against each Arrow batch of the corpus — per-partition vectorized
     compute, corpus never shuffled. This is where a BLAS/GPU kernel slots
-    in at 100 TB.
-
-    ``query_chunk`` overrides the query-axis block size
-    (``_SIMS_QUERY_CHUNK``); the default keeps per-batch kernel memory
-    O(chunk × batch) regardless of |Q|."""
+    in at 100 TB. Per-batch kernel memory is O(``_SIMS_QUERY_CHUNK`` ×
+    batch) regardless of |Q|."""
     import numpy as np
 
     from realtime_voting_data_engineering_spark.session import (
@@ -1017,7 +979,7 @@ def knn_brute_force_pandas(
 
     _require_same_id_type(queries, corpus, id_col, "corpus")
     ensure_workers_can_import(corpus.sparkSession)
-    q_chunk = _resolve_query_chunk(query_chunk, _SIMS_QUERY_CHUNK)
+    q_chunk = _SIMS_QUERY_CHUNK  # driver-side capture: ships in the closure
     out_schema = _id_typed_schema(
         corpus, id_col, ["query_id", "neighbor_id"], "cos double"
     )
@@ -1329,7 +1291,6 @@ def knn_pq_adc(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    adc_query_chunk: "int | None" = None,
 ) -> DataFrame:
     """Asymmetric-distance (ADC) top-k over PQ codes — PQ's serving
     path: each query precomputes an m×ksub lookup table of subvector ·
@@ -1352,9 +1313,8 @@ def knn_pq_adc(
     accumulate dimension-sequentially, scores subspace-sequentially, so
     DuckDB replays the ranking bit-for-bit (scores are approximate
     INNER-PRODUCT surrogates — recall vs exact cosine is pytest-bounded,
-    the ranking itself is exact). ``adc_query_chunk`` overrides the
-    query-axis block size (``_ADC_QUERY_CHUNK``) — VERDICT r10 #2
-    asked for a public knob instead of a monkeypatch-only one."""
+    the ranking itself is exact). Queries are scored in blocks of
+    ``_ADC_QUERY_CHUNK``."""
     import numpy as np
 
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -1366,8 +1326,7 @@ def knn_pq_adc(
     assert dims % m == 0, "dims must divide into m equal subvectors"
     ensure_workers_can_import(queries.sparkSession)
     _require_same_id_type(queries, corpus, id_col, "corpus")
-    # Driver-side capture: ships in the closure.
-    q_chunk = _resolve_query_chunk(adc_query_chunk, _ADC_QUERY_CHUNK)
+    q_chunk = _ADC_QUERY_CHUNK  # driver-side capture: ships in the closure
     dsub = dims // m
     cb = pq_codebooks(dims, m, ksub)  # (m, ksub, dsub)
     qids_arr, luts_arr = _pq_query_luts(
@@ -1415,7 +1374,6 @@ def knn_pq_adc_from_codes(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     codes_col: str = "pq_codes",
-    adc_query_chunk: "int | None" = None,
 ) -> DataFrame:
     """ADC top-k served from a STORED PQ code table — the shape that
     matters at 100 TB: ``codes`` is ``pq_encode`` output at rest, so the
@@ -1436,9 +1394,8 @@ def knn_pq_adc_from_codes(
     — and any unparsable row would kill the whole job (one bad row,
     1000 executors). Exclusion mirrors the float boundary's semantics;
     only the ``queries`` side (floats) passes ``valid_vectors``.
-
-    ``adc_query_chunk`` overrides the query-axis block size
-    (``_ADC_QUERY_CHUNK``), as on :func:`knn_pq_adc`."""
+    Queries are scored in blocks of ``_ADC_QUERY_CHUNK``, as on
+    :func:`knn_pq_adc`."""
     import numpy as np
 
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -1450,8 +1407,7 @@ def knn_pq_adc_from_codes(
     assert dims % m == 0, "dims must divide into m equal subvectors"
     ensure_workers_can_import(queries.sparkSession)
     _require_same_id_type(queries, codes, id_col, "codes")
-    # Driver-side capture: ships in the closure.
-    q_chunk = _resolve_query_chunk(adc_query_chunk, _ADC_QUERY_CHUNK)
+    q_chunk = _ADC_QUERY_CHUNK  # driver-side capture: ships in the closure
     cb = pq_codebooks(dims, m, ksub)
     qids_arr, luts_arr = _pq_query_luts(
         queries, cb, dims, m, ksub, id_col, vec_col

@@ -357,7 +357,7 @@ def hourly_vote_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # json_valid guard: Spark's from_json maps unparseable input ('',
     # truncated JSON) to a NULL struct, but DuckDB's json_extract_string
     # RAISES on malformed input — the guard reproduces the null-on-bad-
-    # input semantics exactly (tools/null_audit.py finding).
+    # input semantics exactly (tools/run_audits.py --classes null finding).
     tags=("json", "P2", "F6"),
 )
 def parse_vote_payload(spark: SparkSession, sf_dir: str) -> DataFrame:

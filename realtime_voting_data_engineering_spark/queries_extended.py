@@ -23,7 +23,6 @@ from realtime_voting_data_engineering_spark.queries import register
 from realtime_voting_data_engineering_spark.sources.tables import (
     load_events,
     load_table,
-    sql_over_views,
 )
 
 
@@ -74,7 +73,7 @@ def activation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # let the NULL partition advance through stages while the oracle's
     # equi-join CTEs could not (NULL never equi-joins) — the two
     # formulations only agree under a declared non-null key
-    # (tools/null_audit.py finding).
+    # (``tools/run_audits.py --classes null`` finding).
     ev = (
         load_events(spark, sf_dir)
         .filter(F.col("event_type").isin(*stages) & F.col("user_id").isNotNull())
@@ -300,21 +299,22 @@ def event_type_cube(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("agg", "grouping-sets", "sql-api"),
 )
 def grouping_sets_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """GROUPING SETS via the SQL API (register views → spark.sql), the
-    same Catalyst plan as the DataFrame form. Goes through
-    ``sql_over_views`` so view registration + analysis are atomic —
-    concurrent callers on one session with different sf_dirs must not
-    read each other's corpus (tools/concurrency_audit.py leg C)."""
-    return sql_over_views(
-        spark,
-        sf_dir,
+    """GROUPING SETS via the SQL API, the same Catalyst plan as the
+    DataFrame form. The table is bound as a DataFrame argument, which
+    PySpark registers under a unique temp-view name only for the eager
+    analysis and then drops: no session catalog state, so concurrent
+    callers on one session with different sf_dirs cannot read each
+    other's corpus (``tools/run_audits.py --classes concurrency`` leg
+    C)."""
+    return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority,
                CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
                    AS total_price
-        FROM orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
         """,
+        orders=load_table(spark, sf_dir, "orders"),
     )
 
 
@@ -572,7 +572,7 @@ def purchase_with_prior_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL placement is spelled out because the engines' defaults differ
     # (Spark ASC=NULLS FIRST/DESC=NULLS LAST, DuckDB the reverse) — a
     # NULL o_orderdate would silently shift every later running_total
-    # (tools/null_audit.py finding).
+    # (``tools/run_audits.py --classes null`` finding).
     tags=("window",),
 )
 def running_revenue_per_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -786,7 +786,7 @@ def approx_distinct_users_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
     # Explicit NULLS FIRST = Spark's ASC default; DuckDB defaults to
     # NULLS LAST, which reorders rank/ntile when value is NULL
-    # (tools/null_audit.py finding).
+    # (``tools/run_audits.py --classes null`` finding).
     tags=("window",),
 )
 def event_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -911,8 +911,8 @@ def approx_value_quartiles_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     must be rank-space, not interpolated: GK returns an actual data
     element, and for tiny groups the interpolated value at p±0.01 can
     sit strictly between two elements, excluding the element the exact
-    sketch correctly returns (found by tools/null_audit.py on the
-    poisoned corpus's 2-3-row '' / NULL event-type groups). The
+    sketch correctly returns (found by ``tools/run_audits.py --classes null``
+    on the poisoned corpus's 2-3-row '' / NULL event-type groups). The
     discrete envelope encodes the real contract: GK with accuracy
     10 000 guarantees rank error ≤ n/10 000, two orders of magnitude
     inside the ±0.01·n rank envelope; for n < accuracy the sketch is

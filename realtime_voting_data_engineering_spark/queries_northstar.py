@@ -1079,7 +1079,7 @@ def quality_score_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n_chars is DERIVED from text here (not read from the denormalized
     # column) so query and oracle share one source of truth; a table
     # whose n_chars drifted from its text would silently skew
-    # total_chars otherwise (tools/null_audit.py finding).
+    # total_chars otherwise (tools/run_audits.py --classes null finding).
     scored = X.with_quality_score(
         docs.select(F.length("text").alias("n_chars"), "text"), out_col="q"
     ).select("n_chars", "q")

@@ -52,8 +52,8 @@ _BM25_MEMO: dict = {}
 
 #: Serializes all _BM25_MEMO bookkeeping. A shared session serving
 #: concurrent queries (Thrift-server / notebook multi-tenancy — what
-#: tools/concurrency_audit.py exercises) would otherwise race the
-#: check-evict-insert sequences: two threads both missing the same key
+#: ``tools/run_audits.py --classes concurrency`` exercises) would otherwise
+#: race the check-evict-insert sequences: two threads both missing the same key
 #: double-build and leak one persisted projection forever, and the
 #: eviction's list-then-pop pattern can KeyError or hit "dict changed
 #: size during iteration" mid-scan. Index BUILDS run outside the lock
@@ -268,10 +268,10 @@ def bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 # keys on the analyzed plan, and same (session, path,
                 # token) ⇒ identical plan), so unpersisting ``built[1]``
                 # here would evict the SHARED entry out from under the
-                # winner. Measured by tools/concurrency_audit.py leg B:
-                # the persisted-RDD count does not grow with duplicate
-                # builds, and the surviving projection must stay cached
-                # after the stress.
+                # winner. Measured by ``tools/run_audits.py --classes
+                # concurrency`` leg B: the persisted-RDD count does not grow
+                # with duplicate builds, and the surviving projection must stay
+                # cached after the stress.
                 pass
             else:
                 # A concurrent thread may have raced us with a
@@ -739,11 +739,11 @@ def hourly_gap_filled(spark: SparkSession, sf_dir: str) -> DataFrame:
     hygiene: the grid length is data-derived, so before the fold ONE
     corrupted year-38503 timestamp asked ``sequence()`` for ~300M hourly
     buckets per series and killed the whole JVM (measured,
-    ``tools/extreme_audit.py`` — the one-malformed-row-kills-the-job
-    class in resource form). With the fold, garbage-time rows land in a
-    NULL bucket that min/max ignore, bounding the grid by the REAL
-    activity span; series whose events are all garbage-time yield a NULL
-    span and an empty sequence in both engines."""
+    ``tools/run_audits.py --classes extreme`` — the
+    one-malformed-row-kills-the-job class in resource form). With the fold,
+    garbage-time rows land in a NULL bucket that min/max ignore, bounding the
+    grid by the REAL activity span; series whose events are all garbage-time
+    yield a NULL span and an empty sequence in both engines."""
     events = load_events(spark, sf_dir)
     # The hourly aggregate feeds BOTH the span derivation and the
     # grid's left join; without materialization each reference re-ran

@@ -10,5 +10,4 @@ from realtime_voting_data_engineering_spark.sources.tables import (  # noqa: F40
     TABLE_NAMES,
     load_table,
     load_tables,
-    register_views,
 )

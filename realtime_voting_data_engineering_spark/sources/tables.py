@@ -18,8 +18,6 @@ from __future__ import annotations
 
 import json
 import os
-import sys
-import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -145,20 +143,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-#: Scale-adaptive scan-widening threshold (bytes): a table whose TOTAL
-#: on-disk size fits inside one scan split (``spark.sql.files.
-#: maxPartitionBytes`` default, 128 MB) cannot produce more than a
-#: handful of scan tasks — and the driver corpus stores each table as
-#: ONE single-row-group file, so its scans are strictly single-task
-#: (SCALE.md "Round-7 layout probe"). Env-tunable; ≤0 disables.
-WIDEN_BYTES_DEFAULT = 128 * 1024 * 1024
-
-#: One-time stderr warning guard for a malformed SPARK_GRAFT_WIDEN_BYTES
-#: (warn per process, not per widened query — the gate runs at every
-#: load site).
-_WARNED_WIDEN_ENV = False
-
-
 def table_input_bytes(sf_dir: str, name: str) -> "int | None":
     """Total on-disk bytes of one corpus table (file or directory tree),
     or None when the path cannot be stat'ed (remote filesystem, missing
@@ -221,40 +205,6 @@ def widen_small_scan(
     return df.repartition(par)
 
 
-def _parse_size_bytes(raw: str) -> "int | None":
-    """Parse a byte count in Spark's size-conf grammar — a plain integer
-    or a ``k``/``m``/``g``/``t`` suffix with optional trailing ``b``
-    (``128m``, ``1g``, ``512kb``) — to bytes; None when unparseable."""
-    try:
-        raw = raw.strip().lower()
-        units = {"k": 1024, "m": 1024**2, "g": 1024**3, "t": 1024**4}
-        if raw.endswith("b"):
-            raw = raw[:-1]
-        if raw and raw[-1] in units:
-            return int(float(raw[:-1]) * units[raw[-1]])
-        return int(raw)
-    except Exception:
-        return None
-
-
-def _split_size_bytes(spark: SparkSession) -> int:
-    """The session's actual scan-split size — ``spark.sql.files.
-    maxPartitionBytes``, parsed from its byte-suffix form — so the
-    "fits in one split" premise tracks the deployment's real splitting
-    instead of assuming the 128 MB default (r15 review: a deployment
-    that LOWERS maxPartitionBytes already scans a mid-sized table in
-    parallel, and widening it again would re-pay the exchange the gate
-    exists to avoid). Unparseable/missing conf → the stock default."""
-    try:
-        raw = spark.conf.get(
-            "spark.sql.files.maxPartitionBytes", str(WIDEN_BYTES_DEFAULT)
-        )
-    except Exception:
-        return WIDEN_BYTES_DEFAULT
-    parsed = _parse_size_bytes(raw)
-    return WIDEN_BYTES_DEFAULT if parsed is None else parsed
-
-
 def small_scan_parallelism(
     spark: SparkSession, sf_dir: str, name: str
 ) -> "int | None":
@@ -265,34 +215,12 @@ def small_scan_parallelism(
     ``similarity.near_dup_embeddings_srp.verify_parallelism``,
     ``dedup.minhash_dedup_pairs.signature_parallelism``).
 
-    Threshold resolution: ``SPARK_GRAFT_WIDEN_BYTES`` when set to a
-    valid byte count — a plain integer or Spark's size grammar
-    (``128m``, ``1g``; ≤0 disables) — else the session's actual
-    ``spark.sql.files.maxPartitionBytes``. A malformed value falls back
-    rather than aborting every widened query at plan time (r15 review),
-    but warns ONCE on stderr (r15 ADVICE: an operator that sets e.g.
-    ``off`` expecting to disable widening must not be silently
-    ignored — '0' is the documented disable spelling)."""
-    env = os.environ.get("SPARK_GRAFT_WIDEN_BYTES")
-    limit = None
-    if env is not None:
-        limit = _parse_size_bytes(env)
-        if limit is None:  # malformed knob: fall back to the conf, loudly
-            global _WARNED_WIDEN_ENV
-            if not _WARNED_WIDEN_ENV:
-                _WARNED_WIDEN_ENV = True
-                print(
-                    f"tables: SPARK_GRAFT_WIDEN_BYTES={env!r} is not a "
-                    "byte count (integer or '128m'-style) — ignoring it; "
-                    "widening threshold falls back to "
-                    "spark.sql.files.maxPartitionBytes. Use '0' to "
-                    "disable widening.",
-                    file=sys.stderr,
-                )
-    if limit is None:
-        limit = _split_size_bytes(spark)
-    if limit <= 0:
-        return None
+    The threshold is the session's own scan-split size,
+    ``spark.sql.files.maxPartitionBytes`` (128 MB by default), read as
+    the byte count Spark has already parsed: a deployment that lowers it
+    already scans a mid-sized table in parallel, and widening again
+    would re-pay the exchange this gate exists to avoid."""
+    limit = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
     nbytes = table_input_bytes(sf_dir, name)
     if nbytes is None or nbytes > limit:
         return None
@@ -321,38 +249,3 @@ def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
 ) -> dict[str, DataFrame]:
     return {name: load_table(spark, sf_dir, name) for name in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every corpus table as a temp view for the SQL API.
-
-    Temp views are SESSION-global named state: concurrent callers
-    binding the same names to DIFFERENT sf_dirs cross-talk. SQL-API
-    query paths must go through ``sql_over_views`` (atomic
-    register+analyze) rather than calling this and ``spark.sql``
-    separately."""
-    for name in TABLE_NAMES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-#: Serializes register_views + analysis for SQL-API queries. The corpus
-#: views are per-SESSION named state; two threads serving different
-#: sf_dirs through one shared session (tools/concurrency_audit.py's
-#: mixed-corpus leg) would otherwise race view registration against
-#: name resolution and silently read each other's tables.
-_SQL_VIEW_LOCK = threading.Lock()
-
-
-def sql_over_views(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    """Run a SQL string over the corpus views, safely under concurrency:
-    view registration and analysis happen atomically. ``spark.sql``
-    analyzes eagerly (Dataset.ofRows asserts analysis), at which point
-    the views are INLINED into the plan — after the lock releases, a
-    competing re-registration cannot retarget this DataFrame; the
-    ``.schema`` touch is belt-and-braces against that eagerness ever
-    becoming lazy."""
-    with _SQL_VIEW_LOCK:
-        register_views(spark, sf_dir)
-        df = spark.sql(sql)
-        df.schema
-    return df

@@ -3,10 +3,26 @@ the exact measure, SimHash sanity, exact dedup semantics."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from realtime_voting_data_engineering_spark.operators import dedup as D
 from realtime_voting_data_engineering_spark.sources.tables import load_table
+
+#: The three connected-components engines. ``auto`` reaches the driver
+#: union-find at test sizes, and propagation once the edge gate is below
+#: every pair count (-1, so an empty graph reaches it too).
+CC_ENGINES = ("driver", "propagate", "star")
+
+
+def cc_engine(df, engine):
+    """``D.connected_components`` through one named engine."""
+    if engine == "star":
+        return D.connected_components(df, method="star")
+    with pytest.MonkeyPatch.context() as mp:
+        if engine == "propagate":
+            mp.setattr(D, "_CC_DRIVER_MAX_EDGES", -1)
+        return D.connected_components(df)
 
 
 def _docs(spark, sf_dir):
@@ -119,21 +135,9 @@ def test_connected_components_match_union_find(spark):
     ]
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
     got = {r.id_a: r.cluster_id for r in D.connected_components(df).collect()}
-    for method in ("driver", "propagate", "star", "auto"):
-        via = {
-            r.id_a: r.cluster_id
-            for r in D.connected_components(df, method=method).collect()
-        }
-        assert via == got, method
-    # auto must also route LARGE-gated graphs to the distributed engine
-    # and produce the same clusters (driver_max_edges=0 forces it).
-    dist = {
-        r.id_a: r.cluster_id
-        for r in D.connected_components(
-            df, method="auto", driver_max_edges=0
-        ).collect()
-    }
-    assert dist == got
+    for engine in CC_ENGINES:
+        via = {r.id_a: r.cluster_id for r in cc_engine(df, engine).collect()}
+        assert via == got, engine
 
     parent: dict[int, int] = {}
 
@@ -210,10 +214,7 @@ def test_connected_components_star_matches_propagate(spark):
         (40, 40),
     ]
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    prop = {
-        (r.id_a, r.cluster_id)
-        for r in D.connected_components(df, method="propagate").collect()
-    }
+    prop = {(r.id_a, r.cluster_id) for r in cc_engine(df, "propagate").collect()}
     star = {
         (r.id_a, r.cluster_id)
         for r in D.connected_components(df, method="star").collect()
@@ -221,17 +222,20 @@ def test_connected_components_star_matches_propagate(spark):
     assert star == prop
 
 
-def test_connected_components_star_converges_logarithmically_on_path(spark):
+def test_connected_components_star_converges_logarithmically_on_path(
+    spark, monkeypatch
+):
     """Planted 1000-node path graph: diameter 999, so min-label
     propagation would need ~999 rounds, while large-star/small-star
     contraction must finish within ~log2(n) alternating rounds — pinned
-    by max_iter=15 (2**15 >> 1000; propagation at 15 rounds would
+    by a round cap of 15 (2**15 >> 1000; propagation at 15 rounds would
     raise). All nodes collapse to cluster 0."""
+    monkeypatch.setattr(D, "_CC_MAX_ROUNDS", 15)
     n = 1000
     df = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
                                "id_a long, id_b long")
     got = {r.id_a: r.cluster_id for r in
-           D.connected_components(df, method="star", max_iter=15).collect()}
+           D.connected_components(df, method="star").collect()}
     assert got == {i: 0 for i in range(n)}
 
 
@@ -278,16 +282,13 @@ def test_connected_components_empty_and_self_loop_graphs(spark):
     must emit each node as its own singleton cluster. Guards the
     localCheckpoint(eager=False) convergence path added in r6."""
     empty = spark.createDataFrame([], "id_a long, id_b long")
-    for method in ("propagate", "star", "driver", "auto"):
-        assert D.connected_components(empty, method=method).count() == 0
+    for engine in CC_ENGINES:
+        assert cc_engine(empty, engine).count() == 0, engine
 
     loops = spark.createDataFrame([(7, 7), (9, 9)], "id_a long, id_b long")
-    for method in ("propagate", "star", "driver", "auto"):
-        got = {
-            r.id_a: r.cluster_id
-            for r in D.connected_components(loops, method=method).collect()
-        }
-        assert got == {7: 7, 9: 9}, method
+    for engine in CC_ENGINES:
+        got = {r.id_a: r.cluster_id for r in cc_engine(loops, engine).collect()}
+        assert got == {7: 7, 9: 9}, engine
 
 
 def test_connected_components_driver_string_ids_and_null_fallback(spark):
@@ -298,14 +299,10 @@ def test_connected_components_driver_string_ids_and_null_fallback(spark):
     it."""
     pairs = [("b", "c"), ("a", "b"), ("x", "y")]
     df = spark.createDataFrame(pairs, "id_a string, id_b string")
-    got = {
-        r.id_a: r.cluster_id
-        for r in D.connected_components(df, method="driver").collect()
-    }
+    got = {r.id_a: r.cluster_id for r in cc_engine(df, "driver").collect()}
     assert got == {"a": "a", "b": "a", "c": "a", "x": "x", "y": "x"}
     assert (
-        D.connected_components(df, method="driver").schema["cluster_id"]
-        .dataType.simpleString()
+        cc_engine(df, "driver").schema["cluster_id"].dataType.simpleString()
         == "string"
     )
     nulls = spark.createDataFrame(
@@ -313,7 +310,7 @@ def test_connected_components_driver_string_ids_and_null_fallback(spark):
     )
     # NULL ids: the driver engine declines and the propagate fallback
     # answers — the call must succeed either way.
-    out = D.connected_components(nulls, method="driver").collect()
+    out = cc_engine(nulls, "driver").collect()
     assert {r.id_a for r in out} >= {1, 2}
 
 

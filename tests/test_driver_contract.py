@@ -11,12 +11,18 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
+
+#: The checkout this test file lives in; the subprocess imports THIS
+#: tree's code, whichever directory it is checked out to.
+_REPO = Path(__file__).resolve().parents[1]
 
 _SCRIPT = r"""
-import importlib.util, sys
-sys.path.insert(0, "/root/repo")
+import importlib.util, os, sys
+repo = sys.argv[1]
+sys.path.insert(0, repo)
 spec = importlib.util.spec_from_file_location(
-    "__spark_entry__", "/root/repo/__spark_entry__.py")
+    "__spark_entry__", os.path.join(repo, "__spark_entry__.py"))
 mod = importlib.util.module_from_spec(spec)
 spec.loader.exec_module(mod)
 from pyspark.sql import SparkSession
@@ -43,7 +49,7 @@ print("DRIVER_SIM_RESULT", len(fails))
 
 def test_all_oracles_match_under_vanilla_session():
     proc = subprocess.run(
-        [sys.executable, "-c", _SCRIPT],
+        [sys.executable, "-c", _SCRIPT, str(_REPO)],
         capture_output=True,
         text=True,
         cwd="/tmp",  # not the repo root — catches path-dependent imports

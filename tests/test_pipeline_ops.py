@@ -374,51 +374,6 @@ def test_pq_adc_query_chunking_changes_no_bits(spark, monkeypatch):
     assert whole == chunked and len(whole) == 7 * 3
 
 
-def test_adc_query_chunk_kwarg_overrides_module_default(spark, monkeypatch):
-    """VERDICT r10 #2: the chunk size needs a public kwarg, not a
-    monkeypatch-only override — and the kwarg must take precedence over
-    the module constant, which the default path must still read at CALL
-    time. Poison the constant with a negative value: the plan-time
-    chunk validator refuses it loudly (an unvalidated negative step
-    would have made range() yield no blocks — a silent empty top-k,
-    the r11 review finding); the kwarg call must be unaffected, on
-    BOTH ADC entry points."""
-    import pytest
-
-    from realtime_voting_data_engineering_spark.operators import similarity as S
-
-    corpus = spark.createDataFrame(
-        [(i, [0.01 * i + 0.001 * (i % 3)] * 8) for i in range(20)],
-        "vec_id bigint, embedding array<float>",
-    )
-    queries = spark.createDataFrame(
-        [(100 + i, [0.05 * (i + 1)] * 8) for i in range(5)],
-        "vec_id bigint, embedding array<float>",
-    )
-    codes = S.pq_encode(corpus, dims=8, m=2, ksub=4)
-    monkeypatch.setattr(S, "_ADC_QUERY_CHUNK", -1)
-    with pytest.raises(ValueError, match="chunk must be an int >= 1"):
-        S.knn_pq_adc(queries, corpus, dims=8, m=2, ksub=4, k=3)
-    assert (
-        S.knn_pq_adc(
-            queries, corpus, dims=8, m=2, ksub=4, k=3, adc_query_chunk=2
-        ).count()
-        == 5 * 3
-    )
-    with pytest.raises(ValueError, match="chunk must be an int >= 1"):
-        S.knn_pq_adc_from_codes(queries, codes, dims=8, m=2, ksub=4, k=3)
-    assert (
-        S.knn_pq_adc_from_codes(
-            queries, codes, dims=8, m=2, ksub=4, k=3, adc_query_chunk=2
-        ).count()
-        == 5 * 3
-    )
-    with pytest.raises(ValueError, match="chunk must be an int >= 1"):
-        S.knn_pq_adc(
-            queries, corpus, dims=8, m=2, ksub=4, k=3, adc_query_chunk=0
-        )
-
-
 def test_pq_adc_rejects_mismatched_id_types(spark):
     """Mixed id dtypes make the kernels' numpy self-match compare
     vacuous (string vs int64 → everything 'unequal' → a vector scores

@@ -16,6 +16,7 @@ from realtime_voting_data_engineering_spark.operators.relational import (
     deterministic_assignment,
     paginate,
 )
+from tests.test_dedup import CC_ENGINES, cc_engine
 
 SET = settings(
     max_examples=10,
@@ -339,11 +340,11 @@ def test_apply_changes_latest_is_input_order_invariant(spark, changes, perm_seed
         min_size=0,
         max_size=18,
     ),
-    method=st.sampled_from(["propagate", "star", "driver"]),
+    engine=st.sampled_from(CC_ENGINES),
 )
 @SET
 def test_connected_components_matches_union_find_on_random_graphs(
-    spark, edges, method
+    spark, edges, engine
 ):
     """Both CC engines vs a plain-Python union-find on RANDOM multigraphs
     (duplicate edges, self-loops, both orientations all allowed) —
@@ -352,10 +353,7 @@ def test_connected_components_matches_union_find_on_random_graphs(
     df = spark.createDataFrame(edges, "id_a long, id_b long") if edges else (
         spark.createDataFrame([], "id_a long, id_b long")
     )
-    got = {
-        r.id_a: r.cluster_id
-        for r in D.connected_components(df, method=method).collect()
-    }
+    got = {r.id_a: r.cluster_id for r in cc_engine(df, engine).collect()}
 
     parent: dict[int, int] = {}
 

@@ -315,7 +315,7 @@ def _dense_chunk_fixture(spark):
 
 
 @pytest.mark.parametrize("fn_name", ["knn_brute_force_pandas", "knn_quantized"])
-def test_dense_query_chunking_changes_no_bits(spark, fn_name):
+def test_dense_query_chunking_changes_no_bits(spark, fn_name, monkeypatch):
     """The dense cosine kernels block the QUERY axis so per-batch peak
     memory is O(chunk × batch) instead of O(|Q| × batch) — the deferred
     half of ADVICE r9 #2 (VERDICT r10 #2). SCOPE (r11 second review):
@@ -326,18 +326,24 @@ def test_dense_query_chunking_changes_no_bits(spark, fn_name):
     order, which genuinely differs between gemv/gemm shapes on general
     data (the reassociation residual is pinned separately by
     test_dense_query_chunking_reassociation_residual). Chunk sizes 1
-    and 3 must be row- and BIT-identical to one covering block."""
+    and 3 (set through ``_SIMS_QUERY_CHUNK``, which the kernel captures
+    at plan time) must be row- and BIT-identical to one covering
+    block."""
     fn = getattr(S, fn_name)
     corpus, queries = _dense_chunk_fixture(spark)
-    whole = sorted(map(tuple, fn(queries, corpus, k=3, query_chunk=10_000).collect()))
+
+    def topk(chunk):
+        monkeypatch.setattr(S, "_SIMS_QUERY_CHUNK", chunk)
+        return sorted(map(tuple, fn(queries, corpus, k=3).collect()))
+
+    whole = topk(10_000)
     assert len(whole) == 7 * 3
     for chunk in (1, 3):
-        chunked = sorted(map(tuple, fn(queries, corpus, k=3, query_chunk=chunk).collect()))
-        assert chunked == whole, (fn_name, chunk)
+        assert topk(chunk) == whole, (fn_name, chunk)
 
 
 @pytest.mark.parametrize("fn_name", ["knn_brute_force_pandas", "knn_quantized"])
-def test_dense_query_chunking_reassociation_residual(spark, fn_name):
+def test_dense_query_chunking_reassociation_residual(spark, fn_name, monkeypatch):
     """The honest numeric contract for general float data (r11 second
     review, which MEASURED bitwise drift between chunked and unchunked
     matmuls at dims=64): BLAS may reassociate the K-accumulation
@@ -359,7 +365,8 @@ def test_dense_query_chunking_reassociation_residual(spark, fn_name):
         [(100 + i, [float(x) for x in rng.normal(size=64)]) for i in range(9)],
         "vec_id bigint, embedding array<float>",
     )
-    whole = fn(queries, corpus, k=3, query_chunk=10_000).collect()
+    monkeypatch.setattr(S, "_SIMS_QUERY_CHUNK", 10_000)
+    whole = fn(queries, corpus, k=3).collect()
     by_pair = {(r.query_id, r.neighbor_id): r.cos for r in whole}
     # Fixture soundness: adjacent ranks are separated far beyond the
     # reassociation distance, so a 1-ulp score change cannot flip sets.
@@ -370,7 +377,7 @@ def test_dense_query_chunking_reassociation_residual(spark, fn_name):
     # a near-tie exactly there and this pin would go vacuous without
     # noticing). Score the FULL corpus (k = |corpus|) and assert every
     # gap down through rank 3↔4.
-    full = fn(queries, corpus, k=25, query_chunk=10_000).collect()
+    full = fn(queries, corpus, k=25).collect()
     by_q: dict = {}
     for r in full:
         by_q.setdefault(r.query_id, []).append(r.cos)
@@ -381,7 +388,8 @@ def test_dense_query_chunking_reassociation_residual(spark, fn_name):
         gaps = [a - b for a, b in zip(scores[:3], scores[1:4])]
         assert all(g > 1e-6 for g in gaps), (q, gaps)
     for chunk in (1, 4):
-        got = fn(queries, corpus, k=3, query_chunk=chunk).collect()
+        monkeypatch.setattr(S, "_SIMS_QUERY_CHUNK", chunk)
+        got = fn(queries, corpus, k=3).collect()
         assert {(r.query_id, r.neighbor_id) for r in got} == set(by_pair), (
             fn_name, chunk,
         )
@@ -390,35 +398,6 @@ def test_dense_query_chunking_reassociation_residual(spark, fn_name):
             assert abs(r.cos - ref) <= 1e-9 * max(1.0, abs(ref)), (
                 fn_name, chunk, r, ref,
             )
-
-
-@pytest.mark.parametrize("fn_name", ["knn_brute_force_pandas", "knn_quantized"])
-def test_dense_query_chunk_default_reads_module_constant(spark, fn_name, monkeypatch):
-    """The kwarg must OVERRIDE the module default, and the default path
-    must actually read ``_SIMS_QUERY_CHUNK`` at call time (so the
-    monkeypatch override documented for deployments keeps working).
-    Poison the constant with a negative value — the plan-time chunk
-    validator refuses it loudly (an unvalidated negative step would
-    have made range() yield no blocks: a silent empty top-k, the r11
-    review finding), so a default-path call raises; the kwarg call
-    must be unaffected. A vacuous wiring (kwarg ignored, or constant
-    read at import) fails one of the two arms."""
-    fn = getattr(S, fn_name)
-    corpus, queries = _dense_chunk_fixture(spark)
-    monkeypatch.setattr(S, "_SIMS_QUERY_CHUNK", -1)
-    with pytest.raises(ValueError, match="chunk must be an int >= 1"):
-        fn(queries, corpus, k=3)
-    assert fn(queries, corpus, k=3, query_chunk=3).count() == 7 * 3
-    with pytest.raises(ValueError, match="chunk must be an int >= 1"):
-        fn(queries, corpus, k=3, query_chunk=0)
-    with pytest.raises(ValueError, match="chunk must be an int >= 1"):
-        fn(queries, corpus, k=3, query_chunk=2.5)
-    # numpy integers are valid chunk sizes (the call surface is
-    # numpy-centric; range() accepts any __index__ type) — the
-    # validator must normalize, not reject (r11 second-pass review).
-    import numpy as np
-
-    assert fn(queries, corpus, k=3, query_chunk=np.int64(3)).count() == 7 * 3
 
 
 def _id_type_fixture(spark):

@@ -276,3 +276,25 @@ def test_footer_schema_matches_inference_for_nanos_timestamps(spark, tmp_path):
         proc.stdout[-2000:],
         proc.stderr[-3000:],
     )
+
+
+def test_sql_api_query_leaves_the_session_catalog_unchanged(spark, sf_dir):
+    """The SQL-API query binds its table as a DataFrame argument, so once
+    it is built the session catalog lists exactly what it listed before:
+    no corpus temp views left behind for a concurrent caller on another
+    corpus to race on. A fresh session keeps views from earlier tests
+    out of the baseline."""
+    from realtime_voting_data_engineering_spark import queries as Q
+
+    session = spark.newSession()
+
+    def listed():
+        return sorted(
+            (t.name, t.tableType, t.isTemporary)
+            for t in session.catalog.listTables()
+        )
+
+    before = listed()
+    df = Q.REGISTRY["grouping_sets_revenue"].fn(session, sf_dir)
+    assert listed() == before
+    assert df.count() > 0

@@ -615,12 +615,12 @@ def test_concurrency_memo_eviction_race_is_clean(spark, tmp_path):
 
 
 def test_concurrency_mixed_corpus_sql_views_no_cross_talk(spark):
-    """Mini leg C: the temp-view-based SQL-API query alternates two
-    corpora across 8 concurrent threads on ONE session; every result
-    must hash-match its OWN corpus's sequential reference. Pre-r8 the
-    unlocked register_views→spark.sql window reproducibly served the
-    OTHER corpus's tables (cross-talk through the session-global view
-    names); sql_over_views' atomic register+analyze closes it."""
+    """Mini leg C: the SQL-API query alternates two corpora across 8
+    concurrent threads on ONE session; every result must hash-match its
+    OWN corpus's sequential reference. Pre-r8 an unlocked register-views
+    then ``spark.sql`` window reproducibly served the OTHER corpus's
+    tables (cross-talk through session-global view names); binding the
+    table as a DataFrame argument leaves no shared name to race on."""
     report: dict = {}
     audit_env.Concurrency.leg_c(spark, SF_AUDIT, audit_env.Concurrency.sf_dir_b, report)
     assert report["sql_view_mixed_corpus"]["status"] == "match", report

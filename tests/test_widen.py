@@ -3,9 +3,9 @@
 it touched.
 
 The contract under test: widening fires iff the table's total on-disk
-bytes fit inside one scan split (default 128 MB, env-tunable via
-SPARK_GRAFT_WIDEN_BYTES), repartitions to the session's default
-parallelism, and NEVER changes what a query computes — only the
+bytes fit inside one scan split (the session's
+``spark.sql.files.maxPartitionBytes``, 128 MB by default), repartitions
+to the session's default parallelism, and NEVER changes what a query computes — only the
 physical layout of the rows feeding compute-heavy stages.
 """
 
@@ -29,7 +29,7 @@ def test_table_input_bytes_matches_stat(sf_smoke):
     assert table_input_bytes(sf_smoke, "no_such_table") is None
 
 
-def test_widen_fires_only_below_threshold(spark, sf_smoke, monkeypatch):
+def test_widen_fires_only_below_threshold(spark, sf_smoke):
     docs = load_table(spark, sf_smoke, "documents")
     base_parts = docs.rdd.getNumPartitions()
 
@@ -40,17 +40,21 @@ def test_widen_fires_only_below_threshold(spark, sf_smoke, monkeypatch):
         == spark.sparkContext.defaultParallelism
     )
 
-    # Threshold below the table size: provably-not-small, no-op.
-    monkeypatch.setenv("SPARK_GRAFT_WIDEN_BYTES", "1")
-    same = widen_small_scan(docs, spark, sf_smoke, "documents")
-    assert same is docs and same.rdd.getNumPartitions() == base_parts
-
-    # Explicitly disabled: no-op regardless of size.
-    monkeypatch.setenv("SPARK_GRAFT_WIDEN_BYTES", "0")
-    assert widen_small_scan(docs, spark, sf_smoke, "documents") is docs
+    # Split size below the table size (Spark's own size grammar):
+    # provably-not-small, no-op.
+    key = "spark.sql.files.maxPartitionBytes"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "1k")
+    try:
+        same = widen_small_scan(docs, spark, sf_smoke, "documents")
+        assert same is docs and same.rdd.getNumPartitions() == base_parts
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
     # Unstat-able table (no local file): not provably small, no-op.
-    monkeypatch.delenv("SPARK_GRAFT_WIDEN_BYTES", raising=False)
     assert widen_small_scan(docs, spark, sf_smoke, "no_such_table") is docs
 
 
@@ -78,36 +82,3 @@ def test_minhash_signature_parallelism_is_row_identical(spark, sf_smoke):
     assert sorted(base.orderBy(*key).collect()) == sorted(
         wide.orderBy(*key).collect()
     )
-
-
-def test_widen_env_accepts_size_grammar_and_warns_on_garbage(
-    spark, sf_smoke, monkeypatch, capsys
-):
-    """r16 (ADVICE r15): SPARK_GRAFT_WIDEN_BYTES accepts Spark's size
-    grammar ('1k', '128m'), and a malformed value is discarded LOUDLY
-    (one stderr warning per process) instead of silently leaving
-    widening enabled when an operator meant to disable it."""
-    from realtime_voting_data_engineering_spark.sources import tables as TT
-
-    docs = load_table(spark, sf_smoke, "documents")
-
-    # Suffix form below the table size: provably-not-small, no-op.
-    monkeypatch.setenv("SPARK_GRAFT_WIDEN_BYTES", "1k")
-    assert widen_small_scan(docs, spark, sf_smoke, "documents") is docs
-    # Suffix form above the table size: fires.
-    monkeypatch.setenv("SPARK_GRAFT_WIDEN_BYTES", "1g")
-    wide = widen_small_scan(docs, spark, sf_smoke, "documents")
-    assert wide.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-
-    # Malformed: falls back to the session conf (still fires on the tiny
-    # smoke corpus) and warns once.
-    monkeypatch.setattr(TT, "_WARNED_WIDEN_ENV", False)
-    capsys.readouterr()
-    monkeypatch.setenv("SPARK_GRAFT_WIDEN_BYTES", "off")
-    wide = widen_small_scan(docs, spark, sf_smoke, "documents")
-    assert wide.rdd.getNumPartitions() == spark.sparkContext.defaultParallelism
-    err = capsys.readouterr().err
-    assert "SPARK_GRAFT_WIDEN_BYTES" in err and "'off'" in err
-    # Second call: no repeat warning.
-    widen_small_scan(docs, spark, sf_smoke, "documents")
-    assert "SPARK_GRAFT_WIDEN_BYTES" not in capsys.readouterr().err

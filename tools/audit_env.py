@@ -561,12 +561,12 @@ class Concurrency:
     notebook gateway, or serving tier funnels concurrent requests
     through a shared session. Spark's own engine is thread-safe; the
     hazards are in OUR Python-side shared state — the BM25 index memo
-    (check-evict-insert sequences a second thread can interleave),
-    session-global temp views (two corpora racing for the same names),
-    and one-time per-context setup (package shipping). Each has a
-    lock-protected design; this audit hammers them and the whole
-    registry from a thread pool and requires bit-identical answers to
-    the sequential run.
+    (check-evict-insert sequences a second thread can interleave), the
+    SQL API's table binding (two corpora on one session), and one-time
+    per-context setup (package shipping). The memo and the setup are
+    lock-protected, and the SQL API shares no named session state; this
+    audit hammers them and the whole registry from a thread pool and
+    requires bit-identical answers to the sequential run.
 
     Legs:
 
@@ -584,11 +584,12 @@ class Concurrency:
       thread rewrites the corpus mtime on a private copy, so token churn
       forces evict+rebuild storms mid-flight — the pre-lock
       list-then-pop eviction KeyErrors here.
-    - **C (mixed-corpus SQL API):** ``grouping_sets_revenue`` (temp-view
-      based) alternates corpora concurrently; each result must
-      hash-equal its OWN corpus's reference — cross-talk through the
-      session-global view names is the failure mode (register+analyze
-      are atomic via ``sources.tables.sql_over_views``).
+    - **C (mixed-corpus SQL API):** ``grouping_sets_revenue`` (the SQL
+      API, its table bound as a DataFrame argument) alternates corpora
+      concurrently; each result must hash-equal its OWN corpus's
+      reference — cross-talk between the two corpora is the failure
+      mode. Views are no longer shared: PySpark binds the argument
+      under a unique view name and drops it after analysis.
     - **D (mixed workload):** a LIVE rate-source streaming aggregate
       (update-mode memory sink, 1 s trigger) runs on the session while
       ten representative batch queries execute concurrently; batch
