@@ -11,9 +11,10 @@ Two tiers, as a production vector pipeline would have:
   Hyperplane components are derived deterministically from md5(plane,
   dim), so signatures are reproducible across runs/executors with no
   driver-side randomness or broadcast state.
-- **mapInPandas kernel** — Arrow-batched numpy matmul variant of the
-  brute-force scorer: the shape a GPU/BLAS-backed scorer takes at 100 TB
-  (per-partition batch × broadcast query matrix).
+- **mapInPandas kernels** — Arrow-batched numpy scorers for the
+  compressed indexes (int8 quantized cosine, IVF assignment, PQ encode
+  and ADC): the shape a GPU/BLAS-backed scorer takes at 100 TB
+  (per-partition batch × closure-shipped query matrix).
 """
 
 from __future__ import annotations
@@ -152,9 +153,9 @@ def collect_query_matrix(queries: DataFrame, id_col: str, vec_col: str):
     turns ``np.array(list(...))`` into a dtype=object ragged batch that
     kills the Arrow kernels — the class of crash r6's boundary contract
     only half-closed (r6 ADVICE #1). Dims is the MODAL length (ties
-    broken toward the smaller dims), same as ``ivf_train_centroids``:
-    taking the first row's length would make the result depend on
-    incidental row order — a leading ragged row would silently exclude
+    broken toward the smaller dims): taking the first row's length
+    would make the result depend on incidental row order — a leading
+    ragged row would silently exclude
     every valid query AND the whole corpus (r7 review finding) — and
     row-order dependence is exactly what ``tools/run_audits.py --classes
     order`` certifies against. Returns ``(q_ids, q_mat, dims)``, or ``(None,
@@ -546,162 +547,13 @@ def knn_ann(
     )
 
 
-def ivf_train_centroids(
-    corpus: DataFrame,
-    n_centroids: int = 16,
-    sample_size: int = 4096,
-    iters: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-):
-    """Train the IVF coarse quantizer: Lloyd k-means on a deterministic,
-    bounded sample (hash-ordered prefix), as production IVF indexes do —
-    the quantizer trains on a sample regardless of corpus size, so this
-    is the one deliberate driver-side collect in the index build and it
-    is O(sample), not O(corpus). Returns a (n_centroids, d) ndarray."""
-    import numpy as np
-
-    sample = (
-        valid_vectors(corpus, vec_col)
-        .select(id_col, vec_col)
-        .orderBy(F.md5(F.col(id_col).cast("string")), F.col(id_col))
-        .limit(sample_size)
-        .collect()
-    )
-    # Ragged guard (r6 ADVICE #1): dims = the sample's modal length —
-    # one malformed row must not crash training, and taking the modal
-    # (not first) length keeps a single leading ragged row from
-    # poisoning which side gets excluded.
-    lengths = [len(r[1]) for r in sample]
-    if not lengths:  # empty corpus: 2-D empty so .shape[1] stays defined
-        return np.zeros((0, 0), dtype=np.float64)
-    dims = max(set(lengths), key=lambda d: (lengths.count(d), -d))
-    x = np.array(
-        [r[1] for r in sample if len(r[1]) == dims], dtype=np.float64
-    )
-    cent = x[:n_centroids].copy()
-    for _ in range(iters):
-        d2 = ((x[:, None, :] - cent[None, :, :]) ** 2).sum(axis=2)
-        assign = d2.argmin(axis=1)
-        for c in range(n_centroids):
-            members = x[assign == c]
-            if len(members):
-                cent[c] = members.mean(axis=0)
-    return cent
-
-
-def ivf_assign(
-    corpus: DataFrame,
-    centroids,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Assign each vector its nearest centroid (the inverted-list id).
-    Arrow-batched argmin against the closure-shipped centroid matrix —
-    per-partition vectorized, no shuffle; the output's ``cluster`` column
-    is what a partitioned/bucketed index layout would key on at rest."""
-    import numpy as np
-
-    from realtime_voting_data_engineering_spark.session import (
-        ensure_workers_can_import,
-    )
-
-    ensure_workers_can_import(corpus.sparkSession)
-    cent = np.asarray(centroids, dtype=np.float64)
-    corpus = valid_vectors(corpus, vec_col, int(cent.shape[1]))
-
-    def assign(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            x = np.array(list(pdf[vec_col]), dtype=np.float64)
-            d2 = (
-                (x**2).sum(axis=1, keepdims=True)
-                - 2.0 * (x @ cent.T)
-                + (cent**2).sum(axis=1)[None, :]
-            )
-            out = pdf[[id_col, vec_col]].copy()
-            out["cluster"] = d2.argmin(axis=1).astype("int32")
-            yield out
-
-    return corpus.select(id_col, vec_col).mapInPandas(
-        assign,
-        schema=_id_typed_schema(
-            corpus, id_col, [id_col], f"{vec_col} array<float>, cluster int"
-        ),
-    )
-
-
-def knn_ivf(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    n_centroids: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF approximate top-k: assign the corpus to inverted lists, probe
-    each query against its ``nprobe`` nearest centroids only, re-rank
-    exactly within the probed lists. Work is corpus-linear in the assign
-    pass plus |Q|·(nprobe/n_centroids) of the corpus in the scoring join
-    (an equi-join on ``cluster``) — never the |Q|·|C| cross product.
-    Recall < 1 by construction; tests measure it against brute force."""
-    import numpy as np
-
-    # Refuse mixed id types before the training collect runs a job.
-    _require_same_id_type(queries, corpus, id_col, "corpus")
-    cent = ivf_train_centroids(
-        corpus, n_centroids=n_centroids, id_col=id_col, vec_col=vec_col
-    )
-    # Full contract (NULL + ragged): a wrong-length query would break the
-    # (cent - qv) broadcast below; dims comes from the trained centroids.
-    queries = valid_vectors(queries, vec_col, int(cent.shape[1]))
-    assigned = ivf_assign(corpus, cent, id_col=id_col, vec_col=vec_col).select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).alias("c_vec"),
-        "cluster",
-    )
-
-    q_rows = queries.select(id_col, vec_col).collect()  # |Q| small by contract
-    probe_rows = []
-    for r in q_rows:
-        if r[0] is None:
-            # A NULL-id query can produce no output anywhere (the
-            # self-match filter null-propagates and drops every
-            # candidate), so its distance math AND probe rows are pure
-            # dead work — skip before computing anything (r7 review).
-            continue
-        qv = np.asarray(r[1], dtype=np.float64)
-        d2 = ((cent - qv) ** 2).sum(axis=1)
-        for c in np.argsort(d2, kind="stable")[:nprobe]:
-            probe_rows.append((r[0], [float(v) for v in r[1]], int(c)))
-    probes = queries.sparkSession.createDataFrame(
-        probe_rows,
-        schema=_id_typed_schema(
-            corpus, id_col, ["query_id"], "q_vec array<float>, cluster int"
-        ),
-    )
-
-    cands = assigned.join(F.broadcast(probes), "cluster").filter(
-        F.col("query_id") != F.col("neighbor_id")
-    )
-    scored = cands.select(
-        "query_id", "neighbor_id", cosine(F.col("q_vec"), F.col("c_vec")).alias("cos")
-    )
-    return top_k_per_group(
-        scored, ["query_id"], [F.col("cos").desc(), F.col("neighbor_id")], k=k
-    )
-
-
 def ivf_fixed_centroids(dims: int, n_centroids: int = 16):
     """Coarse IVF centroids derived from md5 fractions — literally the
     ``pq_codebooks`` construction with ONE subspace spanning the full
     vector (m=1, ksub=n_centroids): (n_centroids, dims), each component
     uniform in [-0.25, 0.25), re-derivable anywhere including SQL. Fixed
-    centroids trade recall for end-to-end replayability — the k-means
-    quantizer (``ivf_train_centroids``) remains the production default;
-    this is the hash-evidence twin."""
+    centroids trade recall for end-to-end replayability: no training
+    collect, and a DuckDB oracle re-derives every assignment."""
     return pq_codebooks(dims, m=1, ksub=n_centroids)[0]
 
 
@@ -712,9 +564,11 @@ def ivf_fixed_assign(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Assign each vector its nearest md5-derived centroid. Same Arrow-
-    batched shape as ``ivf_assign`` (per-partition vectorized, zero
-    shuffle), but with the ``pq_encode`` determinism contract: L2
+    """Assign each vector its nearest md5-derived centroid (the
+    inverted-list id). Arrow-batched against the closure-shipped
+    centroid matrix — per-partition vectorized, zero shuffle; the
+    output's ``cluster`` column is what a partitioned index layout keys
+    on at rest. Same determinism contract as ``pq_encode``: L2
     accumulates dimension-SEQUENTIALLY (matching SQL ``list_sum``'s left
     fold) and ties break first-min, so a SQL engine re-deriving the
     centroids replays every assignment bit-for-bit."""
@@ -759,12 +613,12 @@ def knn_ivf_fixed(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IVF approximate top-k over md5-derived coarse centroids — the
-    same probe-join pipeline as ``knn_ivf`` (corpus-linear assign, probe
-    only ``nprobe`` of ``n_centroids`` inverted lists, exact cosine
-    re-rank within probed lists, never the |Q|·|C| cross product) with
-    the k-means trainer swapped for the replayable fixed quantizer, so
-    the WHOLE index → probe → re-rank path carries a DuckDB oracle.
+    """IVF approximate top-k over md5-derived coarse centroids: assign
+    the corpus to inverted lists (corpus-linear), probe each query
+    against only its ``nprobe`` of ``n_centroids`` lists, re-rank
+    exactly by cosine within the probed lists — an equi-join on
+    ``cluster``, never the |Q|·|C| cross product. The fixed quantizer
+    makes the WHOLE index → probe → re-rank path carry a DuckDB oracle.
 
     Determinism: centroid components are md5-derived doubles
     (``ivf_fixed_centroids``); corpus assignment and the driver-side
@@ -772,10 +626,9 @@ def knn_ivf_fixed(
     (d2, centroid) tie-break; the re-rank cosine is the sequential fold
     of ``cosine()``. The probe computation collects the query set —
     O(|Q|·n_centroids·dims) driver work, bounded by the same |Q|-small
-    contract as ``knn_brute_force_pandas``. Recall/latency trade-off vs
-    the k-means quantizer is pytest-measured; production keeps
-    ``knn_ivf``, grading evidence comes from this twin."""
-    _require_same_id_type(queries, corpus, id_col, "corpus")
+    contract as ``knn_quantized``. Recall < 1 by construction; tests
+    bound it against ``knn_brute_force``."""
+    _require_same_id_type(queries, corpus, id_col)
     queries = valid_vectors(queries, vec_col, dims)
     cent = ivf_fixed_centroids(dims, n_centroids)
     assigned = ivf_fixed_assign(
@@ -823,8 +676,8 @@ def knn_ivf_fixed(
     )
 
 
-#: Query-axis block size for the dense cosine scorers (brute-force
-#: pandas + quantized) — the same contract as ``_ADC_QUERY_CHUNK``
+#: Query-axis block size for the dense cosine scorer
+#: (``knn_quantized``) — the same contract as ``_ADC_QUERY_CHUNK``
 #: below: peak kernel memory per yield is O(chunk × batch) doubles
 #: plus the matching id arrays, INDEPENDENT of |Q|, so a caller who
 #: ignores the bounded-query contract degrades in wall-clock, never in
@@ -835,7 +688,7 @@ _SIMS_QUERY_CHUNK = 256
 
 def _cosine_score_frames(
     q_ids, q_mat, q_norm, q_valid, ids, c_mat, c_norm, c_valid,
-    chunk: int, scales=None,
+    chunk: int, scales,
 ):
     """Score one Arrow batch of corpus vectors against every query,
     yielding one (query-major) output frame per ≤``chunk`` queries with
@@ -871,16 +724,13 @@ def _cosine_score_frames(
     boundaries are invisible downstream: mapInPandas concatenates
     yields, and the consumer is a per-query top-k window.
 
-    ``scales`` carries the quantized path's per-corpus-row
-    dequantization factors ((codes @ q) * scale == dequantized dot);
-    the float path passes None."""
+    ``scales`` carries the per-corpus-row dequantization factors
+    ((codes @ q) * scale == dequantized dot)."""
     import numpy as np
 
     n_c = len(ids)
     for lo in range(0, len(q_ids), chunk):
-        dots = c_mat @ q_mat[lo : lo + chunk].T
-        if scales is not None:
-            dots *= scales[:, None]
+        dots = (c_mat @ q_mat[lo : lo + chunk].T) * scales[:, None]
         sims = dots / np.outer(c_norm, q_norm[lo : lo + chunk])
         n_q = sims.shape[1]
         keep = np.outer(c_valid, q_valid[lo : lo + chunk]).T.reshape(-1)
@@ -914,7 +764,7 @@ def knn_quantized(
         ensure_workers_can_import,
     )
 
-    _require_same_id_type(queries, corpus, id_col, "corpus")
+    _require_same_id_type(queries, corpus, id_col)
     ensure_workers_can_import(corpus.sparkSession)
     q_chunk = _SIMS_QUERY_CHUNK  # driver-side capture: ships in the closure
     out_schema = _id_typed_schema(
@@ -958,64 +808,6 @@ def knn_quantized(
     )
 
 
-def knn_brute_force_pandas(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-batched numpy variant of the brute-force scorer: queries are
-    collected once into a (|Q|, d) matrix (small by contract) and matmul'd
-    against each Arrow batch of the corpus — per-partition vectorized
-    compute, corpus never shuffled. This is where a BLAS/GPU kernel slots
-    in at 100 TB. Per-batch kernel memory is O(``_SIMS_QUERY_CHUNK`` ×
-    batch) regardless of |Q|."""
-    import numpy as np
-
-    from realtime_voting_data_engineering_spark.session import (
-        ensure_workers_can_import,
-    )
-
-    _require_same_id_type(queries, corpus, id_col, "corpus")
-    ensure_workers_can_import(corpus.sparkSession)
-    q_chunk = _SIMS_QUERY_CHUNK  # driver-side capture: ships in the closure
-    out_schema = _id_typed_schema(
-        corpus, id_col, ["query_id", "neighbor_id"], "cos double"
-    )
-    # Full contract (NULL + ragged) on both sides: dims comes from the
-    # collected query matrix and gates the corpus scan (r6 ADVICE #1).
-    q_ids, q_mat, dims = collect_query_matrix(queries, id_col, vec_col)
-    if q_ids is None:  # empty query set: nothing to score (and the 1-D
-        # np.array([]) would break every axis=1 op / matmul downstream)
-        return queries.sparkSession.createDataFrame([], out_schema)
-    corpus = valid_vectors(corpus, vec_col, dims)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    q_valid = q_norm > 0  # zero queries match nothing (0/0 NaN sorts first)
-    q_norm[~q_valid] = np.inf
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            c_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            if len(c_mat) == 0:
-                continue
-            c_norm = np.linalg.norm(c_mat, axis=1)
-            c_valid = c_norm > 0  # zero vectors match nothing: drop, don't rank
-            c_norm[~c_valid] = np.inf
-            yield from _cosine_score_frames(
-                q_ids, q_mat, q_norm, q_valid, pdf[id_col].to_numpy(),
-                c_mat, c_norm, c_valid, q_chunk,
-            )
-
-    scored = corpus.select(id_col, vec_col).mapInPandas(score, schema=out_schema)
-    return top_k_per_group(
-        scored.filter(F.col("query_id") != F.col("neighbor_id")),
-        ["query_id"],
-        [F.col("cos").desc(), F.col("neighbor_id")],
-        k=k,
-    )
-
-
 def pq_codebooks(dims: int, m: int = 8, ksub: int = 16):
     """Deterministic product-quantization codebooks (m, ksub, dims//m),
     each component uniform in [-0.25, 0.25): md5('pq|<sub>|<code>|<dim>')
@@ -1025,8 +817,8 @@ def pq_codebooks(dims: int, m: int = 8, ksub: int = 16):
     The ±0.25 range matches unit-normalized embeddings (component scale
     ~1/√dims ≈ 0.125 at 64 dims); codebooks an order of magnitude wider
     than the data destroy assignment signal. Fixed codebooks are the
-    portable baseline; swap in k-means-trained ones (like IVF's) when
-    recall matters more than replayability."""
+    portable baseline; k-means-trained ones would buy recall at the cost
+    of replayability."""
     import hashlib
 
     import numpy as np
@@ -1134,25 +926,13 @@ def _pq_encode_batch(x, cb, m: int, dsub: int, ksub: int):
     return codes
 
 
-def pq_reconstruct(codes_csv: list[int], cb) -> "np.ndarray":  # noqa: F821
-    """Decode one PQ code row back to its centroid concatenation —
-    test/serving helper (the ADC trick scores against code distances
-    without ever reconstructing; reconstruction exists for error
-    measurement)."""
-    import numpy as np
-
-    return np.concatenate([cb[s, c] for s, c in enumerate(codes_csv)])
-
-
-def _require_same_id_type(queries: DataFrame, other: DataFrame, id_col: str,
-                          other_what: str) -> None:
+def _require_same_id_type(queries: DataFrame, corpus: DataFrame, id_col: str) -> None:
     """Refuse mismatched id types between the query frame and the
-    corpus/codes frame, loudly and at PLAN time, before any job runs.
+    corpus frame, loudly and at PLAN time, before any job runs.
     Callers — every kernel that emits a query-side id next to a
     corpus-side id, both typed from the corpus side by
-    ``_id_typed_schema`` or the ADC out-schemas:
-    ``knn_brute_force_pandas``, ``knn_quantized``, ``knn_ivf``,
-    ``knn_ivf_fixed``, ``knn_pq_adc`` and ``knn_pq_adc_from_codes``.
+    ``_id_typed_schema`` or the ADC out-schema: ``knn_quantized``,
+    ``knn_ivf_fixed`` and ``knn_pq_adc``.
 
     Cross-family mixes are always refused: string vs numeric makes the
     self-match exclusion vacuous (everything compares unequal, so a
@@ -1169,25 +949,25 @@ def _require_same_id_type(queries: DataFrame, other: DataFrame, id_col: str,
 
     width = {ByteType: 1, ShortType: 2, IntegerType: 4, LongType: 8}
     qt = queries.schema[id_col].dataType
-    ot = other.schema[id_col].dataType
-    if qt == ot:
+    ct = corpus.schema[id_col].dataType
+    if qt == ct:
         return
-    if type(qt) in width and type(ot) in width:
-        if width[type(qt)] <= width[type(ot)]:
-            # Output query_id takes the OTHER side's (wider or equal)
+    if type(qt) in width and type(ct) in width:
+        if width[type(qt)] <= width[type(ct)]:
+            # Output query_id takes the corpus side's (wider or equal)
             # type; the collected query ids upcast exactly.
             return
         raise TypeError(
             f"id column {id_col!r} width mismatch: queries side is {qt}, "
-            f"{other_what} side is {ot} — the output query_id takes the "
-            f"{other_what} side's narrower type and the unsafe Arrow "
+            f"corpus side is {ct} — the output query_id takes the "
+            "corpus side's narrower type and the unsafe Arrow "
             "cast would silently WRAP an out-of-range query id; cast "
-            f"the {other_what} side wider (or the queries side narrower) "
+            "the corpus side wider (or the queries side narrower) "
             "before calling"
         )
     raise TypeError(
         f"id column {id_col!r} type mismatch: queries side is {qt}, "
-        f"{other_what} side is {ot} — self-match exclusion would be "
+        f"corpus side is {ct} — self-match exclusion would be "
         "silently vacuous; cast one side before calling"
     )
 
@@ -1257,7 +1037,6 @@ def _adc_score_frames(qids_arr, luts_arr, ids, code_mat, m: int, chunk: int):
     (s-loop) — identical add order to a per-query loop, and blocking the
     QUERY axis touches no per-score arithmetic, so the vectorization
     changes no bits (pinned by
-    test_pq_adc_from_codes_matches_float_path and
     test_pq_adc_query_chunking_changes_no_bits). Frame boundaries are
     invisible downstream: mapInPandas concatenates yields, and the
     consumer is a per-query top-k window."""
@@ -1302,13 +1081,12 @@ def knn_pq_adc(
     (with codes serialized as CSV strings on the wire) plus one output
     frame PER QUERY per batch; fusing recovered ~0.12-0.17 s of the
     panel's four-round drift at sf0.1 (SCALE.md "Round-9 knn_pq_adc
-    attribution"). To serve from a STORED code table (the real 100 TB
-    shape — m bytes/vector scanned, 32× less than floats), use
-    :func:`knn_pq_adc_from_codes`.
+    attribution"). ``pq_encode`` emits the same codes for storage at
+    rest (one shared ``_pq_encode_batch``).
 
     Scale shape: vectors stream through the kernel against the
     closure-captured LUT stack (O(|Q|·m·ksub) doubles — tiny by
-    contract, like ``knn_brute_force_pandas``'s query matrix); no
+    contract, like ``knn_quantized``'s query matrix); no
     shuffle until the |Q|·k top-k window. Determinism: LUT dots
     accumulate dimension-sequentially, scores subspace-sequentially, so
     DuckDB replays the ranking bit-for-bit (scores are approximate
@@ -1325,7 +1103,7 @@ def knn_pq_adc(
 
     assert dims % m == 0, "dims must divide into m equal subvectors"
     ensure_workers_can_import(queries.sparkSession)
-    _require_same_id_type(queries, corpus, id_col, "corpus")
+    _require_same_id_type(queries, corpus, id_col)
     q_chunk = _ADC_QUERY_CHUNK  # driver-side capture: ships in the closure
     dsub = dims // m
     cb = pq_codebooks(dims, m, ksub)  # (m, ksub, dsub)
@@ -1355,100 +1133,6 @@ def knn_pq_adc(
             )
 
     scored = base.mapInPandas(encode_and_score, schema=out_schema)
-    top = top_k_per_group(
-        scored,
-        ["query_id"],
-        [F.col("adc_dot").desc(), F.col("neighbor_id")],
-        k=k,
-    )
-    return top.withColumn("adc_dot", F.round("adc_dot", 6))
-
-
-def knn_pq_adc_from_codes(
-    queries: DataFrame,
-    codes: DataFrame,
-    dims: int,
-    m: int = 8,
-    ksub: int = 16,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    codes_col: str = "pq_codes",
-) -> DataFrame:
-    """ADC top-k served from a STORED PQ code table — the shape that
-    matters at 100 TB: ``codes`` is ``pq_encode`` output at rest, so the
-    corpus scan reads m bytes/vector and never touches the float
-    embeddings. Row-identical to :func:`knn_pq_adc` over the encoded
-    corpus (same LUTs, same subspace-sequential accumulation — pinned by
-    test_pq_adc_from_codes_matches_float_path).
-
-    Validity contract (the ``valid_vectors`` analogue for codes): a
-    table AT REST accumulates corruption the in-flight path never sees
-    — ``pq_encode`` validated the floats it encoded, but a stored row
-    can arrive NULL, truncated, non-numeric, or bit-flipped out of
-    range. Rows whose code string does not parse to exactly ``m``
-    integers in ``[0, ksub)`` are EXCLUDED here, declaratively (a
-    codegen filter before the kernel): without the gate a negative code
-    would silently WRAP via numpy indexing and score against the wrong
-    (last) centroid — a plausible wrong answer that can win the top-k
-    — and any unparsable row would kill the whole job (one bad row,
-    1000 executors). Exclusion mirrors the float boundary's semantics;
-    only the ``queries`` side (floats) passes ``valid_vectors``.
-    Queries are scored in blocks of ``_ADC_QUERY_CHUNK``, as on
-    :func:`knn_pq_adc`."""
-    import numpy as np
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
-
-    from realtime_voting_data_engineering_spark.session import (
-        ensure_workers_can_import,
-    )
-
-    assert dims % m == 0, "dims must divide into m equal subvectors"
-    ensure_workers_can_import(queries.sparkSession)
-    _require_same_id_type(queries, codes, id_col, "codes")
-    q_chunk = _ADC_QUERY_CHUNK  # driver-side capture: ships in the closure
-    cb = pq_codebooks(dims, m, ksub)
-    qids_arr, luts_arr = _pq_query_luts(
-        queries, cb, dims, m, ksub, id_col, vec_col
-    )
-
-    parsed = F.transform(
-        F.split(F.col(codes_col), ","), lambda x: x.try_cast("int")
-    )
-    valid_codes = (
-        F.col(codes_col).isNotNull()
-        & (F.size(parsed) == m)
-        & ~F.exists(
-            parsed,
-            lambda c: c.isNull() | (c < F.lit(0)) | (c >= F.lit(ksub)),
-        )
-    )
-    # Ship the PARSED array to the kernel: the validity filter already
-    # split + try_cast every code JVM-side; re-splitting the raw string
-    # with per-row Python int() in the kernel would redo that work on
-    # the hot path this operator exists for (r9 review finding).
-    base = codes.filter(valid_codes).select(
-        F.col(id_col), parsed.alias("__codes")
-    )
-    out_schema = StructType(
-        [
-            StructField("query_id", base.schema[id_col].dataType),
-            StructField("neighbor_id", base.schema[id_col].dataType),
-            StructField("adc_dot", DoubleType()),
-        ]
-    )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            if not len(pdf) or not len(qids_arr):
-                continue
-            code_mat = np.array(list(pdf["__codes"]), dtype=np.int64)
-            yield from _adc_score_frames(
-                qids_arr, luts_arr, pdf[id_col].values, code_mat, m, q_chunk
-            )
-
-    scored = base.mapInPandas(score, schema=out_schema)
     top = top_k_per_group(
         scored,
         ["query_id"],

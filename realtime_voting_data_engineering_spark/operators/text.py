@@ -10,9 +10,6 @@ identical semantics in ANSI SQL so a DuckDB oracle can replay it exactly
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -331,85 +328,6 @@ def winnow_fingerprints(
     return hashed.select(
         F.col(id_col),
         F.explode(F.array_distinct(mins)).alias("fp"),
-    ).distinct()
-
-
-def winnow_fingerprints_kernel(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 12,
-    window: int = 8,
-) -> DataFrame:
-    """Arrow-batched numpy twin of ``winnow_fingerprints`` — the GIANT-
-    DOCUMENT scale path. The expression form costs O(n·k) Catalyst
-    higher-order-function steps per doc (~0.6 µs/step measured: a
-    2.3 MB document takes ~16 s — a straggler at 100 TB where 100 MB
-    documents exist); this kernel does the same arithmetic as k
-    vectorized Horner passes over the code-point array (~30 ms for the
-    same document, ~500× less straggler exposure). Normalization runs
-    as the SAME Spark expression (``normalized_text``) before the
-    kernel, and every hash step is exact int64 — the outputs are
-    row-identical to the expression form (pinned on the corpus in
-    tests/test_dedup.py and on hypothesis-random unicode text in
-    tests/test_properties.py), so either can feed the overlap join.
-    Same duplicate-row guard: trailing ``distinct()``."""
-    import numpy as np
-    from numpy.lib.stride_tricks import sliding_window_view
-
-    from realtime_voting_data_engineering_spark.session import (
-        ensure_workers_can_import,
-    )
-
-    ensure_workers_can_import(df.sparkSession)
-    # Ids ride through the kernel as STRINGS: Arrow hands a nullable
-    # long column to pandas as float64, which both wraps NULL ids to
-    # int64-min via np.full (merging every NULL-id doc under one
-    # garbage id) and silently rounds ids above 2^53 — either way
-    # diverging from the expression twin (r7 review findings). A string
-    # round-trip is exact for every int64 and NULL-safe; the cast back
-    # below restores the INPUT id type (captured here, not hard-coded
-    # long — a string or int id column must come back out as itself,
-    # matching the expression twin, per r7 advice).
-    id_type = df.schema[id_col].dataType
-    base = df.select(
-        F.col(id_col).cast("string").alias(id_col),
-        normalized_text(text_col).alias("__norm"),
-    )
-
-    def kern(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_ids: list = []
-            out_fps: list = []
-            for did, s in zip(pdf[id_col], pdf["__norm"]):
-                if s is None or len(s) < k:
-                    continue
-                codes = np.frombuffer(
-                    s.encode("utf-32-le"), dtype=np.uint32
-                ).astype(np.int64)
-                n = len(codes) - k + 1
-                h = np.zeros(n, dtype=np.int64)
-                for j in range(k):  # vectorized Horner == the fold per gram
-                    h = (h * WINNOW_BASE + codes[j : j + n]) % WINNOW_MOD
-                h = (h * WINNOW_MIX) % WINNOW_MOD
-                if n >= window:
-                    mins = sliding_window_view(h, window).min(axis=1)
-                else:  # same semantics as slice past the end: min of all
-                    mins = h.min(keepdims=True)
-                fps = np.unique(mins)
-                out_ids.extend([did] * len(fps))
-                out_fps.append(fps)
-            if out_ids:
-                yield pd.DataFrame(
-                    {
-                        id_col: pd.array(out_ids, dtype="string"),
-                        "fp": np.concatenate(out_fps),
-                    }
-                )
-
-    out = base.mapInPandas(kern, schema=f"{id_col} string, fp long")
-    return out.select(
-        F.col(id_col).cast(id_type).alias(id_col), "fp"
     ).distinct()
 
 

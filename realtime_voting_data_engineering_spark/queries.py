@@ -48,7 +48,7 @@ class QuerySpec:
     """One engine capability: Spark implementation + DuckDB oracle."""
 
     fn: QueryFn
-    oracle: str | None  # None → non-SQL-expressible; driver does rows-only
+    oracle: str  # DuckDB SQL; every registered query has one
     headline: bool = False  # included in bench.py
     tags: tuple[str, ...] = field(default=tuple)
 
@@ -58,10 +58,16 @@ REGISTRY: dict[str, QuerySpec] = {}
 
 def register(
     name: str,
-    oracle: str | None,
+    oracle: str,
     headline: bool = False,
     tags: tuple[str, ...] = (),
 ) -> Callable[[QueryFn], QueryFn]:
+    if not isinstance(oracle, str):
+        raise TypeError(
+            f"query {name!r}: oracle must be DuckDB SQL text, "
+            f"got {type(oracle).__name__}"
+        )
+
     def deco(fn: QueryFn) -> QueryFn:
         REGISTRY[name] = QuerySpec(fn=fn, oracle=oracle, headline=headline, tags=tags)
         return fn
@@ -708,11 +714,7 @@ def queries() -> dict[str, QueryFn]:
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: REGISTRY[name].oracle
-        for name in _ordered_names()
-        if REGISTRY[name].oracle is not None
-    }
+    return {name: REGISTRY[name].oracle for name in _ordered_names()}
 
 
 def headline_queries() -> dict[str, QueryFn]:

@@ -5,10 +5,10 @@ Oracle strategy: every operator whose algorithm is portable (md5-based
 hashing, double-precision folds, linear/clamped scoring) gets a full
 DuckDB replay — including MinHash, SimHash, SRP banding, int8
 quantization, and the fake media decoder, all built on md5-derived
-constants precisely so both engines can compute them. Only operators
-with genuinely non-portable state register without an oracle
-(k-means-trained IVF; HLL / KLL sketches) — the driver records a
-rows-only check, and pytest covers recall against the exact variants.
+constants precisely so both engines can compute them. Every
+registration carries an oracle (``register`` refuses one without); the
+approximate operators' recall against their exact variants is covered
+in pytest.
 
 Imported for its registration side effects by
 ``realtime_voting_data_engineering_spark.queries``.
@@ -901,10 +901,8 @@ def knn_ivf_fixed(spark: SparkSession, sf_dir: str) -> DataFrame:
     within probed lists only. The fixed quantizer makes the ENTIRE
     index→probe→re-rank path SQL-replayable, graduating IVF to driver
     hash evidence (r1-r5 the k-means form was the one non-sketch
-    rows-only query). Production keeps the sample-trained k-means
-    quantizer (``similarity.knn_ivf``, ``ivf_train_centroids`` — better
-    recall on clustered data); its recall and assignment determinism
-    stay pytest-bounded in tests/test_similarity.py."""
+    rows-only query). Its recall vs brute force and its pruning
+    contract stay pytest-bounded in tests/test_similarity.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     corpus = S.unique_by_id(emb, dims=64)  # id-uniqueness boundary
     out = S.knn_ivf_fixed(

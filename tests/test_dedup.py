@@ -330,26 +330,11 @@ def test_minhash_pipeline_on_identical_corpus(spark):
     assert clusters == {i: 0 for i in range(6)}
 
 
-def test_winnow_kernel_twin_matches_expression_form(spark, sf_dir):
-    """The Arrow-batched numpy winnower (the giant-document scale path)
-    must be row-identical to the expression form on the real corpus —
-    same normalization (shared Spark expression), same exact int64
-    Horner hash, same window minima and dedup semantics."""
-    from realtime_voting_data_engineering_spark.operators import text as X
-    from realtime_voting_data_engineering_spark.sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents")
-    expr = {(r.doc_id, r.fp) for r in X.winnow_fingerprints(docs).collect()}
-    kern = {(r.doc_id, r.fp) for r in X.winnow_fingerprints_kernel(docs).collect()}
-    assert expr == kern
-    assert expr, "corpus should produce fingerprints"
-
-
 def test_winnow_kernel_handles_giant_and_degenerate_docs(spark):
     """A multi-megabyte document, an empty one, and a single-repeated-
-    token one must neither crash nor blow up the kernel path (the
-    measured straggler class the kernel exists for: the expression form
-    costs ~7 s/MB, the kernel ~0.5 s/MB including decode)."""
+    token one must neither crash nor blow up the winnower (the
+    straggler class: the expression form costs ~7 s/MB), and extreme
+    ids must come through exactly."""
     from realtime_voting_data_engineering_spark.operators import text as X
 
     words = ["alpha", "beta", "gamma", "delta", "spark", "merge"]
@@ -357,10 +342,10 @@ def test_winnow_kernel_handles_giant_and_degenerate_docs(spark):
     rows = [(1, big), (2, ""), (3, "spam " * 50_000), (4, None),
             (None, "a real document with a NULL id and plenty of text"),
             # 2^53+1: not float64-representable — the id must survive
-            # the kernel exactly (string round-trip, r7 review finding)
+            # exactly, not rounded to 2^53
             (9007199254740993, "precision test document with enough text")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got = X.winnow_fingerprints_kernel(df).collect()
+    got = X.winnow_fingerprints(df).collect()
     by_doc = {}
     for r in got:
         by_doc.setdefault(r.doc_id, set()).add(r.fp)
@@ -368,41 +353,30 @@ def test_winnow_kernel_handles_giant_and_degenerate_docs(spark):
     assert 2 not in by_doc  # shorter than k → no rows
     assert len(by_doc.get(3, ())) <= 4  # degenerate repetition collapses
     assert 4 not in by_doc
-    # NULL-id docs keep a NULL id — the float64-NaN wraparound to
-    # int64-min would merge every NULL-id doc under one garbage id and
-    # diverge from the expression twin (r7 review finding).
+    # NULL-id docs keep a NULL id, not a garbage sentinel.
     assert None in by_doc and len(by_doc[None]) > 0
     assert -9223372036854775808 not in by_doc
     assert 9007199254740993 in by_doc  # not rounded to 2^53
-    expr = {
-        (r.doc_id, r.fp) for r in X.winnow_fingerprints(df).collect()
-    }
-    assert {(d, f) for d, fs in by_doc.items() for f in fs} == expr
 
 
 def test_winnow_kernel_preserves_id_type(spark):
-    """The kernel rides ids through strings internally; the cast back
-    must restore the INPUT id type, not a hard-coded long — a string
-    doc-id column (common in real corpora: UUIDs, URL keys) was being
-    silently NULLed by the long cast (r7 advice, fixed r8). Output rows
-    and the id dtype must match the expression twin."""
+    """String doc ids (common in real corpora: UUIDs, URL keys),
+    including a NULL one, come back as strings, and int ids narrower
+    than long come back as int."""
     from realtime_voting_data_engineering_spark.operators import text as X
 
     rows = [("doc-aa", "the quick brown fox jumps over the lazy dog today"),
             ("urn:doc/7", "another document with plenty of text to fingerprint"),
             (None, "null string id document with enough words to window")]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    kern = X.winnow_fingerprints_kernel(df)
-    assert kern.schema["doc_id"].dataType.simpleString() == "string"
-    got = {(r.doc_id, r.fp) for r in kern.collect()}
-    expr = {(r.doc_id, r.fp) for r in X.winnow_fingerprints(df).collect()}
-    assert got == expr
-    assert any(d == "doc-aa" for d, _ in got), "string ids must survive"
-    # int ids narrower than long must come back as their own type too
+    fps = X.winnow_fingerprints(df)
+    assert fps.schema["doc_id"].dataType.simpleString() == "string"
+    got = {r.doc_id for r in fps.collect()}
+    assert got == {"doc-aa", "urn:doc/7", None}, "string ids must survive"
     df_int = spark.createDataFrame(
         [(7, "an integer id document with enough words to fingerprint")],
         "doc_id int, text string",
     )
-    kern_int = X.winnow_fingerprints_kernel(df_int)
-    assert kern_int.schema["doc_id"].dataType.simpleString() == "int"
-    assert kern_int.count() > 0
+    fps_int = X.winnow_fingerprints(df_int)
+    assert fps_int.schema["doc_id"].dataType.simpleString() == "int"
+    assert {r.doc_id for r in fps_int.collect()} == {7}

@@ -1,8 +1,8 @@
 """The id-schema gate: no kernel schema gives an id column a literal type.
 
 Kernels type their id columns from the input (``similarity._id_typed_schema``,
-``stateful._totals_schema``), so a string, int or long id comes back out as
-itself. This gate keeps it that way. It scans every string and f-string in the
+the ADC and stateful out-schemas), so a string, int or long id comes back out
+as itself. This gate keeps it that way. It scans every string and f-string in the
 package (placeholders read as ``{name}``, docstrings skipped) and every
 ``StructField`` call. A literal type given to an ``id_col``/``key_col`` column,
 or to ``query_id``/``neighbor_id``, is a finding. It scans literals, not
@@ -25,9 +25,8 @@ LITERAL_ID_TYPE = re.compile(
     r"(?:\{(?:id_col|key_col)\}|\b(?:query_id|neighbor_id))\s+(?:long|bigint|int|integer"
     r"|short|smallint|tinyint|byte|string|double|float|decimal|binary|boolean)\b"
 )
-# The winnow kernel hashes ids as strings (a lossless round-trip for any id
-# type) and casts them back to the input type right after the kernel.
-ALLOWED = {("operators/text.py", "{id_col} string"): "winnow string round-trip"}
+# (module path, "column type") → why a literal id type is sound there.
+ALLOWED: dict[tuple[str, str], str] = {}
 
 
 def _callee(func: ast.expr) -> str:
@@ -89,11 +88,8 @@ def test_current_tree_has_no_unguarded_or_stale_sites():
 
 
 def test_allowlisted_inventory_matches_live_findings_exactly():
-    """The only literal id type in the package is the winnow round-trip, and
-    that kernel casts the id back to the input type right after it."""
-    assert {(rel, text) for rel, _, text in package_findings()} == set(ALLOWED)
-    text_py = (PKG / "operators" / "text.py").read_text()
-    assert "F.col(id_col).cast(id_type).alias(id_col)" in text_py
+    """The package types no id column literally, so the allowlist is empty."""
+    assert ALLOWED == {} and package_findings() == []
 
 
 def test_red_stale_allowlist_entry_fails():

@@ -115,8 +115,7 @@ def test_ivf_index_at_rest_prunes_probed_clusters(spark, sf_dir, tmp_path):
     from realtime_voting_data_engineering_spark.operators import similarity as S
 
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = S.ivf_train_centroids(emb, n_centroids=8)
-    assigned = S.ivf_assign(emb, cent)
+    assigned = S.ivf_fixed_assign(emb, dims=64, n_centroids=8)
     path = str(tmp_path / "ivf_index")
     L.write_partitioned(assigned, path, ("cluster",))
 

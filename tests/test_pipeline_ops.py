@@ -169,7 +169,7 @@ def test_pq_encode_reconstruction_and_determinism(spark, sf_dir):
     vecs = {r.vec_id: np.array(r.embedding, dtype=np.float64) for r in emb.collect()}
     for vid, codes in rows.items():
         parts = [int(c) for c in codes.split(",")]
-        recon = S.pq_reconstruct(parts, cb)
+        recon = np.concatenate([cb[s, c] for s, c in enumerate(parts)])
         for s in range(8):
             sub = vecs[vid][s * 8 : (s + 1) * 8]
             err_l2 = np.linalg.norm(sub - recon[s * 8 : (s + 1) * 8])
@@ -214,31 +214,6 @@ def test_pq_adc_recall_vs_exact(spark, sf_dir):
     assert hits / total >= 0.15, f"ADC recall {hits}/{total}"
 
 
-def test_pq_adc_from_codes_matches_float_path(spark, sf_dir):
-    """The stored-code serving path (`knn_pq_adc_from_codes` over
-    `pq_encode` output — the real 100 TB shape) must be row-identical to
-    the fused float-input path: same LUTs, same subspace-sequential
-    accumulation, so vectorizing across queries changes no bits."""
-    from realtime_voting_data_engineering_spark.operators import similarity as S
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") < 10).limit(10)
-    from_floats = sorted(
-        map(tuple, S.knn_pq_adc(queries, emb, dims=64, m=8, ksub=16, k=5).collect())
-    )
-    codes = S.pq_encode(emb, dims=64, m=8, ksub=16)
-    from_codes = sorted(
-        map(
-            tuple,
-            S.knn_pq_adc_from_codes(
-                queries, codes, dims=64, m=8, ksub=16, k=5
-            ).collect(),
-        )
-    )
-    assert from_floats == from_codes
-    assert len(from_floats) > 0
-
-
 def test_pq_adc_fused_single_python_crossing(spark, sf_dir):
     """The float-input path encodes and scores in ONE fused Arrow kernel
     (r9): the r5-r8 shape chained two mapInPandas kernels, paying a
@@ -252,38 +227,6 @@ def test_pq_adc_fused_single_python_crossing(spark, sf_dir):
     out = S.knn_pq_adc(queries, emb, dims=64, m=8, ksub=16, k=5)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert plan.count("MapInPandas") == 1, plan
-
-
-def test_pq_adc_from_codes_excludes_corrupt_rows(spark):
-    """A stored code table accumulates corruption pq_encode's in-flight
-    output never shows (r9 review finding): a NEGATIVE code must not
-    silently wrap via numpy indexing onto the last centroid (a plausible
-    wrong score that can win the top-k), and NULL/truncated/non-numeric
-    rows must be excluded, not crash the kernel. The boundary mirrors
-    valid_vectors: exclusion, declaratively, before the kernel."""
-    from realtime_voting_data_engineering_spark.operators import similarity as S
-
-    queries = spark.createDataFrame(
-        [(100, [0.1] * 8)], "vec_id bigint, embedding array<float>"
-    )
-    clean = [(i, "1,2") for i in range(1, 6)]
-    corrupt = [
-        (10, "3,-1"),      # negative → would wrap to the last centroid
-        (11, None),        # NULL string
-        (12, ""),          # empty
-        (13, "1"),         # truncated (m=2 expected)
-        (14, "1,2,3"),     # too many
-        (15, "a,b"),       # non-numeric
-        (16, "1,4"),       # out of range (ksub=4 → max 3)
-    ]
-    codes = spark.createDataFrame(
-        clean + corrupt, "vec_id bigint, pq_codes string"
-    )
-    out = S.knn_pq_adc_from_codes(
-        queries, codes, dims=8, m=2, ksub=4, k=20
-    ).collect()
-    got_ids = {r.neighbor_id for r in out}
-    assert got_ids == {1, 2, 3, 4, 5}, got_ids
 
 
 def test_corpus_token_is_none_when_directory_listing_fails(monkeypatch, tmp_path):
@@ -349,7 +292,7 @@ def test_pq_adc_colliding_query_ids_deterministic(spark):
 
 
 def test_pq_adc_query_chunking_changes_no_bits(spark, monkeypatch):
-    """The ADC kernels block the QUERY axis so per-batch peak memory is
+    """The ADC kernel blocks the QUERY axis so per-batch peak memory is
     O(chunk × batch) instead of O(|Q| × batch) (ADVICE r9 #2). Blocking
     must be invisible in the output: force a chunk smaller than the
     query count and require row-identical results to the default (one
@@ -377,8 +320,8 @@ def test_pq_adc_query_chunking_changes_no_bits(spark, monkeypatch):
 def test_pq_adc_rejects_mismatched_id_types(spark):
     """Mixed id dtypes make the kernels' numpy self-match compare
     vacuous (string vs int64 → everything 'unequal' → a vector scores
-    against itself and wins its own top-k). Both ADC entry points must
-    refuse at plan time, loudly (ADVICE r9 #3)."""
+    against itself and wins its own top-k). The ADC kernel must refuse
+    at plan time, loudly (ADVICE r9 #3)."""
     import pytest
 
     from realtime_voting_data_engineering_spark.operators import similarity as S
@@ -392,9 +335,6 @@ def test_pq_adc_rejects_mismatched_id_types(spark):
     )
     with pytest.raises(TypeError, match="id column .* type mismatch"):
         S.knn_pq_adc(str_queries, corpus, dims=8, m=2, ksub=4, k=3)
-    codes = S.pq_encode(corpus, dims=8, m=2, ksub=4)
-    with pytest.raises(TypeError, match="id column .* type mismatch"):
-        S.knn_pq_adc_from_codes(str_queries, codes, dims=8, m=2, ksub=4, k=3)
     # NARROWER-query integral mixes were always numerically correct
     # (numpy compares int32 vs int64 exactly, and the output query_id
     # upcasts exactly to the corpus's wider type) — the guard must not
@@ -415,9 +355,6 @@ def test_pq_adc_rejects_mismatched_id_types(spark):
     )
     with pytest.raises(TypeError, match="width mismatch"):
         S.knn_pq_adc(wide_queries, int_corpus, dims=8, m=2, ksub=4, k=3)
-    int_codes = S.pq_encode(int_corpus, dims=8, m=2, ksub=4)
-    with pytest.raises(TypeError, match="width mismatch"):
-        S.knn_pq_adc_from_codes(wide_queries, int_codes, dims=8, m=2, ksub=4, k=3)
 
 
 def test_apply_changes_latest_null_predicate_keeps_key(spark):

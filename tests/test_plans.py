@@ -211,8 +211,6 @@ def test_no_broadcast_hint_on_sf_scaled_relations(spark):
     sf = "/root/testdata/sf0.001"
     offenders = {}
     for name, spec in Q.REGISTRY.items():
-        if spec.oracle is None:
-            continue
         df = spec.fn(spark, sf)
         plan = df._jdf.queryExecution().analyzed()
         bad = []
@@ -235,8 +233,6 @@ def test_no_python_udfs_or_cartesian_in_oracled_queries(spark):
     sf = "/root/testdata/sf0.001"
     offenders = {}
     for name, spec in Q.REGISTRY.items():
-        if spec.oracle is None:
-            continue
         plan = plan_of(spec.fn(spark, sf))
         bad = [
             marker

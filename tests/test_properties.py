@@ -370,21 +370,3 @@ def test_connected_components_matches_union_find_on_random_graphs(
             parent[max(ra, rb)] = min(ra, rb)
     expected = {n: find(n) for n in parent}
     assert got == expected
-
-
-@given(docs=st.lists(texts, min_size=1, max_size=6))
-@SET
-def test_winnow_kernel_equals_expression_on_random_text(spark, docs):
-    """The numpy winnower and the Catalyst expression winnower must be
-    row-identical on arbitrary text — including unicode letters, short
-    docs below k, repeated tokens, and whitespace runs — not just on
-    the corpus (tests/test_dedup.py covers that). Both consume the SAME
-    normalization expression; this pins the hash/window arithmetic."""
-    from realtime_voting_data_engineering_spark.operators import text as X
-
-    df = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(docs)], "doc_id long, text string"
-    )
-    expr = {(r.doc_id, r.fp) for r in X.winnow_fingerprints(df).collect()}
-    kern = {(r.doc_id, r.fp) for r in X.winnow_fingerprints_kernel(df).collect()}
-    assert expr == kern

@@ -17,6 +17,8 @@ from __future__ import annotations
 import json
 import pathlib
 
+import pytest
+
 from realtime_voting_data_engineering_spark import queries as Q
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
@@ -31,6 +33,17 @@ def test_window_is_50_unique_registered_names():
     assert len(set(Q.DRIVER_WINDOW)) == WINDOW_SIZE
     missing = set(Q.DRIVER_WINDOW) - Q.REGISTRY.keys()
     assert not missing, f"window names not registered: {sorted(missing)}"
+
+
+def test_register_refuses_a_query_without_an_oracle():
+    """Every registered query carries its DuckDB oracle: ``register``
+    refuses a missing one when the module is imported, and the registry
+    is left unchanged."""
+    before = dict(Q.REGISTRY)
+    with pytest.raises(TypeError, match="oracle must be DuckDB SQL"):
+        Q.register("no_oracle_probe", None)
+    assert Q.REGISTRY == before
+    assert Q.oracle_sql().keys() == Q.queries().keys()
 
 
 def test_queries_iterate_window_first_and_drop_nothing():
@@ -260,7 +273,7 @@ def test_no_native_decimal_to_double_casts_in_oracles():
     bad = {
         name: hits
         for name, spec in Q.REGISTRY.items()
-        if spec.oracle and (hits := native_decimal_casts(spec.oracle))
+        if (hits := native_decimal_casts(spec.oracle))
     }
     assert not bad, (
         f"oracles using DuckDB's native decimal→double cast: {bad} — "

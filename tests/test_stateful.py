@@ -60,17 +60,15 @@ def test_running_totals_stateful_matches_batch(spark, vote_events, json_stream_d
 def test_running_totals_keep_the_input_key_type(spark, vote_events, json_stream_dir, tmp_path):
     """The output key column takes the input key's type: a bigint key
     runs through the Arrow kernel and comes back as bigint, with the
-    same totals as the batch aggregate. Both operators' schemas are
-    checked; only the v1 operator runs (the v2 runtime needs protobuf)."""
+    same totals as the batch aggregate."""
     from pyspark.sql import types as T
 
     def keyed(df):
         return df.withColumn("k", F.crc32("candidate_id"))
 
     parsed = keyed(_parsed_stream(spark, json_stream_dir))
-    for op in (S.running_totals_stateful, S.running_totals_tws):
-        assert op(parsed, "k", "vote").schema["k"].dataType == T.LongType()
     totals = S.running_totals_stateful(parsed, "k", "vote")
+    assert totals.schema["k"].dataType == T.LongType()
     q = P.start_update_aggregate(totals, "stateful_long_key", str(tmp_path / "ckpt"))
     q.awaitTermination(120)
     got = {
@@ -112,101 +110,3 @@ def test_first_seen_dedup_stateful(spark, vote_events, tmp_path):
         out.select("voter_id", "candidate_id").distinct().count()
         == vote_events.count()
     )
-
-
-@pytest.mark.skipif(
-    not S.tws_available(),
-    reason="transformWithState needs protobuf (absent in this container); "
-    "operator is availability-gated like the Kafka adapters",
-)
-def test_running_totals_tws_matches_batch(spark, vote_events, json_stream_dir, tmp_path):
-    """The transformWithState (v2 API) twin produces the same final
-    per-key totals as the batch aggregate — same harness as the v1
-    applyInPandasWithState test. Needs the RocksDB state store; set it
-    on the query's session before start."""
-    provider_key = "spark.sql.streaming.stateStore.providerClass"
-    prev = spark.conf.get(provider_key, None)
-    spark.conf.set(
-        provider_key,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        parsed = _parsed_stream(spark, json_stream_dir)
-        totals = S.running_totals_tws(parsed, "candidate_id", "vote")
-        q = P.start_update_aggregate(totals, "tws_totals", str(tmp_path / "ckpt_tws"))
-        q.awaitTermination(120)
-        got = {
-            r.candidate_id: (r.n_events, r.total)
-            for r in spark.sql(
-                "SELECT candidate_id, max(n_events) AS n_events, max(total) AS total "
-                "FROM tws_totals GROUP BY candidate_id"
-            ).collect()
-        }
-    finally:
-        # the session is shared (session-scoped fixture): restore the
-        # provider so later stateful tests run under the default store
-        if prev is None:
-            spark.conf.unset(provider_key)
-        else:
-            spark.conf.set(provider_key, prev)
-    expected = {
-        r.candidate_id: (r.n, float(r.s))
-        for r in vote_events.groupBy("candidate_id")
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("vote").alias("s"))
-        .collect()
-    }
-    assert got == expected
-
-
-class _FakeValueState:
-    """Minimal ValueState double: the tuple get/exists/update surface
-    RunningTotalsProcessor touches."""
-
-    def __init__(self):
-        self._v = None
-
-    def exists(self):
-        return self._v is not None
-
-    def get(self):
-        return self._v
-
-    def update(self, v):
-        self._v = tuple(v)
-
-
-class _FakeHandle:
-    def __init__(self):
-        self.states = {}
-
-    def getValueState(self, name, schema):
-        self.states[name] = _FakeValueState()
-        return self.states[name]
-
-
-def test_tws_processor_logic_with_mocked_handle():
-    """The transformWithState RUNTIME is protobuf-gated in this
-    container, so the integration test above always skips here; this
-    exercises RunningTotalsProcessor.handleInputRows directly against a
-    mocked handle (ADVICE r5) so the ValueState tuple handling, cross-
-    micro-batch accumulation, and output shape can't bit-rot unnoticed:
-    two batches for one key accumulate, state persists between calls,
-    and each call emits exactly one (key, n, total) row."""
-    import pandas as pd
-
-    proc = S.RunningTotalsProcessor("candidate_id", "vote")
-    handle = _FakeHandle()
-    proc.init(handle)
-    assert set(handle.states) == {"totals"}
-
-    b1 = [pd.DataFrame({"vote": [1.0, 1.0]}), pd.DataFrame({"vote": [1.0]})]
-    out1 = list(proc.handleInputRows(("alice",), iter(b1), None))
-    assert len(out1) == 1
-    row = out1[0].iloc[0]
-    assert (row["candidate_id"], row["n_events"], row["total"]) == ("alice", 3, 3.0)
-    assert handle.states["totals"].get() == (3, 3.0)
-
-    out2 = list(proc.handleInputRows(("alice",), iter([pd.DataFrame({"vote": [2.0]})]), None))
-    row2 = out2[0].iloc[0]
-    assert (row2["n_events"], row2["total"]) == (4, 5.0)
-    proc.close()

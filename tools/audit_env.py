@@ -549,6 +549,22 @@ class Spill:
 THREADS = 8
 
 
+def stop_between_triggers(q) -> None:
+    """Stop streaming query ``q`` while no micro-batch is running. A stop
+    that lands during a batch's commit aborts its write and leaves
+    ``Aborting commit`` and Hadoop temp-file stack traces in stderr. Wait
+    until a batch newer than the current one has reported progress and no
+    trigger is active, then stop; after 30 s stop anyway."""
+    seen = (q.lastProgress or {}).get("batchId")
+    deadline = time.monotonic() + 30.0
+    while q.isActive and time.monotonic() < deadline:
+        if (q.lastProgress or {}).get("batchId") != seen \
+                and not q.status["isTriggerActive"]:
+            break
+        time.sleep(0.01)
+    q.stop()
+
+
 def persisted_rdd_count(spark) -> int:
     return int(spark.sparkContext._jsc.sc().getPersistentRDDs().size())
 
@@ -810,7 +826,7 @@ class Concurrency:
                 # empty batches — a stalled rate source must fail the leg.
                 errs.append("stream processed zero input rows during the mix")
         finally:
-            q.stop()
+            stop_between_triggers(q)
         report["mixed_stream_batch"] = {
             "status": "match" if not errs else "fail",
             "detail": "; ".join(errs[:4]),

@@ -109,12 +109,12 @@ class Run:
         return Q.REGISTRY[name]
 
     def names(self, pool: list[str] | None = None) -> list[str]:
-        """``pool`` (default: every oracled query, sorted) narrowed to
+        """``pool`` (default: every registered query, sorted) narrowed to
         ``only``."""
         if pool is None:
             from realtime_voting_data_engineering_spark import queries as Q
 
-            pool = sorted(n for n, s in Q.REGISTRY.items() if s.oracle is not None)
+            pool = sorted(Q.REGISTRY)
         return [n for n in pool if self.only is None or n in self.only]
 
     @staticmethod
