@@ -6,9 +6,12 @@ JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
 Timing excludes session/JVM startup and per-plan codegen compilation:
 each query first runs once at the smallest scale factor (sf0.001) so
 janino compiles its generated code, then is timed at the target SF —
-steady-state engine throughput, not one-shot compile latency. Results
-are fully materialized via collect (outputs are small aggregates by
-design).
+steady-state engine throughput, not one-shot compile latency. Each
+query's three timed runs are back to back, so its own classes are
+cached whatever the codegen cache size; a mix of queries recompiles
+unless the cache holds them all (``session.CODEGEN_CACHE_ENTRIES``).
+Results are fully materialized via collect (outputs are small
+aggregates by design).
 """
 
 from __future__ import annotations
@@ -280,6 +283,11 @@ def main() -> None:
 
     # Compile warmup: run each query once at the smallest SF so janino
     # codegen for these plan shapes is cached before the timed runs.
+    # That holds only while the codegen cache outlives the warmup's
+    # ~230 classes: get_spark sizes it to CODEGEN_CACHE_ENTRIES. At
+    # Spark's default 100 entries the warmup evicts itself, and only the
+    # min of 3 back-to-back runs below keeps compilation out of the
+    # figure, hiding the recompile a round-robin of queries pays.
     warm_dir = "/root/testdata/sf0.001"
     if os.path.isdir(warm_dir):
         for fn in Q.headline_queries().values():

@@ -50,7 +50,13 @@ def ensure_session_confs(spark: SparkSession) -> None:
     depend on. The driver harness supplies its *own* SparkSession — a
     vanilla one rejects TIMESTAMP(NANOS) parquet and may carry a
     non-UTC session timezone, so we pin both here rather than relying on
-    our session builder having been used."""
+    our session builder having been used.
+
+    Static confs cannot be pinned here: ``spark.conf.set`` raises
+    ``CANNOT_MODIFY_STATIC_CONFIG`` on a live session. So the codegen
+    cache size (``session.CODEGEN_CACHE_ENTRIES``) is left alone, and a
+    vanilla session keeps Spark's 100 entries and recompiles warm
+    queries."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     # Loud-not-wrong for every Pandas kernel: with the default (false),

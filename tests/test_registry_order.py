@@ -78,8 +78,7 @@ def test_registry_leaves_two_window_slots():
 
 def test_out_of_window_queries_have_previous_round_rows():
     """Rotation invariant: a query may leave the 50-slot window only if the
-    previous round's driver snapshot has a row for it (hash-pass, or a
-    rows-only row for no-oracle queries)."""
+    previous round's driver snapshot has a hash-pass row for it."""
     prev = json.loads(PREV_CORRECTNESS.read_text())
     out_of_window = [n for n in Q.REGISTRY if n not in set(Q.DRIVER_WINDOW)]
     stale = []
@@ -87,9 +86,9 @@ def test_out_of_window_queries_have_previous_round_rows():
         row = prev.get(name)
         if row is None:
             stale.append(f"{name}: no previous-round driver row")
-        elif row.get("err") not in (None, "no_oracle"):
+        elif row.get("err") is not None:
             stale.append(f"{name}: previous row not green ({row.get('err')})")
-        elif row.get("err") is None and not row.get("hash_match"):
+        elif not row.get("hash_match"):
             stale.append(f"{name}: previous row hash-failed")
     assert not stale, "out-of-window queries lack fresh driver evidence:\n" + "\n".join(
         stale
