@@ -23,11 +23,13 @@ pipeline as one coherent, Spark-first engine:
 - ``streaming``  — Structured Streaming layer: watermarked update-mode
                    aggregates, dedup-within-watermark, latest-per-key
                    compaction, foreachBatch upsert sinks.
-- ``plans``      — plan-inspection helpers (assert pushdown / broadcast).
 
 Everything here is public PySpark API; no custom Catalyst rules are needed
 (SURVEY.md §4). Designed for 100 TB scale: declarative plans, broadcast
-dims, partial aggregation, no driver-side collects in any operator.
+dims, partial aggregation. Operators collect to the driver only where the
+collected set is bounded: the connected-components union-find below its
+edge gate, the |Q|-bounded kNN query collects, and the one-row BM25
+statistics fold.
 """
 
 __version__ = "0.1.0"

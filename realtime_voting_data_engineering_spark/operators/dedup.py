@@ -404,8 +404,8 @@ def minhash_dedup_pairs(
     candidate generation and verification; production jobs on clusters
     with executor churn should write to a real table instead
     (localCheckpoint storage dies with its executor). The checkpoint is
-    EAGER by policy: connected-components' auto gate counts the pairs
-    before choosing its method, so consumers span multiple driver-side
+    EAGER by policy: connected-components' size gate counts the pairs
+    before choosing its engine, so consumers span multiple driver-side
     jobs (canonical rules: SCALE.md "Materialization policy").
 
     ``signature_parallelism`` (r15 optimization): when set, the
@@ -431,77 +431,58 @@ def minhash_dedup_pairs(
     )
 
 
-#: The auto engine's size gate: pair sets of at most this many edges
-#: run the driver union-find, larger ones the distributed propagation.
+#: Size gate: pair sets of at most this many edges run the driver
+#: union-find, larger ones star contraction.
 _CC_DRIVER_MAX_EDGES = 1_000_000
 
-#: Round cap for both distributed engines; not converging raises.
+#: Round cap for star contraction; not converging raises.
 _CC_MAX_ROUNDS = 20
 
 
 def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    method: str = "auto",
+    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
 ) -> DataFrame:
     """Connected components over the near-dup pair graph — the dedup
     endgame: transitive closure turns pairs into clusters so a pipeline
     can keep one canonical doc per cluster.
 
-    Three engines, two methods (identical output):
+    Two engines, one rule (identical output): count the (lazily
+    checkpointed) pair set; ≤ ``_CC_DRIVER_MAX_EDGES`` edges → driver
+    union-find; overflow → star contraction
+    (``connected_components_star``). The count is the materialization
+    the first distributed round would have paid anyway. This is the
+    same size-gated strategy Spark itself applies to joins (broadcast
+    vs shuffle): the verified near-dup pair set is orders of magnitude
+    smaller than the corpus that produced it (LSH banding passes ~0.1%
+    of pairs, verification prunes further), so below the gate an
+    iterative distributed fixpoint pays multiple all-cluster scheduling
+    rounds to process data that fits in one task. The gate was set from
+    MEASURED clique-family-graph numbers with the Arrow-backed collect
+    against min-label propagation, the fastest distributed engine on
+    such shallow graphs (driver/propagation: 300k edges 1.06/2.17 s,
+    600k 1.49/2.20 s, 1M 3.37/6.46 s; star is 1.3-1.7× slower than
+    propagation there, SCALE.md) — the driver engine wins the whole
+    gated range; 1M edges ≈ 16 MB on the wire, ~300 MB of Python
+    union-find state, the broadcast size class. On a real cluster the
+    distributed scheduling floor is higher still, making the gate
+    conservative.
 
-    - ``method="auto"`` (default) — count the (just-checkpointed) pair
-      set and dispatch: ≤ ``_CC_DRIVER_MAX_EDGES`` edges → driver
-      union-find; overflow → distributed propagation. The count is the
-      materialization the first distributed round would have paid
-      anyway. This is the same size-gated strategy Spark itself
-      applies to joins (broadcast vs shuffle): the
-      verified near-dup pair set is orders of magnitude smaller than
-      the corpus that produced it (LSH banding passes ~0.1% of pairs,
-      verification prunes further), so below the gate an iterative
-      distributed fixpoint pays multiple all-cluster scheduling rounds
-      to process data that fits in one task. The default is set from
-      MEASURED clique-family-graph numbers with the Arrow-backed
-      collect (driver/propagate: 300k edges 1.06/2.17 s, 600k
-      1.49/2.20 s, 1M 3.37/6.46 s — the driver engine wins the whole
-      gated range; 1M edges ≈ 16 MB on the wire, ~300 MB of Python
-      union-find state, the broadcast size class). On a real cluster
-      the distributed scheduling floor is higher still, making the
-      gate conservative.
-
-      The driver engine is a single-pass union-find over the collected
-      pair set with min-id roots; exact, deterministic, and
-      row-identical to the distributed engines (pytest-pinned on
-      planted and hypothesis-random graphs). It declines when a NULL id
-      appears (production pair generators cannot emit one — the
-      ``id_a < id_b`` canonical filter drops NULL comparisons — so this
-      is a defensive guard, not a path) and propagation answers.
-      Propagation is iterative min-label propagation: every node starts
-      labeled with itself; each round every node takes the min of its
-      own and its neighbors' labels; fixpoint in O(component diameter)
-      rounds. Right distributed default for near-dup graphs, whose
-      clusters are shallow (diameter ~2-4; measured 1.3-1.7× faster
-      than star there, SCALE.md).
-    - ``method="star"`` — alternating large-star/small-star contraction
-      (Kiveris et al., "Connected Components in MapReduce and Beyond"):
-      each round rewires edges toward each neighborhood's minimum, so
-      component diameter shrinks multiplicatively and chain-shaped
-      components converge in O(log n) rounds where propagation needs
-      O(n). Use for adversarial/unknown graph shapes.
-
-    Spark-native iteration discipline (both distributed engines): each
-    round localCheckpoints the working frame (truncating lineage that
-    would otherwise grow per round) with one convergence action per
-    round. Raises if ``_CC_MAX_ROUNDS`` rounds don't converge.
+    The driver engine is a single-pass union-find over the collected
+    pair set with min-id roots; exact, deterministic, and row-identical
+    to star contraction (pytest-pinned on planted and hypothesis-random
+    graphs). It declines when a NULL id appears (production pair
+    generators cannot emit one — the ``id_a < id_b`` canonical filter
+    drops NULL comparisons — so this is a defensive guard, not a path)
+    and star contraction answers, which keeps a NULL id as its own
+    singleton cluster, as the closure oracle does.
 
     Output: (id_a-named column, cluster_id) for every node appearing in
     a pair; cluster_id = min doc id of the component."""
-    # Both engines reference `pairs` from 2-3 plan branches (the
-    # src/dst-swapped union); checkpointing it FIRST means those
-    # branches read the materialized pair set instead of re-running the
-    # upstream candidate-generation DAG (e.g. the whole MinHash-LSH
-    # pipeline) once per branch. Measured at sf0.1: ~0.3s off
+    # `pairs` is read more than once (the gate's count, then the
+    # driver's collect or star's edge and node branches); checkpointing
+    # it FIRST means those reads hit the materialized pair set instead
+    # of re-running the upstream candidate-generation DAG (e.g. the
+    # whole MinHash-LSH pipeline) once per read. Measured at sf0.1: ~0.3s off
     # near_dup_clusters. LAZY on purpose (r6 ADVICE #4): eager=True
     # charges callers that hand in an already-checkpointed pair frame
     # (tools/scale_probe.py does) a redundant materialization job.
@@ -524,11 +505,7 @@ def connected_components(
     # silently corrupt components. Callers handing in such a plan must
     # materialize it themselves (eager localCheckpoint / write+read)
     # before calling; this function assumes plan determinism.
-    if method not in ("auto", "star"):
-        raise ValueError(f"unknown method {method!r}")
     pairs = pairs.localCheckpoint(eager=False)
-    if method == "star":
-        return _connected_components_star(pairs, id_a, id_b)
     # Size gate on the checkpointed pair set: the count job IS the
     # materialization the first distributed round would have paid
     # anyway, and the collect that follows reads the cache. (A fused
@@ -539,51 +516,7 @@ def connected_components(
         out = _connected_components_driver(pairs, id_a, id_b)
         if out is not None:
             return out
-    # Overflow or NULL id: distributed min-label propagation.
-    edges = (
-        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = (
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-        .localCheckpoint()
-    )
-    for _ in range(_CC_MAX_ROUNDS):
-        # Each node's OLD label rides the union (non-null only on the
-        # self row, exactly one per id), so convergence is read off the
-        # aggregated frame itself — no per-round labels⨝new_labels join.
-        neighbor_labels = edges.join(
-            labels.select(F.col("id").alias("dst"), "label"), "dst"
-        ).select(
-            F.col("src").alias("id"),
-            "label",
-            F.lit(None).cast(labels.schema["label"].dataType).alias("old"),
-        )
-        own = labels.select("id", "label", F.col("label").alias("old"))
-        # Lazy checkpoint: the convergence count below is the action
-        # that materializes it, so each round runs ONE job (aggregate +
-        # count) instead of two (eager-checkpoint job, then count) —
-        # halves per-round scheduling overhead, which dominates once
-        # the label frame is small.
-        new_labels = (
-            own.union(neighbor_labels)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"), F.max("old").alias("old"))
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.filter(F.col("label") != F.col("old")).count()
-        labels = new_labels.select("id", "label")
-        if changed == 0:
-            return labels.select(
-                F.col("id").alias(id_a), F.col("label").alias("cluster_id")
-            )
-    raise RuntimeError(
-        f"connected_components did not converge in {_CC_MAX_ROUNDS} rounds"
-    )
+    return connected_components_star(pairs, id_a, id_b)
 
 
 def _connected_components_driver(
@@ -592,7 +525,7 @@ def _connected_components_driver(
     """Driver union-find over a SMALL (size-gated by the caller,
     broadcast-order) pair set — min-id roots with path compression, so
     each tree's root is its component's minimum id and the output is
-    row-identical to the distributed engines.
+    row-identical to star contraction.
 
     The ONE deliberate bounded collect in the dedup module (the same
     contract as the 1-row stats fold in ``operators.search`` and the
@@ -608,7 +541,7 @@ def _connected_components_driver(
     driver engine pay a third of its budget on output shipping.
     Returns None if any id is NULL (cross-type comparisons in the
     union would be meaningless; production pair generators cannot emit
-    NULL ids) so the caller can fall back to the distributed engine."""
+    NULL ids) so the caller can fall back to star contraction."""
     import pandas as pd
 
     from pyspark.sql.types import StructField, StructType
@@ -693,17 +626,32 @@ def _cc_small_star(edges: DataFrame) -> DataFrame:
     return rewired.union(self_edges).distinct()
 
 
-def _connected_components_star(
-    pairs: DataFrame, id_a: str, id_b: str
+def connected_components_star(
+    pairs: DataFrame, id_a: str = "id_a", id_b: str = "id_b"
 ) -> DataFrame:
-    """Alternating large-star/small-star edge contraction; converges when
-    the edge set is a fixpoint, at which point every component is a star
-    rooted at its minimum node. O(log n) rounds on chain graphs.
+    """Star contraction: alternating large-star/small-star rounds
+    (Kiveris et al., "Connected Components in MapReduce and Beyond",
+    SoCC 2014). Each round rewires edges toward each neighborhood's
+    minimum, so component diameter shrinks multiplicatively: chain-
+    shaped components converge in O(log n) rounds. Converges when the
+    edge set is a fixpoint, at which point every component is a star
+    rooted at its minimum node. ``connected_components`` runs it above
+    its driver gate; call it directly only to force the distributed
+    engine.
+
+    ``pairs`` is read by two plan branches (the edge set and the node
+    set), so pass it materialized: ``connected_components`` hands in
+    its lazy pair checkpoint, under the same determinism precondition.
+
+    Iteration discipline: each round localCheckpoints the working frame
+    (truncating lineage that would otherwise grow per round) with one
+    convergence action per round. Raises if ``_CC_MAX_ROUNDS`` rounds
+    don't converge.
 
     Node set comes from the RAW pairs (before the self-loop filter) so a
     node appearing only in an (x, x) pair is still emitted as its own
-    singleton cluster — identical to the propagate engine, which keeps
-    self-loop edges and therefore labels such nodes naturally."""
+    singleton cluster, as the driver union-find does. A NULL id never
+    joins an edge (``x != y`` is NULL), so it is its own cluster too."""
     # r16: LAZY initial checkpoint + the count below as its
     # materializing action — the loop's own "lazy checkpoint + carried
     # count" pattern applied to round 0 (was: eager checkpoint job THEN
@@ -744,7 +692,7 @@ def _connected_components_star(
             )
         edges, n_edges = new_edges, n_new
     raise RuntimeError(
-        f"connected_components(star) did not converge in {_CC_MAX_ROUNDS} "
+        f"connected_components_star did not converge in {_CC_MAX_ROUNDS} "
         "rounds"
     )
 

@@ -29,28 +29,6 @@ import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("kind", T.StringType(), False),  # image|audio|video
-        T.StructField("content", T.BinaryType(), True),
-        T.StructField(
-            "meta",
-            T.StructType(
-                [
-                    T.StructField("width", T.IntegerType(), True),
-                    T.StructField("height", T.IntegerType(), True),
-                    T.StructField("sample_rate", T.IntegerType(), True),
-                    T.StructField("n_frames", T.IntegerType(), True),
-                    T.StructField("mime", T.StringType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
 
 
 def generate_media(spark: SparkSession, n: int = 64, kind: str = "image") -> DataFrame:

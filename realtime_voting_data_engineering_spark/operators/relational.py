@@ -65,23 +65,6 @@ def hash_split(
     return df.withColumn(split_col, expr)
 
 
-def grouped_sum(
-    df: DataFrame,
-    keys: Sequence[str],
-    value: Column | str,
-    alias: str = "total_votes",
-) -> DataFrame:
-    """Grouped running SUM — reference A1 (spark_stream.py:58-59):
-    ``groupBy(candidate...).agg(sum(vote) AS total_votes)``.
-
-    Catalyst plans map-side partial aggregation before the shuffle, so at
-    100 TB the exchange carries one row per (partition, key), not per
-    input row.
-    """
-    col = F.col(value) if isinstance(value, str) else value
-    return df.groupBy(*keys).agg(F.sum(col).alias(alias))
-
-
 def grouped_count(
     df: DataFrame, keys: Sequence[str], alias: str = "total_voters"
 ) -> DataFrame:

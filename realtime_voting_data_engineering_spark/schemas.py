@@ -57,19 +57,6 @@ def voter_schema() -> T.StructType:
     )
 
 
-def vote_schema() -> T.StructType:
-    """votes fact table (main.py:70-79); voting_time canonicalized to
-    TimestampType (reference stores VARCHAR, main.py:75)."""
-    return T.StructType(
-        [
-            T.StructField("voter_id", T.StringType(), False),
-            T.StructField("candidate_id", T.StringType(), False),
-            T.StructField("voting_time", T.TimestampType(), True),
-            T.StructField("vote", T.IntegerType(), True),
-        ]
-    )
-
-
 def vote_event_schema() -> T.StructType:
     """Canonical denormalized vote event (votes_topic payload,
     voting.py:69-74): voter ∪ candidate ∪ {voting_time, vote}, with the

@@ -41,6 +41,37 @@ def default_parallelism() -> int:
 #: holds the whole registry with ~2x headroom (2,048 / 1,000 = 2.05).
 CODEGEN_CACHE_ENTRIES = 2048
 
+#: Runtime-settable confs this engine's semantics depend on. The
+#: builder in ``get_spark`` sets them, and
+#: ``sources.tables.ensure_session_confs`` sets them again on every
+#: table load, so a session built elsewhere (the driver harness's
+#: vanilla one) gets them too.
+SESSION_CONFS = {
+    # Corpus `events.ts` is parquet TIMESTAMP(NANOS); Spark has no
+    # nanos timestamp type and a vanilla session rejects the file —
+    # read as long, convert at the source (sources/tables.py) by
+    # truncating to micros like DuckDB does.
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    # UTC-naive oracle (DuckDB) semantics, independent of the host tz.
+    "spark.sql.session.timeZone": "UTC",
+    # Arrow-backed driver⇄JVM transfers (createDataFrame from pandas /
+    # toPandas): the engine's bounded driver materializations (the CC
+    # union-find label frame, the |Q|-bounded query collects) ride this
+    # path — row-list pickling measured ~13× slower on the CC tail
+    # (0.33 s → 0.025 s at sf0.1, optimization guide §6 "Arrow for
+    # driver transfers").
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Loud-not-wrong for every Pandas kernel: with the default (false),
+    # a worker-side pandas→Arrow conversion into a narrower output
+    # type silently WRAPS out-of-range values (verified: int64 2^33+7
+    # → int32 7 — ADVICE r10 #1's id-corruption class). True makes the
+    # task fail instead. Plan-time guards (e.g. similarity.
+    # _require_same_id_type) remain the first line — a scheduler-visible
+    # refusal beats a mid-job executor error — but this closes the class
+    # for kernels without a guard.
+    "spark.sql.execution.pandas.convertToArrowArraySafely": "true",
+}
+
 
 def get_spark(
     app_name: str = "realtime-voting-spark",
@@ -67,21 +98,8 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
-        # Corpus `events.ts` is parquet TIMESTAMP(NANOS); Spark has no
-        # nanos timestamp type — read as long, convert at the source
-        # (sources/tables.py) by truncating to micros like DuckDB does.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        # Safe pandas→Arrow conversion in Python workers: an
-        # out-of-range value crossing into a narrower output-schema
-        # type raises in the task instead of silently WRAPPING
-        # (default false let int64 2^33+7 become int32 7 — the id
-        # corruption class ADVICE r10 #1 verified). Runtime-settable;
-        # also pinned in sources/tables.py:ensure_session_confs so the
-        # driver's vanilla session gets it too.
-        .config("spark.sql.execution.pandas.convertToArrowArraySafely", "true")
+        .config(map=SESSION_CONFS)
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))

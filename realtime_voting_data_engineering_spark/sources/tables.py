@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from realtime_voting_data_engineering_spark.session import SESSION_CONFS
+
 #: Driver-generated corpus tables (TESTDATA.md).
 TABLE_NAMES = (
     "region",
@@ -47,38 +49,18 @@ NANO_TS_COLUMNS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 def ensure_session_confs(spark: SparkSession) -> None:
     """Defensively set the runtime-settable confs this engine's semantics
-    depend on. The driver harness supplies its *own* SparkSession — a
-    vanilla one rejects TIMESTAMP(NANOS) parquet and may carry a
-    non-UTC session timezone, so we pin both here rather than relying on
-    our session builder having been used.
+    depend on (``session.SESSION_CONFS``). The driver harness supplies
+    its *own* SparkSession — a vanilla one rejects TIMESTAMP(NANOS)
+    parquet and may carry a non-UTC session timezone, so we pin them
+    here rather than relying on our session builder having been used.
 
     Static confs cannot be pinned here: ``spark.conf.set`` raises
     ``CANNOT_MODIFY_STATIC_CONFIG`` on a live session. So the codegen
     cache size (``session.CODEGEN_CACHE_ENTRIES``) is left alone, and a
     vanilla session keeps Spark's 100 entries and recompiles warm
     queries."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    # Loud-not-wrong for every Pandas kernel: with the default (false),
-    # a worker-side pandas→Arrow conversion into a narrower output
-    # type silently WRAPS out-of-range values (verified: int64 2^33+7
-    # → int32 7 — ADVICE r10 #1's id-corruption class). True makes the
-    # task fail instead. Plan-time guards (e.g. similarity.
-    # _require_same_id_type) remain the first line — a scheduler-visible
-    # refusal beats a mid-job executor error — but this closes the class
-    # for kernels without a guard, under the driver's vanilla session
-    # too (every registered query passes through load_table).
-    spark.conf.set(
-        "spark.sql.execution.pandas.convertToArrowArraySafely", "true"
-    )
-    # Arrow-backed driver⇄JVM transfers (createDataFrame from pandas /
-    # toPandas): the engine's bounded driver materializations (the CC
-    # union-find label frame, the |Q|-bounded query collects) ride this
-    # path — row-list pickling measured ~13× slower on the CC tail
-    # (0.33 s → 0.025 s at sf0.1, optimization guide §6 "Arrow for
-    # driver transfers"). Runtime-settable; pinned here so the driver's
-    # vanilla session gets it like the confs above.
-    spark.conf.set("spark.sql.execution.arrow.pyspark.enabled", "true")
+    for k, v in SESSION_CONFS.items():
+        spark.conf.set(k, v)
 
 
 def footer_schema(spark: SparkSession, path: str) -> StructType:

@@ -9,18 +9,17 @@ from pyspark.sql import functions as F
 from realtime_voting_data_engineering_spark.operators import dedup as D
 from realtime_voting_data_engineering_spark.sources.tables import load_table
 
-#: The three connected-components engines. ``auto`` reaches the driver
-#: union-find at test sizes, and propagation once the edge gate is below
-#: every pair count (-1, so an empty graph reaches it too).
-CC_ENGINES = ("driver", "propagate", "star")
+#: The two connected-components engines. ``connected_components``
+#: reaches the driver union-find at test sizes, and star contraction
+#: once the edge gate is below every pair count (-1, so an empty graph
+#: reaches it too).
+CC_ENGINES = ("driver", "star")
 
 
 def cc_engine(df, engine):
     """``D.connected_components`` through one named engine."""
-    if engine == "star":
-        return D.connected_components(df, method="star")
     with pytest.MonkeyPatch.context() as mp:
-        if engine == "propagate":
+        if engine == "star":
             mp.setattr(D, "_CC_DRIVER_MAX_EDGES", -1)
         return D.connected_components(df)
 
@@ -122,16 +121,18 @@ def test_winnow_detects_planted_passage_overlap(spark):
 
 
 def test_connected_components_match_union_find(spark):
-    """Every CC engine (driver union-find, min-label propagation, star
-    contraction, and the size-gated auto dispatch) vs a plain-Python
-    union-find on a graph with chains (exercises multi-round
-    propagation), a triangle, an isolated pair, and two disjoint long
-    paths."""
+    """Both CC engines (driver union-find and star contraction) and the
+    size-gated dispatch vs a plain-Python union-find on a graph with
+    chains (exercises multi-round contraction), a triangle, an isolated
+    pair, two disjoint long paths, and a node appearing only in a
+    self-loop pair (each engine must emit it as its own singleton
+    cluster)."""
     pairs = [
         (1, 2), (2, 3), (3, 4), (4, 5),      # chain of 5
         (10, 11), (11, 12), (10, 12),        # triangle
         (20, 21),                            # isolated pair
         (30, 31), (31, 32), (32, 33),        # path of 4
+        (40, 40),                            # self-loop only
     ]
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
     got = {r.id_a: r.cluster_id for r in D.connected_components(df).collect()}
@@ -202,10 +203,11 @@ def test_exact_dedup_keeps_one_row_per_key(spark, sf_dir):
 
 
 def test_connected_components_star_matches_propagate(spark):
-    """Star contraction and min-label propagation produce identical
-    clusters on a mixed-shape graph (chains, triangle, isolated pair,
-    and a node appearing only in a self-loop pair — both engines must
-    emit it as its own singleton cluster)."""
+    """Star contraction, the distributed engine that replaced min-label
+    propagation, produces the same clusters as the driver union-find on
+    a mixed-shape graph (chains, triangle, isolated pair, and a node
+    appearing only in a self-loop pair — both engines must emit it as
+    its own singleton cluster)."""
     pairs = [
         (1, 2), (2, 3), (3, 4), (4, 5),
         (10, 11), (11, 12), (10, 12),
@@ -214,28 +216,27 @@ def test_connected_components_star_matches_propagate(spark):
         (40, 40),
     ]
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    prop = {(r.id_a, r.cluster_id) for r in cc_engine(df, "propagate").collect()}
-    star = {
-        (r.id_a, r.cluster_id)
-        for r in D.connected_components(df, method="star").collect()
-    }
-    assert star == prop
+    driver = {(r.id_a, r.cluster_id) for r in cc_engine(df, "driver").collect()}
+    star = {(r.id_a, r.cluster_id) for r in cc_engine(df, "star").collect()}
+    assert star == driver
+    assert (40, 40) in star
 
 
 def test_connected_components_star_converges_logarithmically_on_path(
     spark, monkeypatch
 ):
-    """Planted 1000-node path graph: diameter 999, so min-label
-    propagation would need ~999 rounds, while large-star/small-star
-    contraction must finish within ~log2(n) alternating rounds — pinned
-    by a round cap of 15 (2**15 >> 1000; propagation at 15 rounds would
-    raise). All nodes collapse to cluster 0."""
+    """Planted 1000-node path graph with the edge gate below its 999
+    edges, so ``connected_components`` must answer distributed: the
+    diameter is 999, a label-propagation fixpoint would need ~999
+    rounds, and large-star/small-star contraction must finish within
+    ~log2(n) alternating rounds — pinned by a round cap of 15
+    (2**15 >> 1000). All nodes collapse to cluster 0."""
     monkeypatch.setattr(D, "_CC_MAX_ROUNDS", 15)
     n = 1000
+    monkeypatch.setattr(D, "_CC_DRIVER_MAX_EDGES", n // 2)
     df = spark.createDataFrame([(i, i + 1) for i in range(n - 1)],
                                "id_a long, id_b long")
-    got = {r.id_a: r.cluster_id for r in
-           D.connected_components(df, method="star").collect()}
+    got = {r.id_a: r.cluster_id for r in D.connected_components(df).collect()}
     assert got == {i: 0 for i in range(n)}
 
 
@@ -293,10 +294,11 @@ def test_connected_components_empty_and_self_loop_graphs(spark):
 
 def test_connected_components_driver_string_ids_and_null_fallback(spark):
     """The driver union-find must preserve a non-long id type (string
-    doc ids cluster by lexicographic min, same as the distributed
-    engines' F.min/least) and must FALL BACK to the distributed engine —
-    not crash on a Python None comparison — if a NULL id ever reaches
-    it."""
+    doc ids cluster by lexicographic min, same as star contraction's
+    F.min/least) and must FALL BACK to star contraction — not crash on
+    a Python None comparison — if a NULL id ever reaches it. The NULL
+    id is its own cluster, as in the recursive-CTE closure oracle
+    (``NULL = x`` never joins)."""
     pairs = [("b", "c"), ("a", "b"), ("x", "y")]
     df = spark.createDataFrame(pairs, "id_a string, id_b string")
     got = {r.id_a: r.cluster_id for r in cc_engine(df, "driver").collect()}
@@ -308,10 +310,9 @@ def test_connected_components_driver_string_ids_and_null_fallback(spark):
     nulls = spark.createDataFrame(
         [(1, 2), (None, 3)], "id_a long, id_b long"
     )
-    # NULL ids: the driver engine declines and the propagate fallback
-    # answers — the call must succeed either way.
-    out = cc_engine(nulls, "driver").collect()
-    assert {r.id_a for r in out} >= {1, 2}
+    # NULL ids: the driver engine declines and star contraction answers.
+    got = {r.id_a: r.cluster_id for r in cc_engine(nulls, "driver").collect()}
+    assert got == {1: 1, 2: 1, 3: 3, None: None}
 
 
 def test_minhash_pipeline_on_identical_corpus(spark):

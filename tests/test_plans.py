@@ -477,12 +477,12 @@ def test_checkpoint_inputs_scan_raw_tables_once(spark, sf_dir, monkeypatch):
         # near_dup_clusters routes through connected_components: the
         # minhash cands + jaccard idx sites scan documents once each;
         # the CC pairs pin's input reads only the already-checkpointed
-        # frames (zero raw scans). The auto gate may or may not add
-        # per-iteration sites depending on the driver/distributed
-        # dispatch, so the site count is a lower bound there and every
-        # captured input is capped at one raw scan.
+        # frames (zero raw scans). The size gate may or may not add
+        # per-iteration sites depending on the driver/star dispatch, so
+        # the site count is a lower bound there and every captured
+        # input is capped at one raw scan.
         ("near_dup_clusters", "documents", None, {0: 1, 1: 1, 2: 0}),
-        # The star engine adds eager edge/node frames plus per-round
+        # The star engine adds a lazy edge frame plus per-round
         # contraction checkpoints — all fed from the checkpointed pairs
         # pin, so zero raw scans beyond the first two sites.
         ("near_dup_clusters_star", "documents", None, {0: 1, 1: 1, 2: 0}),

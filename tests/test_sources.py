@@ -96,16 +96,23 @@ def test_safe_arrow_conversion_is_pinned_and_loud(spark):
     id-corruption class; every registered query passes through
     load_table, so the driver's vanilla session gets the pin too).
     Anti-vacuity: the same kernel under the unsafe default returns the
-    wrapped value — proving the conf, not the cast, is what's loud."""
+    wrapped value — proving the conf, not the cast, is what's loud.
+    Every other conf in ``session.SESSION_CONFS`` is pinned the same
+    way: each is reset (the timezone moved off UTC) and comes back."""
     import pandas as pd
 
+    from realtime_voting_data_engineering_spark.session import SESSION_CONFS
     from realtime_voting_data_engineering_spark.sources.tables import (
         ensure_session_confs,
     )
 
+    for k in SESSION_CONFS:
+        spark.conf.unset(k)
+    spark.conf.set("spark.sql.session.timeZone", "Pacific/Chatham")
     ensure_session_confs(spark)
+    for k, v in SESSION_CONFS.items():
+        assert spark.conf.get(k) == v, k
     conf = "spark.sql.execution.pandas.convertToArrowArraySafely"
-    assert spark.conf.get(conf) == "true"
 
     def emit(_batches):
         yield pd.DataFrame({"x": [(1 << 33) + 7]})
