@@ -220,6 +220,35 @@ def ngram_jaccard_pairs(
     )
 
 
+#: DuckDB word-trigram shingles and exact Jaccard over ``documents``
+#: (CTEs ``toks``, ``sh``, ``sizes``, ``inter``, ``jac``) — the replay of
+#: ``word_shingles`` + ``ngram_jaccard_pairs``; oracles open with
+#: ``WITH {ORACLE_SHINGLES_CTE}``.
+ORACLE_SHINGLES_CTE = r"""
+toks AS (
+  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents
+),
+sh AS (
+  SELECT DISTINCT doc_id, s FROM toks,
+    UNNEST(list_transform(generate_series(1, len(w)-2),
+                          i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS t(s)
+),
+sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
+inter AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
+  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+),
+jac AS (
+  SELECT id_a, id_b,
+         round(n_inter * 1.0 / (sa.n + sb.n - n_inter), 6) AS jaccard
+  FROM inter
+  JOIN sizes sa ON sa.doc_id = id_a
+  JOIN sizes sb ON sb.doc_id = id_b
+)
+"""
+
+
 MINHASH_PRIME = 2147483647  # 2^31 - 1; perm domain, fits all arithmetic in int64
 
 
@@ -429,6 +458,47 @@ def minhash_dedup_pairs(
     return jaccard_for_pairs(df, cands, text_col, id_col, n).filter(
         F.col("jaccard") >= threshold
     )
+
+
+def oracle_minhash_pairs(
+    num_hashes: int = 16, bands: int = 4, threshold: float = 0.5
+) -> str:
+    """DuckDB replay of ``minhash_dedup_pairs``, exactly: one 32-bit
+    md5-prefix base hash per shingle, ``num_hashes`` linear permutations
+    with the SAME (a_i, b_i) literals the Spark side derives
+    (``minhash_perm_constants``), identical banding, exact-Jaccard
+    verification."""
+    rows = num_hashes // bands
+    base = "CAST('0x' || substr(md5(s), 1, 8) AS BIGINT)"
+    perms = minhash_perm_constants(num_hashes)
+    mh_cols = ", ".join(
+        f"min(({a} * base + {b}) % {MINHASH_PRIME}) AS h{i}"
+        for i, (a, b) in enumerate(perms)
+    )
+    band_selects = []
+    for b in range(bands):
+        key = " || '|' || ".join(
+            f"CAST(h{b * rows + r} AS VARCHAR)" for r in range(rows)
+        )
+        band_selects.append(
+            f"SELECT doc_id, {b} AS band_idx, md5({key}) AS band_key FROM mh"
+        )
+    bands_sql = "\nUNION ALL\n".join(band_selects)
+    return f"""
+    WITH {ORACLE_SHINGLES_CTE},
+    mhb AS (SELECT doc_id, {base} AS base FROM sh),
+    mh AS (SELECT doc_id, {mh_cols} FROM mhb GROUP BY doc_id),
+    bands AS ({bands_sql}),
+    cand AS (
+      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
+      FROM bands a JOIN bands b
+        ON a.band_idx = b.band_idx AND a.band_key = b.band_key
+       AND a.doc_id < b.doc_id
+    )
+    SELECT c.id_a, c.id_b, j.jaccard
+    FROM cand c JOIN jac j ON c.id_a = j.id_a AND c.id_b = j.id_b
+    WHERE j.jaccard >= {threshold}
+    """
 
 
 #: Size gate: pair sets of at most this many edges run the driver

@@ -145,37 +145,48 @@ def unique_by_id(
     )
 
 
-def collect_query_matrix(queries: DataFrame, id_col: str, vec_col: str):
-    """Collect the (small by contract) query set into numpy, enforcing
-    the full vector contract driver-side: NULL/non-finite rows are
-    excluded by ``valid_vectors``; ragged rows (wrong length vs the
-    MODAL query dims) are dropped here, because a single ragged row
-    turns ``np.array(list(...))`` into a dtype=object ragged batch that
-    kills the Arrow kernels — the class of crash r6's boundary contract
-    only half-closed (r6 ADVICE #1). Dims is the MODAL length (ties
-    broken toward the smaller dims): taking the first row's length
-    would make the result depend on incidental row order — a leading
-    ragged row would silently exclude
-    every valid query AND the whole corpus (r7 review finding) — and
-    row-order dependence is exactly what ``tools/run_audits.py --classes
-    order`` certifies against. Returns ``(q_ids, q_mat, dims)``, or ``(None,
-    None, None)`` when no valid query rows remain; callers must pass ``dims``
-    on to the corpus-side ``valid_vectors`` so the corpus batches are
-    rectangular too."""
+def collect_query_matrix(
+    queries: DataFrame, id_col: str, vec_col: str, dims: int | None = None
+):
+    """The ONE driver-side query boundary of the collecting kernels
+    (``knn_quantized``, ``knn_ivf_fixed``, ``knn_pq_adc``): collect the
+    (small by contract) query set into numpy under one rule, in order:
+
+    1. keep valid vectors (``valid_vectors``: non-NULL, finite);
+    2. keep rows of length ``dims``; when ``dims`` is not given it is
+       the MODAL length over all valid rows, ties broken toward the
+       smaller dims — a single ragged row would turn
+       ``np.array(list(...))`` into a dtype=object batch that kills the
+       Arrow kernels, and taking the first row's length would make the
+       result depend on row order (``tools/run_audits.py --classes
+       order`` certifies against that);
+    3. drop NULL ids — a NULL query id has no self-match to exclude and
+       no key to rank under, so it yields no output in any kernel;
+    4. keep one row per id: the lexicographically least vector, the
+       ``unique_by_id`` rule — two vectors under one id would otherwise
+       rank both vectors' neighbours under one ``query_id``;
+    5. sort by id, so the matrix order is deterministic.
+
+    Returns ``(q_ids, q_mat, dims)``: ``q_ids`` (n,), ``q_mat`` (n, dims)
+    float64, with n possibly 0 (``dims`` is then None if it was not
+    given and no valid row exists). Callers pass ``dims`` on to the
+    corpus-side ``valid_vectors`` so corpus batches are rectangular
+    too."""
     import numpy as np
 
-    q_rows = valid_vectors(queries, vec_col).select(id_col, vec_col).collect()
-    if not q_rows:
-        return None, None, None
-    lengths = [len(r[1]) for r in q_rows]
-    dims = max(set(lengths), key=lambda d: (lengths.count(d), -d))
-    kept = sorted(  # deterministic matrix order (NULL ids sort last)
-        (r for r in q_rows if len(r[1]) == dims),
-        key=lambda r: (r[0] is None, r[0] if r[0] is not None else 0),
-    )
-    q_ids = np.array([r[0] for r in kept])
-    q_mat = np.array([r[1] for r in kept], dtype=np.float64)
-    return q_ids, q_mat, dims
+    rows = valid_vectors(queries, vec_col, dims).select(id_col, vec_col).collect()
+    if dims is None and rows:
+        lengths = [len(r[1]) for r in rows]
+        dims = max(set(lengths), key=lambda d: (lengths.count(d), -d))
+    best: dict = {}
+    for qid, vec in rows:
+        if qid is not None and len(vec) == dims and (
+            qid not in best or list(vec) < best[qid]
+        ):
+            best[qid] = list(vec)
+    q_ids = sorted(best)
+    q_mat = np.array([best[q] for q in q_ids], dtype=np.float64)
+    return np.array(q_ids), q_mat.reshape(len(q_ids), dims or 0), dims
 
 
 def _id_typed_schema(
@@ -547,6 +558,23 @@ def knn_ann(
     )
 
 
+def _sq_l2(x, cent):
+    """Squared L2 distances (n, k) from each row of ``x`` (n, d) to each
+    row of ``cent`` (k, d) — the ONE distance loop of the quantizers
+    (PQ encode per subspace, IVF assignment, IVF probe; an IVF coarse
+    quantizer is PQ with one subspace). Accumulates
+    dimension-SEQUENTIALLY in float64 (explicit d-loop, matching SQL
+    ``list_sum``'s left fold), so the DuckDB oracles replay every
+    distance, and thus every code, cluster and probe, bit-for-bit."""
+    import numpy as np
+
+    d2 = np.zeros((len(x), len(cent)), dtype=np.float64)
+    for d in range(x.shape[1]):  # sequential: bit-matches list_sum
+        diff = x[:, d : d + 1] - cent[:, d][None, :]
+        d2 = d2 + diff * diff
+    return d2
+
+
 def ivf_fixed_centroids(dims: int, n_centroids: int = 16):
     """Coarse IVF centroids derived from md5 fractions — literally the
     ``pq_codebooks`` construction with ONE subspace spanning the full
@@ -568,10 +596,11 @@ def ivf_fixed_assign(
     inverted-list id). Arrow-batched against the closure-shipped
     centroid matrix — per-partition vectorized, zero shuffle; the
     output's ``cluster`` column is what a partitioned index layout keys
-    on at rest. Same determinism contract as ``pq_encode``: L2
-    accumulates dimension-SEQUENTIALLY (matching SQL ``list_sum``'s left
-    fold) and ties break first-min, so a SQL engine re-deriving the
-    centroids replays every assignment bit-for-bit."""
+    on at rest. The same encoder as ``pq_encode`` with one subspace:
+    ``_sq_l2`` distances (dimension-sequential, matching SQL
+    ``list_sum``'s left fold), ties to the first minimum, so a SQL
+    engine re-deriving the centroids replays every assignment
+    bit-for-bit."""
     import numpy as np
 
     from realtime_voting_data_engineering_spark.session import (
@@ -587,12 +616,8 @@ def ivf_fixed_assign(
             if not len(pdf):
                 continue
             x = np.array(list(pdf[vec_col]), dtype=np.float64)
-            d2 = np.zeros((len(x), len(cent)), dtype=np.float64)
-            for d in range(dims):  # sequential: bit-matches list_sum
-                diff = x[:, d : d + 1] - cent[:, d][None, :]
-                d2 = d2 + diff * diff
             out = pdf[[id_col, vec_col]].copy()
-            out["cluster"] = np.argmin(d2, axis=1).astype("int32")  # first min
+            out["cluster"] = np.argmin(_sq_l2(x, cent), axis=1).astype("int32")
             yield out
 
     return corpus.select(id_col, vec_col).mapInPandas(
@@ -621,15 +646,18 @@ def knn_ivf_fixed(
     makes the WHOLE index → probe → re-rank path carry a DuckDB oracle.
 
     Determinism: centroid components are md5-derived doubles
-    (``ivf_fixed_centroids``); corpus assignment and the driver-side
-    probe ranking both accumulate L2 dimension-sequentially with
-    (d2, centroid) tie-break; the re-rank cosine is the sequential fold
-    of ``cosine()``. The probe computation collects the query set —
-    O(|Q|·n_centroids·dims) driver work, bounded by the same |Q|-small
-    contract as ``knn_quantized``. Recall < 1 by construction; tests
-    bound it against ``knn_brute_force``."""
+    (``ivf_fixed_centroids``); corpus assignment and the probe both
+    take their distances from ``_sq_l2`` (dimension-sequential
+    accumulation). The probe collects the query set through
+    ``collect_query_matrix`` and ranks each query's centroids with a
+    stable argsort, so ties break on (d2, centroid index) as in the
+    oracle's ``ORDER BY d2, c`` — O(|Q|·n_centroids·dims) driver work,
+    bounded by the same |Q|-small contract as ``knn_quantized``. The
+    re-rank cosine is the sequential fold of ``cosine()``. Recall < 1
+    by construction; tests bound it against ``knn_brute_force``."""
+    import numpy as np
+
     _require_same_id_type(queries, corpus, id_col)
-    queries = valid_vectors(queries, vec_col, dims)
     cent = ivf_fixed_centroids(dims, n_centroids)
     assigned = ivf_fixed_assign(
         corpus, dims, n_centroids, id_col=id_col, vec_col=vec_col
@@ -639,23 +667,14 @@ def knn_ivf_fixed(
         "cluster",
     )
 
-    q_rows = queries.select(id_col, vec_col).collect()  # |Q| small by contract
-    probe_rows = []
-    for r in q_rows:
-        if r[0] is None:
-            continue  # NULL-id query: zero possible output, skip entirely
-        qv = [float(v) for v in r[1]]
-        d2 = []
-        for c in range(n_centroids):
-            acc = 0.0
-            for d in range(dims):  # sequential: bit-matches list_sum
-                diff = qv[d] - float(cent[c, d])
-                acc = acc + diff * diff
-            d2.append(acc)
-        for c in sorted(range(n_centroids), key=lambda i: (d2[i], i))[:nprobe]:
-            probe_rows.append((r[0], qv, int(c)))
+    q_ids, q_mat, _ = collect_query_matrix(queries, id_col, vec_col, dims)
+    probe = np.argsort(_sq_l2(q_mat, cent), axis=1, kind="stable")[:, :nprobe]
     probes = queries.sparkSession.createDataFrame(
-        probe_rows,
+        [
+            (qid, vec, c)
+            for qid, vec, row in zip(q_ids.tolist(), q_mat.tolist(), probe.tolist())
+            for c in row
+        ],
         schema=_id_typed_schema(
             corpus, id_col, ["query_id"], "q_vec array<float>, cluster int"
         ),
@@ -676,14 +695,14 @@ def knn_ivf_fixed(
     )
 
 
-#: Query-axis block size for the dense cosine scorer
-#: (``knn_quantized``) — the same contract as ``_ADC_QUERY_CHUNK``
-#: below: peak kernel memory per yield is O(chunk × batch) doubles
-#: plus the matching id arrays, INDEPENDENT of |Q|, so a caller who
-#: ignores the bounded-query contract degrades in wall-clock, never in
-#: per-batch peak memory (the deferred half of ADVICE r9 #2; VERDICT
-#: r10 #2). 256 query rows × a ~10k Arrow batch ≈ 20 MB per block.
-_SIMS_QUERY_CHUNK = 256
+#: Query-axis block size of the Arrow scorers (``knn_quantized``'s
+#: dense cosine, ``knn_pq_adc``'s ADC): peak kernel memory per yield is
+#: O(chunk × batch) doubles plus the matching id arrays, INDEPENDENT of
+#: |Q|, so a caller who ignores the bounded-query contract degrades in
+#: wall-clock, never in per-batch peak memory. 256 query rows × a ~10k
+#: Arrow batch ≈ 20 MB per block — under executor headroom while still
+#: amortizing the numpy dispatch.
+_QUERY_CHUNK = 256
 
 
 def _cosine_score_frames(
@@ -757,7 +776,7 @@ def knn_quantized(
     product (exactly equal to dequantize-then-dot, but without ever
     materializing the float corpus). Approximate only by quantization
     error; recall vs the float path is pytest-measured. Per-batch kernel
-    memory is O(``_SIMS_QUERY_CHUNK`` × batch) regardless of |Q|."""
+    memory is O(``_QUERY_CHUNK`` × batch) regardless of |Q|."""
     import numpy as np
 
     from realtime_voting_data_engineering_spark.session import (
@@ -766,15 +785,14 @@ def knn_quantized(
 
     _require_same_id_type(queries, corpus, id_col)
     ensure_workers_can_import(corpus.sparkSession)
-    q_chunk = _SIMS_QUERY_CHUNK  # driver-side capture: ships in the closure
+    q_chunk = _QUERY_CHUNK  # driver-side capture: ships in the closure
     out_schema = _id_typed_schema(
         corpus, id_col, ["query_id", "neighbor_id"], "cos double"
     )
     # Full contract (NULL + ragged) on both sides: dims comes from the
     # collected query matrix and gates the corpus scan (r6 ADVICE #1).
     q_ids, q_mat, dims = collect_query_matrix(queries, id_col, vec_col)
-    if q_ids is None:  # empty query set: nothing to score (and the 1-D
-        # np.array([]) would break every axis=1 op / matmul downstream)
+    if not len(q_ids):  # nothing to score, and no dims to gate the corpus
         return queries.sparkSession.createDataFrame([], out_schema)
     q_norm = np.linalg.norm(q_mat, axis=1)
     q_valid = q_norm > 0  # zero queries match nothing (0/0 NaN sorts first)
@@ -872,8 +890,6 @@ def pq_encode(
     """
     import numpy as np
 
-    from pyspark.sql.types import StringType, StructField, StructType
-
     from realtime_voting_data_engineering_spark.session import (
         ensure_workers_can_import,
     )
@@ -881,18 +897,15 @@ def pq_encode(
     assert dims % m == 0, "dims must divide into m equal subvectors"
     ensure_workers_can_import(df.sparkSession)
     cb = pq_codebooks(dims, m, ksub)  # (m, ksub, dsub)
-    dsub = dims // m
     base = valid_vectors(df, vec_col, dims).select(id_col, vec_col)
-    out_schema = StructType(
-        [base.schema[id_col], StructField(out_col, StringType())]
-    )
+    out_schema = _id_typed_schema(base, id_col, [id_col], f"{out_col} string")
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if not len(pdf):
                 continue
             x = np.array(list(pdf[vec_col]), dtype=np.float64)
-            codes = _pq_encode_batch(x, cb, m, dsub, ksub)
+            codes = _pq_encode_batch(x, cb)
             yield pd.DataFrame(
                 {
                     id_col: pdf[id_col].values,
@@ -903,36 +916,34 @@ def pq_encode(
     return base.mapInPandas(encode, schema=out_schema)
 
 
-def _pq_encode_batch(x, cb, m: int, dsub: int, ksub: int):
-    """Encode one numpy batch ``x`` (n, dims) to PQ codes (n, m) — the
-    ONE copy of the encoding loop shared by :func:`pq_encode` and the
-    fused :func:`knn_pq_adc` kernel (ADVICE r9: two verbatim copies
-    could silently diverge on tie-break or accumulation order with only
-    a parity test guarding them). Distances accumulate
-    dimension-SEQUENTIALLY (explicit d-loop, matching SQL ``list_sum``'s
-    left fold) and ties take the FIRST minimum (``np.argmin``), so the
-    oracle replays every code bit-for-bit."""
+def _pq_encode_batch(x, cb):
+    """Encode one numpy batch ``x`` (n, dims) to PQ codes (n, m) against
+    codebooks ``cb`` (m, ksub, dsub): per subspace, the nearest centroid
+    by ``_sq_l2`` (dimension-sequential), ties to the FIRST minimum
+    (``np.argmin``), so the oracle replays every code bit-for-bit. Its
+    users: :func:`pq_encode` (codes at rest) and the fused
+    :func:`knn_pq_adc` kernel (codes scored in place) — one encoder, so
+    the two cannot diverge on tie-break or accumulation order."""
     import numpy as np
 
-    n = len(x)
-    codes = np.empty((n, m), dtype=np.int64)
-    for s in range(m):
-        sub = x[:, s * dsub : (s + 1) * dsub]
-        d2 = np.zeros((n, ksub), dtype=np.float64)
-        for d in range(dsub):  # sequential: bit-matches list_sum
-            diff = sub[:, d : d + 1] - cb[s, :, d][None, :]
-            d2 = d2 + diff * diff
-        codes[:, s] = np.argmin(d2, axis=1)  # first min on ties
-    return codes
+    dsub = cb.shape[2]
+    return np.stack(
+        [
+            np.argmin(_sq_l2(x[:, s * dsub : (s + 1) * dsub], cb[s]), axis=1)
+            for s in range(len(cb))
+        ],
+        axis=1,
+    )
 
 
 def _require_same_id_type(queries: DataFrame, corpus: DataFrame, id_col: str) -> None:
     """Refuse mismatched id types between the query frame and the
     corpus frame, loudly and at PLAN time, before any job runs.
-    Callers — every kernel that emits a query-side id next to a
+    Callers — the three kernels that collect their queries through
+    ``collect_query_matrix`` and emit a query-side id next to a
     corpus-side id, both typed from the corpus side by
-    ``_id_typed_schema`` or the ADC out-schema: ``knn_quantized``,
-    ``knn_ivf_fixed`` and ``knn_pq_adc``.
+    ``_id_typed_schema``: ``knn_quantized``, ``knn_ivf_fixed`` and
+    ``knn_pq_adc``.
 
     Cross-family mixes are always refused: string vs numeric makes the
     self-match exclusion vacuous (everything compares unequal, so a
@@ -972,59 +983,21 @@ def _require_same_id_type(queries: DataFrame, corpus: DataFrame, id_col: str) ->
     )
 
 
-def _pq_query_luts(
-    queries: DataFrame, cb, dims: int, m: int, ksub: int,
-    id_col: str, vec_col: str,
-):
-    """Collect the (bounded-by-contract) query set and precompute each
-    query's m×ksub lookup table of subvector · centroid dots. LUT dots
-    accumulate dimension-SEQUENTIALLY so DuckDB's ``list_sum`` replays
-    them bit-for-bit. Returns ``(qids, luts)`` as stacked numpy arrays
-    — ``luts[i]`` pairs with ``qids[i]``."""
+def _pq_query_luts(q_mat, cb):
+    """Each query's m×ksub lookup table of subvector · centroid dots,
+    (n, m, ksub) for the query matrix ``q_mat`` (n, dims) from
+    ``collect_query_matrix`` — ``luts[i]`` pairs with ``q_ids[i]``.
+    Vectorized over queries and subspaces; the dots still accumulate
+    dimension-SEQUENTIALLY so DuckDB's ``list_sum`` replays them
+    bit-for-bit."""
     import numpy as np
 
-    dsub = dims // m
-    q_rows = (
-        valid_vectors(queries, vec_col, dims).select(id_col, vec_col).collect()
-    )  # O(|Q|) by contract — queries are a bounded serving set
-    # Id-uniqueness at the query boundary: colliding query ids would
-    # emit two score sets under one query_id and the top-k would mix
-    # them into a chimera ranking. Keep the lexicographically least
-    # valid embedding per id — the same total, row-order-independent
-    # rule as ``unique_by_id`` (the r5-r8 dict build kept the LAST
-    # collected row per id, a row-order-dependent choice).
-    best: dict = {}
-    for r in q_rows:
-        key = r[id_col]
-        if key not in best or list(r[vec_col]) < list(best[key][vec_col]):
-            best[key] = r
-    q_rows = sorted(best.values(), key=lambda r: str(r[id_col]))
-    qids, luts = [], []
-    for r in q_rows:
-        qv = np.array(r[vec_col], dtype=np.float64)
-        lut = np.zeros((m, ksub), dtype=np.float64)
-        for s in range(m):
-            sub = qv[s * dsub : (s + 1) * dsub]
-            acc = np.zeros(ksub, dtype=np.float64)
-            for d in range(dsub):  # sequential: bit-matches list_sum
-                acc = acc + sub[d] * cb[s, :, d]
-            lut[s] = acc
-        qids.append(r[id_col])
-        luts.append(lut)
-    return (
-        np.array(qids) if qids else np.zeros(0),
-        np.array(luts) if luts else np.zeros((0, m, ksub)),
-    )
-
-
-#: Query-axis block size for ADC scoring. Peak kernel memory per yield
-#: is O(chunk × batch) doubles plus the matching id arrays, INDEPENDENT
-#: of |Q| — without the blocking, a caller who ignored the
-#: bounded-query contract would quietly scale per-batch peak memory
-#: with the full query count (ADVICE r9 #2). 256 LUTs × a ~10k Arrow
-#: batch ≈ 20 MB per block — comfortably under executor headroom while
-#: still amortizing the numpy dispatch.
-_ADC_QUERY_CHUNK = 256
+    m, ksub, dsub = cb.shape
+    q3 = q_mat.reshape(len(q_mat), m, dsub)
+    luts = np.zeros((len(q_mat), m, ksub), dtype=np.float64)
+    for d in range(dsub):  # sequential: bit-matches list_sum
+        luts = luts + q3[:, :, d, None] * cb[None, :, :, d]
+    return luts
 
 
 def _adc_score_frames(qids_arr, luts_arr, ids, code_mat, m: int, chunk: int):
@@ -1087,15 +1060,14 @@ def knn_pq_adc(
     Scale shape: vectors stream through the kernel against the
     closure-captured LUT stack (O(|Q|·m·ksub) doubles — tiny by
     contract, like ``knn_quantized``'s query matrix); no
-    shuffle until the |Q|·k top-k window. Determinism: LUT dots
+    shuffle until the |Q|·k top-k window. Queries pass the one
+    boundary, ``collect_query_matrix``. Determinism: LUT dots
     accumulate dimension-sequentially, scores subspace-sequentially, so
     DuckDB replays the ranking bit-for-bit (scores are approximate
     INNER-PRODUCT surrogates — recall vs exact cosine is pytest-bounded,
     the ranking itself is exact). Queries are scored in blocks of
-    ``_ADC_QUERY_CHUNK``."""
+    ``_QUERY_CHUNK``."""
     import numpy as np
-
-    from pyspark.sql.types import DoubleType, StructField, StructType
 
     from realtime_voting_data_engineering_spark.session import (
         ensure_workers_can_import,
@@ -1104,32 +1076,26 @@ def knn_pq_adc(
     assert dims % m == 0, "dims must divide into m equal subvectors"
     ensure_workers_can_import(queries.sparkSession)
     _require_same_id_type(queries, corpus, id_col)
-    q_chunk = _ADC_QUERY_CHUNK  # driver-side capture: ships in the closure
-    dsub = dims // m
+    q_chunk = _QUERY_CHUNK  # driver-side capture: ships in the closure
     cb = pq_codebooks(dims, m, ksub)  # (m, ksub, dsub)
-    qids_arr, luts_arr = _pq_query_luts(
-        queries, cb, dims, m, ksub, id_col, vec_col
-    )
+    q_ids, q_mat, _ = collect_query_matrix(queries, id_col, vec_col, dims)
+    luts = _pq_query_luts(q_mat, cb)
 
     base = valid_vectors(corpus, vec_col, dims).select(id_col, vec_col)
-    out_schema = StructType(
-        [
-            StructField("query_id", base.schema[id_col].dataType),
-            StructField("neighbor_id", base.schema[id_col].dataType),
-            StructField("adc_dot", DoubleType()),
-        ]
+    out_schema = _id_typed_schema(
+        base, id_col, ["query_id", "neighbor_id"], "adc_dot double"
     )
 
     def encode_and_score(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            if not len(pdf) or not len(qids_arr):
+            if not len(pdf) or not len(q_ids):
                 continue
             x = np.array(list(pdf[vec_col]), dtype=np.float64)
-            codes = _pq_encode_batch(x, cb, m, dsub, ksub)
             yield from _adc_score_frames(
-                qids_arr, luts_arr, pdf[id_col].values, codes, m, q_chunk
+                q_ids, luts, pdf[id_col].values, _pq_encode_batch(x, cb), m,
+                q_chunk,
             )
 
     scored = base.mapInPandas(encode_and_score, schema=out_schema)

@@ -30,6 +30,10 @@ STOPWORDS: tuple[str, ...] = (
     "on", "for", "with", "at", "by", "from", "as", "that", "this", "it",
 )
 
+#: DuckDB IN-list of ``STOPWORDS``: oracles that count stopwords inline
+#: it as ``lower(t) IN ({ORACLE_STOPWORDS})``.
+ORACLE_STOPWORDS = ", ".join(f"'{w}'" for w in STOPWORDS)
+
 _PUNCT_PATTERN = r"[.,;:!?]"
 _BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]|[^A-Za-z0-9\s]"
 

@@ -34,75 +34,12 @@ from realtime_voting_data_engineering_spark.sources.tables import (
 
 # --- shared SQL fragments ---------------------------------------------------
 
-_STOPWORDS_SQL = ", ".join(f"'{w}'" for w in X.STOPWORDS)
-_SHINGLES_CTE = r"""
-toks AS (
-  SELECT doc_id, regexp_split_to_array(trim(text), '\s+') AS w FROM documents
-),
-sh AS (
-  SELECT DISTINCT doc_id, s FROM toks,
-    UNNEST(list_transform(generate_series(1, len(w)-2),
-                          i -> w[i] || ' ' || w[i+1] || ' ' || w[i+2])) AS t(s)
-),
-sizes AS (SELECT doc_id, count(*) AS n FROM sh GROUP BY doc_id),
-inter AS (
-  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
-  FROM sh a JOIN sh b ON a.s = b.s AND a.doc_id < b.doc_id
-  GROUP BY 1, 2
-),
-jac AS (
-  SELECT id_a, id_b,
-         round(n_inter * 1.0 / (sa.n + sb.n - n_inter), 6) AS jaccard
-  FROM inter
-  JOIN sizes sa ON sa.doc_id = id_a
-  JOIN sizes sb ON sb.doc_id = id_b
-)
-"""
-
 _COS_SQL = (
     "list_sum(list_transform(list_zip({a}, {b}),"
     " x -> CAST(x[1] AS DOUBLE) * CAST(x[2] AS DOUBLE)))"
     " / (sqrt(list_sum(list_transform({a}, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE))))"
     " * sqrt(list_sum(list_transform({b}, x -> CAST(x AS DOUBLE)*CAST(x AS DOUBLE)))))"
 )
-
-
-def _minhash_oracle(num_hashes: int = 16, bands: int = 4, threshold: float = 0.5) -> str:
-    """Replays minhash_dedup_pairs exactly: one 32-bit md5-prefix base
-    hash per shingle, ``num_hashes`` linear permutations with the SAME
-    (a_i, b_i) literals the Spark side derives (dedup.minhash_perm_constants),
-    identical banding, exact-Jaccard verification."""
-    rows = num_hashes // bands
-    base = "CAST('0x' || substr(md5(s), 1, 8) AS BIGINT)"
-    perms = D.minhash_perm_constants(num_hashes)
-    mh_cols = ", ".join(
-        f"min(({a} * base + {b}) % {D.MINHASH_PRIME}) AS h{i}"
-        for i, (a, b) in enumerate(perms)
-    )
-    band_selects = []
-    for b in range(bands):
-        key = " || '|' || ".join(
-            f"CAST(h{b * rows + r} AS VARCHAR)" for r in range(rows)
-        )
-        band_selects.append(
-            f"SELECT doc_id, {b} AS band_idx, md5({key}) AS band_key FROM mh"
-        )
-    bands_sql = "\nUNION ALL\n".join(band_selects)
-    return f"""
-    WITH {_SHINGLES_CTE},
-    mhb AS (SELECT doc_id, {base} AS base FROM sh),
-    mh AS (SELECT doc_id, {mh_cols} FROM mhb GROUP BY doc_id),
-    bands AS ({bands_sql}),
-    cand AS (
-      SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
-      FROM bands a JOIN bands b
-        ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-       AND a.doc_id < b.doc_id
-    )
-    SELECT c.id_a, c.id_b, j.jaccard
-    FROM cand c JOIN jac j ON c.id_a = j.id_a AND c.id_b = j.id_b
-    WHERE j.jaccard >= {threshold}
-    """
 
 
 # --- text analysis ----------------------------------------------------------
@@ -136,7 +73,7 @@ WITH base AS (
 feat AS (
   SELECT doc_id, text, n_chars, n_bpe_tokens, n_punct,
          len(w) AS n_tokens,
-         len(list_filter(w, t -> lower(t) IN ({_STOPWORDS_SQL}))) AS n_stop,
+         len(list_filter(w, t -> lower(t) IN ({X.ORACLE_STOPWORDS}))) AS n_stop,
          {", ".join(f"{expr} AS s_{lg}" for lg, expr in _LANG_SCORE_SQL.items())}
   FROM base
 )
@@ -232,7 +169,7 @@ def doc_fingerprint_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ngram_near_dup_pairs",
     f"""
-    WITH {_SHINGLES_CTE}
+    WITH {D.ORACLE_SHINGLES_CTE}
     SELECT id_a, id_b, jaccard FROM jac WHERE jaccard >= 0.5
     """,
     tags=("dedup", "northstar"),
@@ -245,7 +182,7 @@ def ngram_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "minhash_lsh_dedup",
-    _minhash_oracle(num_hashes=16, bands=4, threshold=0.5),
+    D.oracle_minhash_pairs(num_hashes=16, bands=4, threshold=0.5),
     headline=True,
     tags=("dedup", "northstar"),
 )
@@ -272,7 +209,7 @@ def minhash_lsh_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _CLUSTER_ORACLE = f"""
 WITH RECURSIVE p AS (
-  SELECT * FROM ({_minhash_oracle(num_hashes=16, bands=4, threshold=0.5)}) t),
+  SELECT * FROM ({D.oracle_minhash_pairs(num_hashes=16, bands=4, threshold=0.5)}) t),
 edges AS (
   SELECT id_a AS src, id_b AS dst FROM p
   UNION SELECT id_b, id_a FROM p),
@@ -1054,7 +991,7 @@ def language_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     feat AS (
       SELECT doc_id, n_chars,
              len(w) AS n_tokens,
-             len(list_filter(w, t -> lower(t) IN ({_STOPWORDS_SQL}))) AS n_stop,
+             len(list_filter(w, t -> lower(t) IN ({X.ORACLE_STOPWORDS}))) AS n_stop,
              n_punct
       FROM base),
     scored AS (

@@ -30,7 +30,7 @@ from realtime_voting_data_engineering_spark.operators import search as SE
 from realtime_voting_data_engineering_spark.operators.similarity import (
     ORACLE_VALID_VEC_DIMS,
 )
-from realtime_voting_data_engineering_spark.operators.text import STOPWORDS
+from realtime_voting_data_engineering_spark.operators.text import ORACLE_STOPWORDS
 from realtime_voting_data_engineering_spark.queries import register
 from realtime_voting_data_engineering_spark.sources.tables import (
     load_events,
@@ -523,17 +523,12 @@ def salted_event_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _canonical_oracle() -> str:
-    """Closure (same recursive CTE as near_dup_clusters' oracle, via the
-    shared _minhash_oracle fragment) + quality argmax per cluster."""
-    from realtime_voting_data_engineering_spark.queries_northstar import (
-        _minhash_oracle,
-        _STOPWORDS_SQL,
-    )
-
-    return f"""
+#: Closure (same recursive CTE as near_dup_clusters' oracle, via the
+#: shared ``dedup.oracle_minhash_pairs`` fragment) + quality argmax per
+#: cluster.
+_CANONICAL_ORACLE = f"""
     WITH RECURSIVE p AS (
-      SELECT * FROM ({_minhash_oracle(num_hashes=16, bands=4, threshold=0.5)}) t),
+      SELECT * FROM ({D.oracle_minhash_pairs(num_hashes=16, bands=4, threshold=0.5)}) t),
     edges AS (
       SELECT id_a AS src, id_b AS dst FROM p
       UNION SELECT id_b, id_a FROM p),
@@ -550,7 +545,7 @@ def _canonical_oracle() -> str:
       FROM documents),
     feat AS (
       SELECT doc_id, n_chars, len(w) AS n_tokens,
-             len(list_filter(w, t -> lower(t) IN ({_STOPWORDS_SQL}))) AS n_stop,
+             len(list_filter(w, t -> lower(t) IN ({ORACLE_STOPWORDS}))) AS n_stop,
              n_punct
       FROM base),
     scored AS (
@@ -575,7 +570,7 @@ def _canonical_oracle() -> str:
 
 @register(
     "canonical_docs_per_cluster",
-    _canonical_oracle(),
+    _CANONICAL_ORACLE,
     tags=("dedup", "quality", "pipeline"),
 )
 def canonical_docs_per_cluster(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -923,7 +918,7 @@ _CURATE_RATES = {"en": 0.3}
       SELECT doc_id, lang, n_chars,
              round((least(len_chars / 500.0, 1.0)
                   + least((len(list_filter(w, t -> lower(t) IN
-                        ({{stops}}))) * 1.0 / greatest(len(w), 1)) * 4.0, 1.0)
+                        ({ORACLE_STOPWORDS}))) * 1.0 / greatest(len(w), 1)) * 4.0, 1.0)
                   + greatest(1.0 - (n_punct * 1.0
                         / greatest(len_chars, 1)) * 10.0, 0.0))
                   / 3.0, 6) AS q
@@ -942,7 +937,7 @@ _CURATE_RATES = {"en": 0.3}
     SELECT split, lang, count(*) AS n_docs,
            CAST(SUM(n_chars) AS BIGINT) AS total_chars
     FROM labeled GROUP BY split, lang
-    """.replace("{stops}", ", ".join(f"'{w}'" for w in STOPWORDS)),
+    """,
     headline=True,  # the composed-pipeline cost, tracked round over round
     tags=("pipeline", "composition"),
 )

@@ -65,6 +65,16 @@ def read_stream(
         ) from exc
 
 
+def _kafka_records(df: DataFrame, key_col: str | None) -> DataFrame:
+    """The Kafka record encoding shared by both sinks: every column
+    serialized to one JSON ``value`` (P5, ``to_json(struct('*'))``),
+    plus ``key_col`` cast to string as the record ``key`` when given."""
+    cols = [F.to_json(F.struct(*df.columns)).alias("value")]
+    if key_col:
+        cols.insert(0, F.col(key_col).cast("string").alias("key"))
+    return df.select(*cols)
+
+
 def write_stream(
     df: DataFrame,
     bootstrap_servers: str,
@@ -73,16 +83,12 @@ def write_stream(
     output_mode: str = "update",
     key_col: str | None = None,
 ):
-    """S2 (spark_stream.py:67-84): serialize all columns to a JSON value
-    (P5, ``to_json(struct('*'))``), optional key column, update mode +
-    checkpoint."""
-    cols = [F.to_json(F.struct(*df.columns)).alias("value")]
-    if key_col:
-        cols.insert(0, F.col(key_col).cast("string").alias("key"))
-    out = df.select(*cols)
+    """S2 (spark_stream.py:67-84): ``_kafka_records`` (JSON value,
+    optional key), update mode + checkpoint."""
+    records = _kafka_records(df, key_col)  # a bad key_col fails as itself
     try:
         return (
-            out.writeStream.format("kafka")
+            records.writeStream.format("kafka")
             .option("kafka.bootstrap.servers", bootstrap_servers)
             .option("topic", topic)
             .option("checkpointLocation", checkpoint)
@@ -102,14 +108,12 @@ def write_batch(
     key_col: str | None = None,
 ) -> None:
     """S3 (main.py:222-227): batch produce, one JSON document per row —
-    distributed write from executors, not a driver-side producer loop."""
-    cols = [F.to_json(F.struct(*df.columns)).alias("value")]
-    if key_col:
-        cols.insert(0, F.col(key_col).cast("string").alias("key"))
+    distributed write from executors, not a driver-side producer loop
+    (``_kafka_records``)."""
+    records = _kafka_records(df, key_col)  # a bad key_col fails as itself
     try:
         (
-            df.select(*cols)
-            .write.format("kafka")
+            records.write.format("kafka")
             .option("kafka.bootstrap.servers", bootstrap_servers)
             .option("topic", topic)
             .save()

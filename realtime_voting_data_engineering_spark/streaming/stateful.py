@@ -23,52 +23,6 @@ from typing import Any
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.types import DoubleType, LongType, StructField, StructType
-
-
-def running_totals_stateful(
-    events: DataFrame,
-    key_col: str = "candidate_id",
-    value_col: str = "vote",
-) -> DataFrame:
-    """A1 as a *custom* stateful aggregate: per-key running (count, sum)
-    kept in explicit GroupState, emitted once per key per micro-batch —
-    the hand-rolled twin of ``votes_per_candidate_stream`` for kernels
-    Spark's aggregates can't express. The key column keeps its input
-    type."""
-
-    out_schema = StructType(
-        [
-            StructField(key_col, events.schema[key_col].dataType),
-            StructField("n_events", LongType()),
-            StructField("total", DoubleType()),
-        ]
-    )
-    state_schema = "n bigint, s double"
-
-    def update(
-        key: tuple[Any, ...],
-        pdfs: Iterator[pd.DataFrame],
-        state: GroupState,
-    ) -> Iterator[pd.DataFrame]:
-        n, s = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += int(len(pdf))
-            s += float(pdf[value_col].sum())
-        state.update((n, s))
-        yield pd.DataFrame({key_col: [key[0]], "n_events": [n], "total": [s]})
-
-    return (
-        events.select(key_col, value_col)
-        .groupBy(key_col)
-        .applyInPandasWithState(
-            update,
-            outputStructType=out_schema,
-            stateStructType=state_schema,
-            outputMode="update",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    )
 
 
 def first_seen_dedup_stateful(

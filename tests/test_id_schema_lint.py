@@ -1,8 +1,7 @@
 """The id-schema gate: no kernel schema gives an id column a literal type.
 
-Kernels type their id columns from the input (``similarity._id_typed_schema``,
-the ADC and stateful out-schemas), so a string, int or long id comes back out
-as itself. This gate keeps it that way. It scans every string and f-string in the
+Kernels type their id columns from the input (``similarity._id_typed_schema``),
+so a string, int or long id comes back out as itself. This gate keeps it that way. It scans every string and f-string in the
 package (placeholders read as ``{name}``, docstrings skipped) and every
 ``StructField`` call. A literal type given to an ``id_col``/``key_col`` column,
 or to ``query_id``/``neighbor_id``, is a finding. It scans literals, not

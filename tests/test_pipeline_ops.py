@@ -257,38 +257,46 @@ def test_corpus_token_is_none_when_directory_listing_fails(monkeypatch, tmp_path
     )
 
 
-def test_pq_adc_colliding_query_ids_deterministic(spark):
-    """Colliding query ids must collapse to ONE deterministic query
-    vector (lexicographically least valid embedding — the unique_by_id
-    rule), not emit two score sets under one query_id (chimera top-k) or
-    keep whichever row collected last (the r5-r8 dict build's
-    row-order-dependent choice)."""
+_COLLECTING_KERNELS = {
+    "knn_quantized": lambda S, q, c: S.knn_quantized(q, c, k=3),
+    "knn_ivf_fixed": lambda S, q, c: S.knn_ivf_fixed(
+        q, c, dims=8, k=3, n_centroids=4, nprobe=4
+    ),
+    "knn_pq_adc": lambda S, q, c: S.knn_pq_adc(q, c, dims=8, m=2, ksub=4, k=3),
+}
+
+
+@pytest.mark.parametrize("kernel", sorted(_COLLECTING_KERNELS))
+def test_colliding_query_ids_deterministic(spark, kernel):
+    """Every kernel that collects its query set applies the one boundary
+    rule of ``collect_query_matrix``: colliding query ids collapse to ONE
+    query vector, the lexicographically least (the ``unique_by_id``
+    rule), instead of ranking both vectors' neighbours under one
+    query_id; a NULL-id query row yields nothing. So the output on the
+    dirty query set, in either row order, equals the output on the
+    deduplicated, NULL-free one. The duplicate vectors are not parallel:
+    cosine cannot tell [0.2]*8 from [0.01]*8."""
+    import numpy as np
+
     from realtime_voting_data_engineering_spark.operators import similarity as S
 
-    corpus = spark.createDataFrame(
-        [(i, [0.01 * i] * 8) for i in range(20)],
-        "vec_id bigint, embedding array<float>",
-    )
-    dup_queries = spark.createDataFrame(
-        [(1, [0.2] * 8), (1, [0.01] * 8)],
-        "vec_id bigint, embedding array<float>",
-    )
-    out = S.knn_pq_adc(dup_queries, corpus, dims=8, m=2, ksub=4, k=3).collect()
-    assert {r.query_id for r in out} == {1}
-    assert len(out) == 3, "duplicate query id emitted extra top-k rows"
-    # permuting the duplicate rows must not change the winning vector
-    out2 = S.knn_pq_adc(
-        spark.createDataFrame(
-            [(1, [0.01] * 8), (1, [0.2] * 8)],
-            "vec_id bigint, embedding array<float>",
-        ),
-        corpus,
-        dims=8,
-        m=2,
-        ksub=4,
-        k=3,
-    ).collect()
-    assert sorted(map(tuple, out)) == sorted(map(tuple, out2))
+    run = _COLLECTING_KERNELS[kernel]
+    rng = np.random.default_rng(7)
+    vecs = rng.standard_normal((43, 8)).astype(np.float32).tolist()
+    schema = "vec_id bigint, embedding array<float>"
+    corpus = spark.createDataFrame(list(enumerate(vecs[:40])), schema)
+    least, other = sorted(vecs[40:42])
+    clean = [(1, least), (2, vecs[5])]
+    dirty = [(1, other), (None, vecs[42]), (1, least), (2, vecs[5])]
+
+    def ranked(rows):
+        out = run(S, spark.createDataFrame(rows, schema), corpus).collect()
+        return sorted(map(tuple, out), key=repr)
+
+    want = ranked(clean)
+    assert len(want) == 2 * 3, "the clean query set must fill both top-3s"
+    assert ranked(dirty) == want
+    assert ranked(dirty[::-1]) == want
 
 
 def test_pq_adc_query_chunking_changes_no_bits(spark, monkeypatch):
@@ -310,7 +318,7 @@ def test_pq_adc_query_chunking_changes_no_bits(spark, monkeypatch):
     whole = sorted(
         map(tuple, S.knn_pq_adc(queries, corpus, dims=8, m=2, ksub=4, k=3).collect())
     )
-    monkeypatch.setattr(S, "_ADC_QUERY_CHUNK", 2)  # 7 queries → 4 blocks
+    monkeypatch.setattr(S, "_QUERY_CHUNK", 2)  # 7 queries → 4 blocks
     chunked = sorted(
         map(tuple, S.knn_pq_adc(queries, corpus, dims=8, m=2, ksub=4, k=3).collect())
     )

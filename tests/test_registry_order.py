@@ -53,6 +53,34 @@ def test_queries_iterate_window_first_and_drop_nothing():
     assert len(names) == len(Q.REGISTRY)
 
 
+def test_every_query_module_can_be_imported_first(tmp_path):
+    """Any registry module can be the first one a fresh process imports
+    and still sees the whole registry: oracle fragments shared between
+    query modules live beside their operators, so no module reads a
+    sibling that is still half-loaded."""
+    import os
+    import subprocess
+    import sys
+
+    env = {**os.environ, "PYTHONPATH": str(REPO)}
+    for module in (
+        "queries", "queries_extended", "queries_northstar", "queries_tpch",
+        "queries_pipeline",
+    ):
+        code = (
+            f"import realtime_voting_data_engineering_spark.{module}\n"
+            "from realtime_voting_data_engineering_spark import queries\n"
+            "print(len(queries.queries()), len(queries.oracle_sql()))"
+        )
+        proc = subprocess.run(
+            [sys.executable, "-c", code], capture_output=True, text=True,
+            cwd=tmp_path, env=env, timeout=300,
+        )
+        assert proc.returncode == 0, f"{module} first: {proc.stderr[-2000:]}"
+        n = len(Q.REGISTRY)
+        assert proc.stdout.split() == [str(n), str(n)], (module, proc.stdout)
+
+
 def test_oracle_sql_subset_and_order():
     oracles = Q.oracle_sql()
     names = list(Q.queries())

@@ -293,14 +293,14 @@ def test_dense_query_chunking_changes_no_bits(spark, fn_name, monkeypatch):
     order, which genuinely differs between gemv/gemm shapes on general
     data (the reassociation residual is pinned separately by
     test_dense_query_chunking_reassociation_residual). Chunk sizes 1
-    and 3 (set through ``_SIMS_QUERY_CHUNK``, which the kernel captures
+    and 3 (set through ``_QUERY_CHUNK``, which the kernel captures
     at plan time) must be row- and BIT-identical to one covering
     block."""
     fn = getattr(S, fn_name)
     corpus, queries = _dense_chunk_fixture(spark)
 
     def topk(chunk):
-        monkeypatch.setattr(S, "_SIMS_QUERY_CHUNK", chunk)
+        monkeypatch.setattr(S, "_QUERY_CHUNK", chunk)
         return sorted(map(tuple, fn(queries, corpus, k=3).collect()))
 
     whole = topk(10_000)
@@ -332,7 +332,7 @@ def test_dense_query_chunking_reassociation_residual(spark, fn_name, monkeypatch
         [(100 + i, [float(x) for x in rng.normal(size=64)]) for i in range(9)],
         "vec_id bigint, embedding array<float>",
     )
-    monkeypatch.setattr(S, "_SIMS_QUERY_CHUNK", 10_000)
+    monkeypatch.setattr(S, "_QUERY_CHUNK", 10_000)
     whole = fn(queries, corpus, k=3).collect()
     by_pair = {(r.query_id, r.neighbor_id): r.cos for r in whole}
     # Fixture soundness: adjacent ranks are separated far beyond the
@@ -355,7 +355,7 @@ def test_dense_query_chunking_reassociation_residual(spark, fn_name, monkeypatch
         gaps = [a - b for a, b in zip(scores[:3], scores[1:4])]
         assert all(g > 1e-6 for g in gaps), (q, gaps)
     for chunk in (1, 4):
-        monkeypatch.setattr(S, "_SIMS_QUERY_CHUNK", chunk)
+        monkeypatch.setattr(S, "_QUERY_CHUNK", chunk)
         got = fn(queries, corpus, k=3).collect()
         assert {(r.query_id, r.neighbor_id) for r in got} == set(by_pair), (
             fn_name, chunk,

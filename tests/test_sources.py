@@ -58,6 +58,24 @@ def test_jdbc_gating_raises_clear_error(spark):
         )
 
 
+def test_jdbc_read_query_gating_raises_clear_error(spark):
+    """S7's query pushdown gates like ``read_table``: no JDBC driver
+    here, so it raises ``JdbcUnavailableError``."""
+    with pytest.raises(J.JdbcUnavailableError):
+        J.read_query(
+            spark, "jdbc:postgresql://nohost:5432/db",
+            "SELECT candidate_id FROM candidates",
+        ).collect()
+
+
+def test_foreach_batch_jdbc_gating_raises_clear_error(spark):
+    """S6's streaming form: the ``foreachBatch`` sink it returns raises
+    ``JdbcUnavailableError`` on its first micro-batch."""
+    sink = J.foreach_batch_jdbc("jdbc:postgresql://nohost:5432/db", "votes")
+    with pytest.raises(J.JdbcUnavailableError):
+        sink(spark.range(3), 0)
+
+
 def test_rate_source_vote_stream(spark, tmp_path):
     votes = RT.vote_rate_stream(spark, rows_per_second=50, n_candidates=3)
     assert votes.isStreaming
