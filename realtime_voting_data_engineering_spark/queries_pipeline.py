@@ -14,6 +14,7 @@ Imported for its registration side effects by
 
 from __future__ import annotations
 
+import os
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
@@ -36,6 +37,7 @@ from realtime_voting_data_engineering_spark.sources.tables import (
     load_events,
     load_table,
     small_scan_parallelism,
+    table_signature,
 )
 
 # ---------------------------------------------------------------------------
@@ -63,46 +65,14 @@ _BM25_LOCK = threading.Lock()
 
 
 def _corpus_token(sf_dir: str):
-    """Cheap content fingerprint of the documents table: (mtime_ns,
-    size) of the file, or for a directory-style table the RECURSIVE
-    sorted listing's (relpath, mtime_ns, size) triples — partitioned
-    layouts (``lang=en/part-*.parquet``) and marker subdirectories
-    (``_SUCCESS``-style) nest, and the r8 shape stat'ed a nested dir
-    as a file, raising OSError and silently degrading every partitioned
-    corpus to the unmemoized path (r8 verdict). Each entry is stat'ed
-    exactly once. Changes whenever the audit tools (or anything else)
-    rewrite the path in place."""
-    import os
-
-    def _raise(err: OSError) -> None:
-        # os.walk swallows listing errors by default (onerror=None): an
-        # unreadable top dir would yield an EMPTY tuple and an
-        # unreadable subdir would be silently omitted — both are
-        # stable-looking tokens that do NOT cover the content they
-        # claim to fingerprint, re-opening the stale-serving class.
-        # Listing failures must reach the except below → None →
-        # unmemoized (r9 review finding).
-        raise err
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        if os.path.isdir(path):
-            entries = []
-            for root, dirs, files in os.walk(path, onerror=_raise):
-                dirs.sort()  # deterministic walk order
-                rel = os.path.relpath(root, path)
-                for f in sorted(files):
-                    st = os.stat(os.path.join(root, f))
-                    entries.append((os.path.join(rel, f), st.st_mtime_ns, st.st_size))
-            return tuple(entries)
-        st = os.stat(path)
-        return (st.st_mtime_ns, st.st_size)
-    except OSError:
-        # Unstat-able path → content UNVERIFIABLE. Returning a stable
-        # sentinel here would make every rebuild collide on one key and
-        # defeat the content-change detection the token exists for (r7
-        # advice) — so signal the caller to skip memoization entirely.
-        return None
+    """Content fingerprint of the documents table
+    (``sources.tables.table_signature``): it changes whenever the audit
+    tools (or anything else) rewrite the path in place, and it is None
+    when the path cannot be stat'ed or listed. Returning a stable
+    sentinel there would make every rebuild collide on one key and
+    defeat the content-change detection the token exists for — so None
+    tells the caller to skip memoization entirely."""
+    return table_signature(os.path.join(sf_dir, "documents.parquet"))
 
 
 def _session_stopped(spark) -> bool:
@@ -199,8 +169,8 @@ def bm25_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     cached data`, the r6 bench-tail cosmetic, VERDICT r6 #4). Reuse is
     also the honest serving shape: the persisted tf projection IS the
     index, built once per corpus and amortized across queries. The key
-    includes the documents file's (mtime, size): bm25_topk bakes the
-    corpus stats in as LITERALS at build time, so serving a cached plan
+    includes the documents files' stat (``_corpus_token``): bm25_topk
+    bakes the corpus stats in as LITERALS at build time, so serving a cached plan
     for a path whose contents were rewritten (the audit tools rmtree+
     rewrite fixed /tmp paths per run) would silently score against the
     OLD index (r7 review finding). A changed token rebuilds and

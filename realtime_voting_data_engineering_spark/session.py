@@ -11,9 +11,15 @@ default. We configure deliberately:
 - ``spark.sql.shuffle.partitions`` sized from the env, not the 200
   default — right for local[N]; on a real cluster this is overridden per
   deployment (AQE coalescing makes the initial number less critical).
-- Spark's generated-code cache sized to the registry's working set
+- The runtime confs the engine's semantics depend on (``SESSION_CONFS``:
+  nanos timestamps as long, UTC, Arrow transfers, safe Arrow casts), set
+  here and again on every table load.
+- Two static confs (``STATIC_CONFS``), which only the builder can set:
+  Spark's generated-code cache sized to the registry's working set
   (``CODEGEN_CACHE_ENTRIES``), so a warm query reuses its compiled
-  classes instead of recompiling them with Janino.
+  classes instead of recompiling them with Janino; and DataFrame
+  debugging off, so a Column/DataFrame call does not capture its Python
+  call site for error messages.
 """
 
 from __future__ import annotations
@@ -73,6 +79,25 @@ SESSION_CONFS = {
 }
 
 
+#: Static confs (``spark.conf.set`` on a live session raises
+#: ``CANNOT_MODIFY_STATIC_CONFIG``): ``get_spark`` sets them when it
+#: creates the session, and nothing can set them later.
+STATIC_CONFS = {
+    "spark.sql.codegen.cache.maxEntries": str(CODEGEN_CACHE_ENTRIES),
+    # With debugging on (Spark's default), PySpark wraps every
+    # Column/DataFrame call to record its Python file:line for error
+    # messages: ~5 py4j round-trips (active session, JVM class lookup,
+    # ``conf.get``, set and clear) plus a failing ``import IPython`` per
+    # call, about half the py4j calls of a warm headline pass. What is
+    # lost: an ANSI runtime error (``DIVIDE_BY_ZERO``, ...) keeps its
+    # error class, but its ``== DataFrame ==`` block names a JVM frame
+    # instead of the Python call site. Analysis errors are unchanged.
+    # PySpark reads the flag once per process, from the session active
+    # at the first call.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+}
+
+
 def get_spark(
     app_name: str = "realtime-voting-spark",
     master: str | None = None,
@@ -86,10 +111,11 @@ def get_spark(
     env); on a cluster these configs ride along unchanged and AQE adapts
     shuffle partitioning at runtime.
 
-    The codegen cache size is a static conf: it takes effect only when
-    this call creates the session, and ``ensure_session_confs`` cannot
-    set it later. A session built elsewhere (the driver harness's
-    vanilla one) keeps Spark's 100 entries and recompiles warm queries.
+    ``STATIC_CONFS`` take effect only when this call creates the
+    session, and ``ensure_session_confs`` cannot set them later. A
+    session built elsewhere (the driver harness's vanilla one) keeps
+    Spark's 100 codegen cache entries and recompiles warm queries, and
+    keeps paying the call-site capture on every Column/DataFrame call.
     """
     cpus = default_parallelism()
     builder = (
@@ -100,7 +126,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config(map=SESSION_CONFS)
-        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config(map=STATIC_CONFS)
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
     )

@@ -126,6 +126,99 @@ def test_warm_headline_pass_reuses_compiled_code(spark, sf_smoke):
     assert compiled <= 20, f"warm headline pass compiled {compiled} classes"
 
 
+def test_warm_load_table_makes_only_the_conf_round_trips(spark, sf_dir, monkeypatch):
+    """A warm load of an unchanged table reuses the session's frame: its
+    only py4j round-trips are ``ensure_session_confs``'s; a cold load
+    makes 60-95. Counts this thread's commands
+    only, after a collection, so no other thread's calls and no
+    finalizer of an earlier test's objects land in the window."""
+    import gc
+    import threading
+
+    from py4j.clientserver import ClientServerConnection
+
+    from realtime_voting_data_engineering_spark.session import SESSION_CONFS
+    from realtime_voting_data_engineering_spark.sources.tables import load_table
+
+    load_table(spark, sf_dir, "lineitem")
+    gc.collect()
+    me, sent = threading.get_ident(), []
+    send = ClientServerConnection.send_command
+
+    def counted(self, command):
+        if threading.get_ident() == me:
+            sent.append(command)
+        return send(self, command)
+
+    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    load_table(spark, sf_dir, "lineitem")
+    monkeypatch.undo()
+    assert len(sent) <= len(SESSION_CONFS), sent
+
+
+DEBUGGING_CONF = "spark.python.sql.dataFrameDebugging.enabled"
+
+
+def test_session_skips_call_site_capture(spark):
+    """With DataFrame debugging on, Spark's default, every
+    Column/DataFrame call captures its Python call site for error
+    messages (~5 py4j round-trips each). The engine session turns it
+    off; the conf is static, so ``ensure_session_confs`` cannot set it
+    either way."""
+    ensure_session_confs(spark)
+    assert spark.conf.get(DEBUGGING_CONF) == "false"
+    with pytest.raises(Exception, match="CANNOT_MODIFY_STATIC_CONFIG"):
+        spark.conf.set(DEBUGGING_CONF, "true")
+
+
+def test_errors_keep_their_class_without_call_site_capture(spark):
+    """What debugging off costs, and what it keeps. An ANSI runtime error
+    keeps its error class, but its ``== DataFrame ==`` block names a JVM
+    frame instead of this file's line. Analysis errors carry no call
+    site either way. The engine's plan-time refusals are Python raises
+    and keep their messages."""
+    from pyspark.errors import AnalysisException, ArithmeticException
+    from pyspark.sql import functions as F
+
+    from realtime_voting_data_engineering_spark.operators import relational as R
+    from realtime_voting_data_engineering_spark.operators import similarity as S
+
+    df = spark.range(3).withColumn("z", F.lit(0))
+    ansi = spark.conf.get("spark.sql.ansi.enabled")
+    spark.conf.set("spark.sql.ansi.enabled", "true")
+    try:
+        with pytest.raises(ArithmeticException) as err:
+            df.select(F.col("id") / F.col("z")).collect()
+    finally:
+        spark.conf.set("spark.sql.ansi.enabled", ansi)
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"
+    assert "== DataFrame ==" in str(err.value)
+    assert os.path.basename(__file__) not in str(err.value)
+    with pytest.raises(AnalysisException) as err:
+        df.select(F.col("nope")).collect()
+    assert err.value.getCondition().startswith("UNRESOLVED_COLUMN")
+    assert "`nope` cannot be resolved" in str(err.value)
+
+    with pytest.raises(ValueError, match=r"already contains reserved column\(s\) \['__side'\]"):
+        R.asof_self_join(
+            df.withColumn("__side", F.lit(1)),
+            on="z",
+            time_col="id",
+            left_pred=F.col("id") > 0,
+            right_pred=F.col("id") == 0,
+            attach={"other": F.col("id")},
+        )
+    corpus = spark.createDataFrame(
+        [(i, [0.01 * i] * 8) for i in range(10)],
+        "vec_id bigint, embedding array<float>",
+    )
+    queries = spark.createDataFrame(
+        [("3", [0.03] * 8)], "vec_id string, embedding array<float>"
+    )
+    with pytest.raises(TypeError, match="id column 'vec_id' type mismatch"):
+        S.knn_pq_adc(queries, corpus, dims=8, m=2, ksub=4, k=3)
+
+
 def test_text_profile_is_shuffle_free_scan(spark, sf_dir):
     """The text_profile OPERATOR must stay a scan→project pipeline:
     staged projections, no exchange, no aggregation — corpus-linear at

@@ -169,20 +169,13 @@ def _parity(spark, path: str) -> None:
     assert built.schema == spark.read.parquet(path).schema, path
 
 
-def test_load_table_starts_no_spark_job(spark, sf_dir):
-    """Building a table's DataFrame — schema access included — runs no
-    Spark job (``spark.read.parquet`` alone runs a schema-inference job
-    per call). Anti-vacuity: a control inference in a LATER group must
-    show up first; the listener bus delivers events in order, so by then
-    any job the loads started is visible too."""
+def _assert_starts_no_job(spark, sf_dir, fn) -> None:
+    """``fn`` runs no Spark job. Anti-vacuity: a control inference in a
+    LATER group must show up first; the listener bus delivers events in
+    order, so by then any job ``fn`` started is visible too."""
     tag = uuid.uuid4().hex[:8]
-
-    def load_all():
-        for name in TB.TABLE_NAMES:
-            TB.load_table(spark, sf_dir, name).schema
-
     loads, control = f"loads-{tag}", f"control-{tag}"
-    _in_group(spark, loads, load_all)
+    _in_group(spark, loads, fn)
     path = os.path.join(sf_dir, "region.parquet")
     _in_group(spark, control, lambda: spark.read.parquet(path).schema)
     tracker = spark.sparkContext.statusTracker()
@@ -191,6 +184,90 @@ def test_load_table_starts_no_spark_job(spark, sf_dir):
         time.sleep(0.1)
     assert tracker.getJobIdsForGroup(control), "control inference job unseen"
     assert list(tracker.getJobIdsForGroup(loads)) == []
+
+
+def test_load_table_starts_no_spark_job(spark, sf_dir):
+    """Building a table's DataFrame — schema access included — runs no
+    Spark job (``spark.read.parquet`` alone runs a schema-inference job
+    per call)."""
+
+    def load_all():
+        for name in TB.TABLE_NAMES:
+            TB.load_table(spark, sf_dir, name).schema
+
+    _assert_starts_no_job(spark, sf_dir, load_all)
+
+
+# --- load_table: one frame per session and table version ---------------------
+
+
+def test_warm_load_returns_the_loaded_frame(spark, sf_dir):
+    """A second load of an unchanged table returns the frame the first
+    one built, and starts no job."""
+    first = TB.load_table(spark, sf_dir, "lineitem")
+    again = []
+    _assert_starts_no_job(
+        spark, sf_dir, lambda: again.append(TB.load_table(spark, sf_dir, "lineitem"))
+    )
+    assert len(again) == 1 and again[0] is first
+
+
+def test_table_rewritten_in_place_is_read_again(spark, sf_smoke, tmp_path):
+    """A rewrite of the same file (same inode) with other rows and an
+    added column is what the next load sees."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    region = pq.read_table(os.path.join(sf_smoke, "region.parquet"))
+    path = tmp_path / "region.parquet"
+    pq.write_table(region, path)
+    first = TB.load_table(spark, str(tmp_path), "region")
+    assert first.count() == len(region) > 2
+    inode = path.stat().st_ino
+    pq.write_table(
+        region.slice(0, 2).append_column("extra", pa.array([7, 8], pa.int64())), path
+    )
+    assert path.stat().st_ino == inode
+    again = TB.load_table(spark, str(tmp_path), "region")
+    assert again is not first
+    assert sorted(r.extra for r in again.collect()) == [7, 8]
+
+
+def test_new_part_in_partitioned_table_is_read(spark, sf_smoke, tmp_path):
+    """A part file added under a partitioned table directory, in a new
+    partition or an existing one, is scanned by the next load."""
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table(os.path.join(sf_smoke, "documents.parquet"))
+    d = tmp_path / "documents.parquet"
+    pq.write_to_dataset(docs.slice(0, 3), str(d), partition_cols=["lang"])
+    first = TB.load_table(spark, str(tmp_path), "documents")
+    assert first.count() == 3
+    pq.write_to_dataset(docs.slice(3), str(d), partition_cols=["lang"])
+    again = TB.load_table(spark, str(tmp_path), "documents")
+    assert again is not first and again.count() == len(docs)
+    assert TB.load_table(spark, str(tmp_path), "documents") is again
+
+
+def test_each_session_loads_its_own_frame(spark, sf_dir):
+    """Another session gets a frame of its own, which dies with it."""
+    import gc
+    import weakref
+
+    first = TB.load_table(spark, sf_dir, "region")
+    other = spark.newSession()
+    theirs = TB.load_table(other, sf_dir, "region")
+    assert theirs is not first and theirs.sparkSession is other
+    assert TB.load_table(other, sf_dir, "region") is theirs
+    assert TB.load_table(spark, sf_dir, "region") is first
+    assert theirs.count() == first.count()
+    gone = weakref.ref(theirs)
+    # Each new session patches ``RDD.toDF`` with a closure over itself,
+    # so the newest one stays alive until another replaces it.
+    spark.newSession()
+    del other, theirs
+    gc.collect()
+    assert gone() is None
 
 
 def test_footer_schema_matches_inference_for_corpus_tables(spark, sf_dir):
