@@ -166,7 +166,12 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     8-11 ms). A rewrite in place, an added or removed part, or a path
     that cannot be stat'ed reads the footer and lists the files again.
     The signature is taken before the read, so a table rewritten during
-    a load is read again on the next one."""
+    a load is read again on the next one.
+
+    A registry query served from a prepared plan (``queries.register``)
+    does not call this at all: its plan already holds the relation,
+    checked against the stat of the whole corpus directory. Only a
+    fresh build loads, and so pins ``SESSION_CONFS`` again."""
     ensure_session_confs(spark)
     path = os.path.join(sf_dir, f"{name}.parquet")
     sig = table_signature(path)

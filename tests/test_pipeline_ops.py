@@ -4,6 +4,8 @@ compliance, cascade invariants, ranking monotonicity)."""
 
 from __future__ import annotations
 
+import inspect
+
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
@@ -467,7 +469,9 @@ def test_bm25_memo_skips_unverifiable_corpus(spark, monkeypatch):
     assert QP._corpus_token("/nonexistent/dir/for/sure") is None
     monkeypatch.setattr(QP, "_corpus_token", lambda sf_dir: None)
     sf_dir = "/root/testdata/sf0.001"
-    fn = Q.REGISTRY["bm25_search_topk"].fn
+    # The undecorated build: the registry could serve a prepared plan
+    # without reaching the patched memo.
+    fn = inspect.unwrap(Q.REGISTRY["bm25_search_topk"].fn)
     before = sum(1 for k in QP._BM25_MEMO if k[1] == sf_dir)
     out = fn(spark, sf_dir)
     assert out.count() > 0
@@ -563,7 +567,7 @@ def test_bm25_unverifiable_path_is_fresh_each_call(spark, tmp_path, monkeypatch)
     for f in os.listdir(src):
         shutil.copy(os.path.join(src, f), os.path.join(work, f))
     monkeypatch.setattr(QP, "_corpus_token", lambda sf_dir: None)
-    fn = Q.REGISTRY["bm25_search_topk"].fn
+    fn = inspect.unwrap(Q.REGISTRY["bm25_search_topk"].fn)  # no prepared plan skips the patch
     before = _persisted_rdd_count(spark)
     r1 = {(r.doc_id, r.score) for r in fn(spark, work).collect()}
     assert _persisted_rdd_count(spark) == before, (
