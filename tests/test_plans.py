@@ -7,13 +7,16 @@ a query fails CI, not the 100 TB run."""
 from __future__ import annotations
 
 import contextlib
+import gc
 import inspect
 import io
 import os
 import re
 import shutil
+import threading
 
 import pytest
+from py4j.clientserver import ClientServerConnection
 from pyspark.sql import DataFrame
 
 from realtime_voting_data_engineering_spark import queries as Q
@@ -164,21 +167,12 @@ def test_warm_headline_pass_reuses_compiled_code(spark, sf_smoke):
     assert compiled <= 20, f"warm headline pass compiled {compiled} classes"
 
 
-def test_warm_load_table_makes_only_the_conf_round_trips(spark, sf_dir, monkeypatch):
-    """A warm load of an unchanged table reuses the session's frame: its
-    only py4j round-trips are ``ensure_session_confs``'s; a cold load
-    makes 60-95. Counts this thread's commands
-    only, after a collection, so no other thread's calls and no
-    finalizer of an earlier test's objects land in the window."""
-    import gc
-    import threading
-
-    from py4j.clientserver import ClientServerConnection
-
-    from realtime_voting_data_engineering_spark.session import SESSION_CONFS
-    from realtime_voting_data_engineering_spark.sources.tables import load_table
-
-    load_table(spark, sf_dir, "lineitem")
+@contextlib.contextmanager
+def _py4j_commands(monkeypatch):
+    """The py4j commands this thread sends inside the block. Counts this
+    thread's commands only, after a collection, so no other thread's
+    calls and no finalizer of an earlier test's objects land in the
+    window."""
     gc.collect()
     me, sent = threading.get_ident(), []
     send = ClientServerConnection.send_command
@@ -189,8 +183,22 @@ def test_warm_load_table_makes_only_the_conf_round_trips(spark, sf_dir, monkeypa
         return send(self, command)
 
     monkeypatch.setattr(ClientServerConnection, "send_command", counted)
+    try:
+        yield sent
+    finally:
+        monkeypatch.undo()
+
+
+def test_warm_load_table_makes_only_the_conf_round_trips(spark, sf_dir, monkeypatch):
+    """A warm load of an unchanged table reuses the session's frame: its
+    only py4j round-trips are ``ensure_session_confs``'s; a cold load
+    makes 60-95."""
+    from realtime_voting_data_engineering_spark.session import SESSION_CONFS
+    from realtime_voting_data_engineering_spark.sources.tables import load_table
+
     load_table(spark, sf_dir, "lineitem")
-    monkeypatch.undo()
+    with _py4j_commands(monkeypatch) as sent:
+        load_table(spark, sf_dir, "lineitem")
     assert len(sent) <= len(SESSION_CONFS), sent
 
 
@@ -265,30 +273,14 @@ def test_prepared_queries_start_no_job_and_read_only_the_corpus(spark, sf_smoke,
 def test_warm_prepared_build_makes_three_round_trips(spark, sf_dir, monkeypatch):
     """A warm build of a prepared headline query reads the session's
     SQL confs (two round-trips) and wraps the analysed plan in a new
-    Dataset (one); a fresh build makes 70-800. Counted as in
-    ``test_warm_load_table_makes_only_the_conf_round_trips``."""
-    import gc
-    import threading
-
-    from py4j.clientserver import ClientServerConnection
-
+    Dataset (one); a fresh build makes 70-800."""
     fns = [Q.REGISTRY[n].fn for n in sorted(PREPARED_HEADLINE)]
     for fn in fns:
         fn(spark, sf_dir)
         fn(spark, sf_dir)
-    gc.collect()
-    me, sent = threading.get_ident(), []
-    send = ClientServerConnection.send_command
-
-    def counted(self, command):
-        if threading.get_ident() == me:
-            sent.append(command)
-        return send(self, command)
-
-    monkeypatch.setattr(ClientServerConnection, "send_command", counted)
-    for fn in fns:
-        fn(spark, sf_dir)
-    monkeypatch.undo()
+    with _py4j_commands(monkeypatch) as sent:
+        for fn in fns:
+            fn(spark, sf_dir)
     assert len(sent) <= 3 * len(fns), sent
 
 
